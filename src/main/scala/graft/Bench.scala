@@ -196,10 +196,12 @@ object Bench {
     val lost = if (lostSamples.isEmpty) ""
       else s""","lost_samples":${obj(lostSamples.map { case (n, k) =>
         n -> k.toString })}"""
-    // unique leading token (q133_graph_triangles -> q133); headline names
-    // are chosen so these never collide
-    val qmin = obj(mins.map { case (n, v) =>
-      n.takeWhile(_ != '_') -> f"$v%.3f" })
+    // unique leading token (q133_graph_triangles -> q133); two headline
+    // names sharing one would silently overwrite each other's min
+    val qminKeys = mins.map { case (n, _) => n.takeWhile(_ != '_') }
+    require(qminKeys.distinct.size == qminKeys.size,
+      s"headline queries share a qmin key: ${qminKeys.diff(qminKeys.distinct).mkString(",")}")
+    val qmin = obj(qminKeys.zip(mins).map { case (k, (_, v)) => k -> f"$v%.3f" })
     val loadPost = loadavg1()
     val load = f""","load":[$loadPre%.2f,$loadPost%.2f]"""
     println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","nq":${ok.size},"nerr":${failed.size},"med":3$lost$load,"qmin":$qmin,"queries":$qsShort,"errors":$errShort,"sf":"$sfDir"}""")

@@ -6,9 +6,9 @@ import org.apache.spark.sql.types._
 
 /** The reference's single record type (TripEvent.avsc:1-93): 20 required
   * fields, flat, no nulls in the at-rest model. The case class is the typed
-  * API surface; the StructType drives `from_json` (all fields nullable there
-  * so the codec can detect and police missing fields itself — reference
-  * behavior per TripEventSchema.java:49-83).
+  * API surface; the StructType drives [[TripEventDecode]], which polices
+  * missing and null fields itself (reference behavior per
+  * TripEventSchema.java:49-83).
   */
 case class TripEvent(
   vendor_id: Int,
@@ -34,8 +34,8 @@ case class TripEvent(
 
 object TripEvent {
 
-  /** Input-side schema: ISO-8601 timestamp text → TimestampType via
-    * from_json (quirk §1.3-1). */
+  /** Input-side schema: ISO-8601 timestamp text → TimestampType (quirk
+    * §1.3-1). */
   val inputSchema: StructType = StructType(Seq(
     StructField("vendor_id", IntegerType),
     StructField("pickup_datetime", TimestampType),

@@ -2,10 +2,9 @@ package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 
-/** The reference's JSON codec asymmetries (SURVEY §1.3) as declarative
-  * column transforms. This is the core parity spec:
+/** The reference's JSON codec (TripEventSchema.java) on DataFrames, with
+  * its asymmetries (SURVEY §1.3):
   *
   *  1. input timestamps are ISO-8601 *text*; output writes epoch-millis
   *     *numbers* (TripEventSchema.java:58-59 vs :102-104);
@@ -13,118 +12,29 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   *     (toJson, TripEventSchema.java:96-138);
   *  3. `trip_id` is parsed as long but serialized as a JSON *string*
   *     (:74 vs :132,153-162); `type`/`store_and_fwd_flag` quoted, numerics
-  *     unquoted;
-  *  4. malformed input → dropped, never fails the stream (:78-82, :86-88);
-  *  5. ABSENT fields drop the event — every getter except `padding`'s is a
-  *     bare `node.get(f)` that NPEs on a missing key (:56-76), *including*
-  *     `trip_id` (`asLong(0)` only defaults a PRESENT value); absent
-  *     `padding` → "" (:53,76);
-  *  6. PRESENT-but-null/mistyped values coerce instead of dropping,
-  *     mirroring Jackson: numerics null/non-numeric → 0 (`asInt`/`asLong`/
-  *     `asDouble`), text null → the literal string "null" (`NullNode
-  *     .asText`), numeric text fields keep their digits;
-  *  7. timestamps parse leniently (Joda `new DateTime(text)`): offset or no
-  *     offset (→ local zone), any fraction length, date-only — but ONLY the
-  *     ISO family ('T' separator); Spark's timestamp cast is guarded by an
-  *     ISO shape check because it would also accept forms Joda throws on
-  *     (space-separated). An unparseable value (e.g. the epoch *numbers*
-  *     the serializer emits) drops the event.
+  *     unquoted.
+  *
+  * The input-side quirks — malformed lines dropped, absent fields dropping
+  * the event, present nulls and mistyped values coerced like Jackson's
+  * getters, lenient ISO timestamps — live in the [[TripEventDecode]] kernel.
   */
 object TripEventCodec {
 
-  /** Every field decoded as raw text first (numbers/booleans keep their
-    * JSON literal form, nulls stay null) so quirks 5–7 can be applied
-    * field-by-field exactly as the reference's per-getter coercion does. */
-  private val textSchema = StructType(
-    TripEvent.inputSchema.fieldNames.map(f => StructField(f, StringType)))
+  private def decode(df: DataFrame, jsonCol: Column, strict: Boolean): DataFrame = {
+    TripEventDecode.register(df.sparkSession)
+    df.select(call_function(TripEventDecode.name, jsonCol, lit(strict)))
+  }
 
-  private def decoded(jsonCol: Column): Column =
-    from_json(jsonCol, textSchema, Map("mode" -> "PERMISSIVE"))
-
-  /** Joda-parity timestamp parse: `new DateTime(text)` accepts only the ISO
-    * family — date-only or 'T'-separated, never space-separated — while
-    * Spark's timestamp cast is more lenient; the shape guard rejects the
-    * forms Joda throws on so the drop set matches the reference's. */
-  private def tsParsed(s: Column): Column =
-    when(s.rlike("^[0-9]{4}-[0-9]{2}-[0-9]{2}(T.*)?$"), try_to_timestamp(s))
-
-  /** Jackson parity for JSON booleans in numeric fields: BooleanNode's
-    * asInt/asLong/asDouble return 1/0, while a bare try_cast of the decoded
-    * literal text would give null → 0. The text decode cannot distinguish
-    * JSON `true` from the JSON *string* `"true"` (Jackson: TextNode "true"
-    * → 0); that quoted-boolean corner coerces to 1 here — accepted, since
-    * the wire format never carries quoted booleans. */
-  private def boolsAsNumbers(s: Column): Column =
-    when(s === "true", lit("1")).when(s === "false", lit("0")).otherwise(s)
-
-  /** Quirk 5 drop side: reference getters NPE on any absent key but
-    * `padding` (TripEvent.requiredFields); Joda throws on unparseable
-    * timestamp text.
-    *
-    * Absent and present-null both decode to SQL null, so telling them apart
-    * needs the key set — a second JSON parse. The all-fields-non-null
-    * fast path short-circuits it (Or codegen skips the right side), so
-    * well-formed records pay exactly one parse; only records with some null
-    * field re-parse for the absent-vs-null distinction. */
-  private def complete(e: Column, raw: Column): Column =
-    e.isNotNull &&
-      (TripEvent.requiredFields.map(f => e.getField(f).isNotNull).reduce(_ && _) ||
-        TripEvent.requiredFields.map(f => array_contains(json_object_keys(raw), f))
-          .reduce(_ && _)) &&
-      tsParsed(e.getField("pickup_datetime")).isNotNull &&
-      tsParsed(e.getField("dropoff_datetime")).isNotNull
-
-  /** Quirk 6 coercion side: Jackson's asInt/asLong/asDouble return 0 for
-    * present null or non-numeric values (numeric strings parse; fractional
-    * text truncates toward zero); asText renders NullNode as "null";
-    * BooleanNode true/false coerces to 1/0 ([[boolsAsNumbers]]). */
-  private def flattened: Seq[Column] =
-    TripEvent.inputSchema.fields.toSeq.map { f =>
-      val s = col(s"e.${f.name}")
-      (f.name, f.dataType) match {
-        case ("padding", _) =>
-          // absent → "" (the one null-checked getter, :53,76); present
-          // null → "null" like every other asText. The keys re-parse only
-          // runs for rows where padding decoded to null.
-          when(s.isNotNull, s)
-            .otherwise(when(array_contains(json_object_keys(col("_raw")), "padding"),
-              lit("null")).otherwise(lit(""))).as(f.name)
-        case (_, StringType) => coalesce(s, lit("null")).as(f.name)
-        case (_, IntegerType) =>
-          coalesce(boolsAsNumbers(s).try_cast(DoubleType).try_cast(IntegerType),
-            lit(0)).as(f.name)
-        case (_, LongType) =>
-          coalesce(boolsAsNumbers(s).try_cast(LongType),
-            boolsAsNumbers(s).try_cast(DoubleType).try_cast(LongType),
-            lit(0L)).as(f.name)
-        case (_, DoubleType) =>
-          coalesce(boolsAsNumbers(s).try_cast(DoubleType), lit(0.0)).as(f.name)
-        case (_, TimestampType) => tsParsed(s).as(f.name)
-        case (_, other) => throw new IllegalStateException(s"unhandled $other")
-      }
-    }
-
-  /** Parse a column of raw JSON bytes/text into TripEvent rows, applying
-    * quirks 1/4/5/6/7. Input: any DataFrame with `jsonCol`; output: one
-    * column per TripEvent field, malformed/incomplete rows dropped.
-    */
-  def parse(df: DataFrame, jsonCol: Column): DataFrame =
-    df.select(jsonCol.as("_raw"), decoded(jsonCol).as("e"))
-      .filter(complete(col("e"), col("_raw"))) // quirk 4: drop, never fail
-      .select(flattened: _*)
+  /** Parse a column of JSON text into TripEvent rows, one column per
+    * TripEvent field; malformed or incomplete lines are dropped, never
+    * failed (the reference's behaviour, TripEventSchema.java:78-88). */
+  def parse(df: DataFrame, jsonCol: Column): DataFrame = decode(df, jsonCol, strict = false)
 
   /** Strict variant: malformed or incomplete records FAIL the job instead
     * of being dropped (for pipelines that must not lose data silently —
-    * the reference never fails, quirk 4, so [[parse]] is the parity path).
+    * the reference never fails, so [[parse]] is the parity path).
     */
-  def parseStrict(df: DataFrame, jsonCol: Column): DataFrame =
-    df.select(jsonCol.as("_raw"), decoded(jsonCol).as("e"))
-      .select(
-        when(complete(col("e"), col("_raw")), col("e"))
-          .otherwise(raise_error(concat(lit("malformed TripEvent: "), col("_raw"))))
-          .as("e"),
-        col("_raw"))
-      .select(flattened: _*)
+  def parseStrict(df: DataFrame, jsonCol: Column): DataFrame = decode(df, jsonCol, strict = true)
 
   /** The serialized-output column set (quirks 1–3) — reusable for both the
     * JSON row sink (via to_json) and the Parquet sink's 18-field projection.

@@ -57,10 +57,12 @@ object ShardedQueueSource {
     queues.getOrElse(queue, mutable.Map.empty).map { case (s, b) => s -> b.length.toLong }.toMap
   }
 
+  /** One copy of the records in [from, until), indexable in O(1) — the
+    * reader walks it by position. */
   private[sources] def slice(queue: String, shard: Int, from: Long,
-                             until: Long): Seq[(String, String)] = synchronized {
+                             until: Long): IndexedSeq[(String, String)] = synchronized {
     queues.get(queue).flatMap(_.get(shard))
-      .map(_.slice(from.toInt, until.toInt).toSeq).getOrElse(Seq.empty)
+      .map(_.view.slice(from.toInt, until.toInt).toIndexedSeq).getOrElse(IndexedSeq.empty)
   }
 }
 

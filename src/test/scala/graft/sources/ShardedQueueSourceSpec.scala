@@ -92,6 +92,32 @@ class ShardedQueueSourceSpec extends SparkSpec {
     assert(batches >= 4, s"only $batches batches") // ...paced across batches
   }
 
+  test("one 200k-record shard reads in a single micro-batch, in sequence order") {
+    // the reader indexes its slice by position: on a linear-access Seq
+    // each batch costs O(n^2) and this drain would not finish
+    val q = "t-big-shard"
+    ShardedQueueSource.clear(q)
+    val n = 200000
+    (0 until n).foreach(i => ShardedQueueSource.append(q, "k", s"v$i", numShards = 1))
+    @volatile var batches = 0
+    @volatile var read: Array[(Long, String)] = Array.empty
+    val sq = spark.readStream.format("graft.sources.ShardedQueueSource")
+      .option("queue", q).load()
+      .writeStream.option("checkpointLocation", tmpDir("qb-ckpt"))
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        batches += 1
+        read = df.select("seq", "value").as[(Long, String)].collect()
+      }
+      .start()
+    val finished = try sq.awaitTermination(120000)
+      finally { sq.stop(); ShardedQueueSource.clear(q) }
+    assert(finished, "drain did not finish")
+    assert(batches == 1)
+    assert(read.length == n)
+    assert(read.indices.forall(i => read(i) == ((i.toLong, s"v$i"))))
+  }
+
   test("ETL pipeline runs end-to-end off the DSv2 queue source (A1 seam)") {
     val q = "t-etl"
     ShardedQueueSource.clear(q)
