@@ -6,8 +6,8 @@ import org.apache.spark.sql.types._
 
 /** The reference's single record type (TripEvent.avsc:1-93): 20 required
   * fields, flat, no nulls in the at-rest model. The case class is the typed
-  * API surface; the StructType drives [[TripEventDecode]], which polices
-  * missing and null fields itself (reference behavior per
+  * API surface; the StructType drives [[graft.plans.TripEventDecode]],
+  * which polices missing and null fields itself (reference behavior per
   * TripEventSchema.java:49-83).
   */
 case class TripEvent(

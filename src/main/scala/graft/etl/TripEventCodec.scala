@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.plans.{GraftFunctions, TripEventDecode}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -16,12 +17,13 @@ import org.apache.spark.sql.functions._
   *
   * The input-side quirks — malformed lines dropped, absent fields dropping
   * the event, present nulls and mistyped values coerced like Jackson's
-  * getters, lenient ISO timestamps — live in the [[TripEventDecode]] kernel.
+  * getters, lenient ISO timestamps — live in the
+  * [[graft.plans.TripEventDecode]] kernel.
   */
 object TripEventCodec {
 
   private def decode(df: DataFrame, jsonCol: Column, strict: Boolean): DataFrame = {
-    TripEventDecode.register(df.sparkSession)
+    GraftFunctions.ensureRegistered(df.sparkSession)
     df.select(call_function(TripEventDecode.name, jsonCol, lit(strict)))
   }
 

@@ -16,6 +16,11 @@ object GraftFunctions {
     case _ => throw new IllegalArgumentException(s"$fn: $name must be an integer literal")
   }
 
+  private def boolLit(e: Expression, fn: String, name: String): Boolean = e match {
+    case Literal(v: Boolean, _) => v
+    case _ => throw new IllegalArgumentException(s"$fn: $name must be a boolean literal")
+  }
+
   /** name → (implementing class, arity, builder). */
   val all: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = Seq(
     ("cosine_similarity", classOf[CosineSimilarity], 2,
@@ -97,7 +102,10 @@ object GraftFunctions {
     ("nfc_normalize", classOf[NfcNormalize], 1,
       (c: Seq[Expression]) => NfcNormalize(c(0))),
     ("strip_accents", classOf[StripAccents], 1,
-      (c: Seq[Expression]) => StripAccents(c(0))))
+      (c: Seq[Expression]) => StripAccents(c(0))),
+    (TripEventDecode.name, classOf[TripEventDecode], 2,
+      (c: Seq[Expression]) => TripEventDecode(c(0),
+        boolLit(c(1), TripEventDecode.name, "strict"))))
 
   /** Idempotently register every graft function into a live session (no-op
     * when GraftExtensions already injected them). */

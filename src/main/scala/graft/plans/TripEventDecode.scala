@@ -1,34 +1,33 @@
-package graft.etl
+package graft.plans
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStreamReader}
-import java.nio.charset.StandardCharsets
+import java.io.ByteArrayOutputStream
 import java.util.regex.Pattern
 
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.core.{JsonEncoding, JsonFactory, JsonParser, JsonToken}
 import com.fasterxml.jackson.core.JsonParser.NumberType
+import graft.etl.TripEvent
 import org.apache.spark.SparkException
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression, ExpressionInfo, Generator, GenericInternalRow, JsonObjectKeys, Literal, RuntimeReplaceable, TimeZoneAwareExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression, Generator, GenericInternalRow, JsonObjectKeys, RuntimeReplaceable, TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.json.JSONOptions
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions}
 import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.catalyst.trees.TreePattern.TreePattern
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Kernel for [[TripEventCodec.parse]]: one streaming Jackson pass per line
+/** Kernel for [[graft.etl.TripEventCodec.parse]]: one streaming Jackson pass per line
   * decodes a TripEvent with the reference's getter quirks (SURVEY §1.3):
   *
   *  1. timestamps are ISO-8601 text, parsed leniently (Joda `new
   *     DateTime(text)`): offset or none (→ session zone), any fraction
-  *     length, date-only — but only the ISO family ('T' separator). The
-  *     [[TripEventDecoder.isoShape]] guard rejects the forms Spark's
-  *     timestamp parser would also accept (space-separated); an
+  *     length, date-only — but only the ISO family ('T' separator). An
+  *     ISO shape guard rejects the forms Spark's timestamp parser would
+  *     also accept (space-separated); an
   *     unparseable value, or the epoch numbers the serializer emits, drops
   *     the event;
   *  2. malformed input drops the event, never fails the stream (`parse`);
@@ -44,8 +43,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The decode is bit-identical to the all-built-in formulation it replaced
   * (`from_json` of every field as text, `try_cast` back, `json_object_keys`
-  * to tell absent from null — kept as the test oracle): the parser is built
-  * from the same `JSONOptions` (single quotes and NaN tokens allowed), a
+  * to tell absent from null — kept as the test oracle): the line is read
+  * the way `from_json` reads it, through `CreateJacksonParser.utf8String`
+  * (a UTF-8 Reader, so malformed bytes become U+FFFD) with a parser from
+  * the same `JSONOptions` (single quotes and NaN tokens allowed), a
   * field's "text" is what `from_json` would produce for it, and the rare
   * coercions go through Spark's own TRY-mode `Cast` and
   * `DateTimeUtils.stringToTimestamp`. The common case never builds the text:
@@ -56,7 +57,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * through Spark's `json_object_keys`, because that (stricter) parse decides
   * whether the key counts as present.
   */
-private[etl] final class TripEventDecoder(timeZoneId: String, strict: Boolean) {
+private[plans] final class TripEventDecoder(timeZoneId: String, strict: Boolean) {
   import TripEventDecoder._
 
   private val zone = DateTimeUtils.getZoneId(timeZoneId)
@@ -83,27 +84,8 @@ private[etl] final class TripEventDecoder(timeZoneId: String, strict: Boolean) {
   /** One decoded row, or null when the reference would drop the line. */
   def decode(raw: UTF8String): InternalRow = {
     val row = if (raw == null) null else {
-      val bb = raw.getByteBuffer
-      val bytes = bb.array()
-      val off = bb.arrayOffset() + bb.position()
-      val len = bb.remaining()
-      // Spark reads the line through a UTF-8 Reader; Jackson's byte parser
-      // only matches it when it does not sniff another encoding or a BOM
-      // from the first four bytes, and when no malformed byte is decoded
-      // (it throws where the Reader substitutes U+FFFD) — so any failure on
-      // the fast path is settled by the Reader path.
-      var plainHead = true
-      var i = 0
-      while (i < 4 && i < len) { plainHead &&= bytes(off + i) > 0; i += 1 }
-      val fast = if (plainHead) {
-        try decodeWith(factory.createParser(bytes, off, len), raw)
-        catch { case NonFatal(_) => Retry }
-      } else Retry
-      if (fast ne Retry) fast
-      else try {
-        decodeWith(factory.createParser(new InputStreamReader(
-          new ByteArrayInputStream(bytes, off, len), StandardCharsets.UTF_8)), raw)
-      } catch { case NonFatal(_) => null }
+      try decodeWith(CreateJacksonParser.utf8String(factory, raw), raw)
+      catch { case NonFatal(_) => null }
     }
     if (row == null && strict) {
       throw new SparkException(s"malformed TripEvent: $raw")
@@ -209,15 +191,17 @@ private[etl] final class TripEventDecoder(timeZoneId: String, strict: Boolean) {
     if (v == null) Defaults(kind) else v
   }
 
+  /** Joda-parity timestamp parse: ISO family only, never space-separated
+    * (`rlike` of [[IsoShape]], as the test oracle states it). */
   private def timestamp(s: UTF8String): Any =
-    if (!isoShape(s)) null
+    if (!IsoShape.matcher(s.toString).find(0)) null
     else DateTimeUtils.stringToTimestamp(s, zone) match {
       case Some(micros) => micros
       case None => null
     }
 }
 
-private[etl] object TripEventDecoder {
+private[plans] object TripEventDecoder {
   private val Names = TripEvent.inputSchema.fieldNames
   private val StringKind = 0
   private val IntKind = 1
@@ -245,36 +229,13 @@ private[etl] object TripEventDecoder {
   private val False = UTF8String.fromString("false")
   private val One = UTF8String.fromString("1")
   private val Zero = UTF8String.fromString("0")
-  private val Retry = new GenericInternalRow(0)
 
-  private val IsoRegex = Pattern.compile("^[0-9]{4}-[0-9]{2}-[0-9]{2}(T.*)?$")
-
-  /** `rlike '^[0-9]{4}-[0-9]{2}-[0-9]{2}(T.*)?$'`. Plain ASCII without line
-    * terminators is decided by the byte shape; anything else (where `.` and
-    * `$` treat terminators specially) runs the regex itself. */
-  def isoShape(s: UTF8String): Boolean = {
-    val n = s.numBytes
-    var plain = true
-    var i = 10
-    while (i < n && plain) {
-      val b = s.getByte(i)
-      plain = b > 0 && b != '\n' && b != '\r'
-      i += 1
-    }
-    if (!plain) IsoRegex.matcher(s.toString).find(0)
-    else n >= 10 && digits(s, 0, 4) && s.getByte(4) == '-' && digits(s, 5, 7) &&
-      s.getByte(7) == '-' && digits(s, 8, 10) && (n == 10 || s.getByte(10) == 'T')
-  }
-
-  private def digits(s: UTF8String, from: Int, until: Int): Boolean = {
-    var j = from
-    while (j < until && s.getByte(j) >= '0' && s.getByte(j) <= '9') j += 1
-    j == until
-  }
+  private val IsoShape = Pattern.compile("^[0-9]{4}-[0-9]{2}-[0-9]{2}(T.*)?$")
 }
 
 /** trip_event_decode(json string, strict boolean literal): the TripEvent
   * generator — 0 or 1 rows per line, or (strict) 1 row or a job failure.
+  * Registered with the rest of the graft kernels in [[GraftFunctions]].
   *
   * A generator rather than a struct-valued expression plus `isnotnull`
   * filter: PushPredicateThroughNonJoin moves such a filter below the
@@ -320,18 +281,4 @@ object TripEventDecode {
     f.copy(nullable = Set("pickup_datetime", "dropoff_datetime", "padding")(f.name))
   })
 
-  /** Idempotently make the generator callable in `spark` (by name, so the
-    * Dataset API can reach it through `call_function`). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(id, new ExpressionInfo(classOf[TripEventDecode].getName, name),
-        {
-          case Seq(json, Literal(strict: Boolean, BooleanType)) => TripEventDecode(json, strict)
-          case _ => throw new IllegalArgumentException(
-            s"$name expects (json string, strict boolean literal)")
-        })
-    }
-  }
 }

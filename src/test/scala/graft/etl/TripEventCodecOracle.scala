@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 
 /** The codec's former all-Catalyst formulation, kept as the differential
-  * oracle for [[TripEventDecode]]: every field decoded as text by
-  * `from_json`, the reference's per-getter coercions applied with `try_cast`,
-  * and `json_object_keys` re-parsing a line to tell an absent field from a
-  * present null. Slow (the decode runs once per referencing column after
-  * filter pushdown) but made only of built-ins, so it is an independent
-  * statement of the quirks the kernel implements. */
+  * oracle for [[graft.plans.TripEventDecode]]: every field decoded as text
+  * by `from_json`, the reference's per-getter coercions applied with
+  * `try_cast`, and `json_object_keys` re-parsing a line to tell an absent
+  * field from a present null. Slow (the decode runs once per referencing
+  * column after filter pushdown) but made only of built-ins, so it is an
+  * independent statement of the quirks the kernel implements. */
 object TripEventCodecOracle {
 
   private val textSchema = StructType(

@@ -3,6 +3,7 @@ package graft.etl
 import java.util.SplittableRandom
 
 import graft.SparkSpec
+import graft.plans.TripEventDecode
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -102,13 +103,22 @@ class TripEventDecodeSpec extends SparkSpec {
   private lazy val invalidUtf8: Seq[String] = {
     def hex(s: String) = s.getBytes("UTF-8").map("%02X".format(_)).mkString
     val cut = hex(valid.replace("\"trip\"", "\"tr"))
+    val typeKey = valid.splitAt(valid.indexOf("\"type\"") + 1)
     Seq(
       cut + "FF" + hex("ip\"}"),
       cut + "C3" + hex("ip\"}"),
       hex(valid.dropRight(1) + ", \"zz\": \"") + "FE" + hex("\"}"),
       "EFBBBF" + hex(valid),
       "00" + hex(valid),
-      hex(valid.dropRight(1) + ", \"pad") + "E9" + hex("ding\": null}"))
+      hex(valid.dropRight(1) + ", \"pad") + "E9" + hex("ding\": null}"),
+      // sequences Jackson's byte parser decodes without complaint but the
+      // UTF-8 Reader replaces with U+FFFD: overlong forms (C0 80 is NUL,
+      // C1 B4 is 't' — here spelling the key "type"), a CESU-8 surrogate
+      // and a code point above U+10FFFF
+      cut + "C080" + hex("ip\"}"),
+      hex(typeKey._1) + "C1B4" + hex(typeKey._2.drop(1)),
+      cut + "EDA080" + hex("ip\"}"),
+      cut + "F4908080" + hex("ip\"}"))
   }
 
   private def fromHex(hexes: Seq[String]): DataFrame =
