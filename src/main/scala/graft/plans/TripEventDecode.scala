@@ -20,16 +20,16 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Kernel for [[graft.etl.TripEventCodec.parse]]: one streaming Jackson pass per line
-  * decodes a TripEvent with the reference's getter quirks (SURVEY §1.3):
+/** Kernel for [[graft.etl.TripEventCodec.parse]]: one streaming Jackson
+  * pass per line decodes a TripEvent with the reference's getter quirks
+  * (SURVEY §1.3):
   *
   *  1. timestamps are ISO-8601 text, parsed leniently (Joda `new
   *     DateTime(text)`): offset or none (→ session zone), any fraction
   *     length, date-only — but only the ISO family ('T' separator). An
   *     ISO shape guard rejects the forms Spark's timestamp parser would
-  *     also accept (space-separated); an
-  *     unparseable value, or the epoch numbers the serializer emits, drops
-  *     the event;
+  *     also accept (space-separated); an unparseable value, or the epoch
+  *     numbers the serializer emits, drops the event;
   *  2. malformed input drops the event, never fails the stream (`parse`);
   *     `parseStrict` fails the job instead;
   *  3. an ABSENT field drops the event — every getter but `padding`'s is a
