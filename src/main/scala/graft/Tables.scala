@@ -25,25 +25,17 @@ object Tables {
 
   // Plan-level memoization: re-building the reader per query re-lists files
   // and re-reads parquet footers; the relation (schema + file index) is
-  // immutable for a given (session, path), so share it. Weak on the session
-  // key so stopped sessions are collectable. NOT a data cache — scans still
-  // read from disk.
-  private val relationCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(String, String), DataFrame]]()
+  // immutable for a given (session, path), so share it. NOT a data cache —
+  // scans still read from disk. Each DataFrame holds its session, so the
+  // weak session key never frees these entries: they live as long as the
+  // JVM, which holds one session per runner (see SessionMemo).
+  private val relations = new graft.operators.SessionMemo[DataFrame]
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     // self-heal: queries must work even on a session built without
     // spark.sql.extensions=GraftExtensions (idempotent, cheap)
     graft.plans.GraftFunctions.ensureRegistered(spark)
-    val perSession = relationCache.synchronized {
-      var m = relationCache.get(spark)
-      if (m == null) { m = scala.collection.mutable.Map.empty; relationCache.put(spark, m) }
-      m
-    }
-    perSession.synchronized {
-      perSession.getOrElseUpdate((dir, name), build(spark, dir, name))
-    }
+    relations(spark, s"$dir/$name.parquet")(build(spark, dir, name))
   }
 
   private def build(spark: SparkSession, dir: String, name: String): DataFrame = {

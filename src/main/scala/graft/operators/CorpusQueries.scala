@@ -428,10 +428,9 @@ object CorpusQueries extends QueryGroup {
   // calibration, confusion, AUC, operating point, conformal, gains,
   // isotonic, McNemar), previously re-trained and re-scored per query.
   // Resolved ONCE per (session, testdata dir) and materialized to a
-  // session-scoped temp parquet they all scan — the assignComponentsMemo
-  // pattern: a RunScopedCache persist cannot span independent declared
-  // queries (each consumer's own actions would release it), so the memo
-  // is a derived TABLE. That is also the production shape: at 100 TB the
+  // session-scoped temp parquet they all scan: a RunScopedCache persist
+  // cannot span independent declared queries (each consumer's own
+  // actions would release it), so the memo is a derived TABLE. That is also the production shape: at 100 TB the
   // scored corpus IS the stored artifact of the quality-filter stage —
   // trained and scored once, consumed by every eval/calibration/selection
   // readout, never refit per report. Rows are identical to a fresh
@@ -439,34 +438,20 @@ object CorpusQueries extends QueryGroup {
   // md5 train split — the consumers' DuckDB oracles recompute end-to-end
   // from raw documents and still hash-match; ClassifierSpec pins the
   // operator itself).
-  private val clsScoresMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, String]]()
+  private val clsScoresMemo = new SessionMemo[String]
 
   private[operators] def classifierScoresMemo(
       s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val perSession = clsScoresMemo.synchronized {
-      var m = clsScoresMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        clsScoresMemo.put(s, m)
-      }
-      m
-    }
-    val path = perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val p = TempDirs.scoped("graft-classifier-scores")
-        // the write IS the run-scoped action that releases the internal
-        // cached feature projection registered by classifierScores
-        CorpusOps.classifierScores(Tables.documents(s, d), "doc_id",
-            col("lang") === "en", 4096)
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(clsScoresMemo(s, d) {
+      val p = TempDirs.scoped("graft-classifier-scores")
+      // the write IS the run-scoped action that releases the internal
+      // cached feature projection registered by classifierScores
+      CorpusOps.classifierScores(Tables.documents(s, d), "doc_id",
+          col("lang") === "en", 4096)
+        .write.mode("overwrite").parquet(p)
+      p
+    })
 
   /** Q126: classifier-based quality filtering —
     * [[CorpusOps.classifierScores]] with the `lang = 'en'` slice as the
@@ -1749,10 +1734,8 @@ object CorpusQueries extends QueryGroup {
   // --- q194: time travel over the WAP lake ------------------------------
 
   // one WAP lake per (session, sfDir), built once and reused across the
-  // declared query's runs (the GraphQueries co-purchase memo pattern)
-  private val wapMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, String]]()
+  // runs of every query that reads it (q194, q239, q262)
+  private val wapMemo = new SessionMemo[String]
 
   /** Builds the deterministic WAP lake q194 reads: batches b0/b1/b2 slice
     * the documents on doc_id mod 3 (b1 carries injected QC defects on the
@@ -1763,39 +1746,26 @@ object CorpusQueries extends QueryGroup {
     * DRIVER gate too, not just locally. Publish log: b0→seq 1, b2→seq 2,
     * b3→seq 3; b1 never appears. */
   private[operators] def asOfLakeDir(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val perSession = wapMemo.synchronized {
-      var m = wapMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        wapMemo.put(s, m)
-      }
-      m
+      d: String): String =
+    wapMemo(s, d) {
+      val dir = TempDirs.scoped("graft-wap-asof")
+      val docs = Tables.documents(s, d).filter(col("text").isNotNull)
+        .select(col("doc_id"), col("source"), col("text"))
+      val rules = Seq(LakeAudit.Rule("qc_flag_true", col("qc_flag")))
+      def slice(k: Int) = docs.filter(col("doc_id") % 3 === k)
+      val b0 = slice(0).withColumn("qc_flag", lit(true))
+      val b1 = slice(1).withColumn("qc_flag", col("doc_id") % 5 =!= 0)
+      val b2 = slice(2).withColumn("qc_flag", lit(true))
+      val b3 = docs.filter(col("doc_id") % 7 === 0)
+        .withColumn("text", concat(col("text"), lit(" rev")))
+        .withColumn("qc_flag", lit(true))
+      // publish log: b0→1, b1 quarantined, b2→2, b3→3
+      Seq("b0" -> b0, "b1" -> b1, "b2" -> b2, "b3" -> b3).foreach {
+        case (id, df) => LakeAudit.writeAuditPublish(s, df, dir, id, rules) }
+      // a LATER compaction must not change any as-of snapshot
+      graft.etl.LakeCompaction.compact(s, s"$dir/data", 64L << 20)
+      dir
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val dir = TempDirs.scoped("graft-wap-asof")
-        val docs = Tables.documents(s, d).filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-        val rules = Seq(LakeAudit.Rule("qc_flag_true", col("qc_flag")))
-        def slice(k: Int) = docs.filter(col("doc_id") % 3 === k)
-        val b0 = slice(0).withColumn("qc_flag", lit(true))
-        val b1 = slice(1).withColumn("qc_flag", col("doc_id") % 5 =!= 0)
-        val b2 = slice(2).withColumn("qc_flag", lit(true))
-        val b3 = docs.filter(col("doc_id") % 7 === 0)
-          .withColumn("text", concat(col("text"), lit(" rev")))
-          .withColumn("qc_flag", lit(true))
-        // pipelined: stage+audit of the four batches overlap, commits land
-        // in list order — log identical to four sequential publishes
-        // (b0→1, b1 quarantined, b2→2, b3→3)
-        LakeAudit.writeAuditPublishPipelined(s, dir,
-          Seq("b0" -> b0, "b1" -> b1, "b2" -> b2, "b3" -> b3), rules)
-        // a LATER compaction must not change any as-of snapshot
-        graft.etl.LakeCompaction.compact(s, s"$dir/data", 64L << 20)
-        dir
-      })
-    }
-  }
 
   /** Q194: `readAsOf(publishSeq)` — the reproducibility primitive of a
     * dataset release ("train on exactly the corpus as of publish N"):
@@ -1882,48 +1852,33 @@ object CorpusQueries extends QueryGroup {
   // (seq 3, receipt retained under erasures/), then the b3 revision batch
   // (seq 4) which re-publishes the ≡0-mod-7 residue — so every diff class
   // incl. `removed` and erase-then-republish occurs naturally.
-  private val diffMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, String]]()
+  private val diffMemo = new SessionMemo[String]
 
   private[operators] def diffLakeDir(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val perSession = diffMemo.synchronized {
-      var m = diffMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        diffMemo.put(s, m)
-      }
-      m
+      d: String): String =
+    diffMemo(s, d) {
+      val dir = TempDirs.scoped("graft-wap-diff")
+      val docs = Tables.documents(s, d).filter(col("text").isNotNull)
+        .select(col("doc_id"), col("source"), col("text"))
+      val rules = Seq(LakeAudit.Rule("doc_id_not_null",
+        col("doc_id").isNotNull))
+      LakeAudit.writeAuditPublish(s, docs.filter(col("doc_id") % 3 === 0),
+        dir, "b0", rules)
+      LakeAudit.writeAuditPublish(s, docs.filter(col("doc_id") % 3 === 2),
+        dir, "b2", rules)
+      // the GDPR batch: published docs with doc_id ≡ 4 (mod 11) —
+      // driver-sized (the LakeDeletes deletion-list shape)
+      val ids = docs
+        .filter((col("doc_id") % 3 === 0 || col("doc_id") % 3 === 2) &&
+          col("doc_id") % 11 === 4)
+        .select("doc_id").collect().map(_.getLong(0)).toSeq
+      LakeAudit.eraseLogged(s, dir, "e0", ids, "doc_id", Seq("source"))
+      LakeAudit.writeAuditPublish(s,
+        docs.filter(col("doc_id") % 7 === 0)
+          .withColumn("text", concat(col("text"), lit(" rev"))),
+        dir, "b3", rules)
+      dir
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val dir = TempDirs.scoped("graft-wap-diff")
-        val docs = Tables.documents(s, d).filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-        val rules = Seq(LakeAudit.Rule("doc_id_not_null",
-          col("doc_id").isNotNull))
-        // b0/b2 publish pipelined (independent stage+audit, in-order
-        // commits); the erasure and b3 stay sequential — both depend on
-        // the published-lake state preceding them in the log
-        LakeAudit.writeAuditPublishPipelined(s, dir, Seq(
-          "b0" -> docs.filter(col("doc_id") % 3 === 0),
-          "b2" -> docs.filter(col("doc_id") % 3 === 2)), rules)
-        // the GDPR batch: published docs with doc_id ≡ 4 (mod 11) —
-        // driver-sized (the LakeDeletes deletion-list shape)
-        val ids = docs
-          .filter((col("doc_id") % 3 === 0 || col("doc_id") % 3 === 2) &&
-            col("doc_id") % 11 === 4)
-          .select("doc_id").collect().map(_.getLong(0)).toSeq
-        LakeAudit.eraseLogged(s, dir, "e0", ids, "doc_id", Seq("source"))
-        LakeAudit.writeAuditPublish(s,
-          docs.filter(col("doc_id") % 7 === 0)
-            .withColumn("text", concat(col("text"), lit(" rev"))),
-          dir, "b3", rules)
-        dir
-      })
-    }
-  }
 
   /** Q265: snapshot diff ACROSS AN ERASURE — q262 completed to the full
     * `table_changes` contract (added / revised / unchanged / REMOVED):
@@ -2037,40 +1992,29 @@ object CorpusQueries extends QueryGroup {
   // ≡1-mod-3 docs), then RESTORED to seq 2 — so the latest live set must
   // be exactly the seq-2 snapshot: revisions superseded by the restore
   // batch, later additions erased. Memoized per (session, sfDir).
-  private val restoreMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, String]]()
+  private val restoreMemo = new SessionMemo[String]
 
   private[operators] def restoreLakeDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val perSession = restoreMemo.synchronized {
-      var m = restoreMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        restoreMemo.put(s, m)
-      }
-      m
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    restoreMemo(s, d) {
+      val dir = TempDirs.scoped("graft-wap-restore")
+      val docs = Tables.documents(s, d).filter(col("text").isNotNull)
+        .select(col("doc_id"), col("source"), col("text"))
+      val rules = Seq(LakeAudit.Rule("doc_id_not_null",
+        col("doc_id").isNotNull))
+      // publish log: b0→1, b2→2, b3→3
+      LakeAudit.writeAuditPublish(s, docs.filter(col("doc_id") % 3 === 0),
+        dir, "b0", rules)
+      LakeAudit.writeAuditPublish(s, docs.filter(col("doc_id") % 3 === 2),
+        dir, "b2", rules)
+      LakeAudit.writeAuditPublish(s,
+        docs.filter(col("doc_id") % 7 === 0)
+          .withColumn("text", concat(col("text"), lit(" rev"))),
+        dir, "b3", rules)
+      LakeAudit.restoreTo(s, dir, targetSeq = 2L, restoreId = "r1",
+        idCol = "doc_id", rules = rules)
+      dir
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val dir = TempDirs.scoped("graft-wap-restore")
-        val docs = Tables.documents(s, d).filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-        val rules = Seq(LakeAudit.Rule("doc_id_not_null",
-          col("doc_id").isNotNull))
-        // pipelined stage+audit, in-order commits (b0→1, b2→2, b3→3 —
-        // identical log to three sequential publishes)
-        LakeAudit.writeAuditPublishPipelined(s, dir, Seq(
-          "b0" -> docs.filter(col("doc_id") % 3 === 0),
-          "b2" -> docs.filter(col("doc_id") % 3 === 2),
-          "b3" -> docs.filter(col("doc_id") % 7 === 0)
-            .withColumn("text", concat(col("text"), lit(" rev")))), rules)
-        LakeAudit.restoreTo(s, dir, targetSeq = 2L, restoreId = "r1",
-          idCol = "doc_id", rules = rules)
-        dir
-      })
-    }
-  }
 
   /** Q274: RESTORE to a publish — the time-travel family's write half
     * (read-as-of q194, diff q262/q265, change feed q272, and now
@@ -2115,47 +2059,33 @@ object CorpusQueries extends QueryGroup {
   // then-restored ids are re-erased as post-target additions — the
   // final live set must be exactly (≡0 or ≡2 mod 3) ∖ (≡4 mod 11) with
   // ORIGINAL texts. Memoized per (session, sfDir).
-  private val restoreEraseMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, String]]()
+  private val restoreEraseMemo = new SessionMemo[String]
 
   private[operators] def restoreEraseLakeDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val perSession = restoreEraseMemo.synchronized {
-      var m = restoreEraseMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        restoreEraseMemo.put(s, m)
-      }
-      m
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    restoreEraseMemo(s, d) {
+      val dir = TempDirs.scoped("graft-wap-restore-erase")
+      val docs = Tables.documents(s, d).filter(col("text").isNotNull)
+        .select(col("doc_id"), col("source"), col("text"))
+      val rules = Seq(LakeAudit.Rule("doc_id_not_null",
+        col("doc_id").isNotNull))
+      LakeAudit.writeAuditPublish(s, docs.filter(col("doc_id") % 3 === 0),
+        dir, "b0", rules)
+      LakeAudit.writeAuditPublish(s, docs.filter(col("doc_id") % 3 === 2),
+        dir, "b2", rules)
+      val ids = docs
+        .filter((col("doc_id") % 3 === 0 || col("doc_id") % 3 === 2) &&
+          col("doc_id") % 11 === 4)
+        .select("doc_id").collect().map(_.getLong(0)).toSeq
+      LakeAudit.eraseLogged(s, dir, "e0", ids, "doc_id", Seq("source"))
+      LakeAudit.writeAuditPublish(s,
+        docs.filter(col("doc_id") % 7 === 0)
+          .withColumn("text", concat(col("text"), lit(" rev"))),
+        dir, "b3", rules)
+      LakeAudit.restoreTo(s, dir, targetSeq = 2L, restoreId = "r1",
+        idCol = "doc_id", rules = rules)
+      dir
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val dir = TempDirs.scoped("graft-wap-restore-erase")
-        val docs = Tables.documents(s, d).filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-        val rules = Seq(LakeAudit.Rule("doc_id_not_null",
-          col("doc_id").isNotNull))
-        // b0/b2 pipelined; the erasure, b3, and the restore each depend
-        // on the log state preceding them and stay sequential
-        LakeAudit.writeAuditPublishPipelined(s, dir, Seq(
-          "b0" -> docs.filter(col("doc_id") % 3 === 0),
-          "b2" -> docs.filter(col("doc_id") % 3 === 2)), rules)
-        val ids = docs
-          .filter((col("doc_id") % 3 === 0 || col("doc_id") % 3 === 2) &&
-            col("doc_id") % 11 === 4)
-          .select("doc_id").collect().map(_.getLong(0)).toSeq
-        LakeAudit.eraseLogged(s, dir, "e0", ids, "doc_id", Seq("source"))
-        LakeAudit.writeAuditPublish(s,
-          docs.filter(col("doc_id") % 7 === 0)
-            .withColumn("text", concat(col("text"), lit(" rev"))),
-          dir, "b3", rules)
-        LakeAudit.restoreTo(s, dir, targetSeq = 2L, restoreId = "r1",
-          idCol = "doc_id", rules = rules)
-        dir
-      })
-    }
-  }
 
   /** Q277: RESTORE past a PRIOR ERASURE — the interplay q274 and q265
     * each cover half of (VERDICT r18 item 6): the lake's history holds a
@@ -2199,40 +2129,27 @@ object CorpusQueries extends QueryGroup {
   // NOT sorted by, with parquet BLOOM FILTERS on h and dictionary encoding
   // disabled (the over-dictionary-ceiling regime 100 TB cardinalities live
   // in — see LakeLayout.bloomOptions). Memoized per (session, sfDir).
-  private val bloomMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, String]]()
+  private val bloomMemo = new SessionMemo[String]
 
   private[operators] def fingerprint64(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   private[operators] def bloomLakeDir(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val perSession = bloomMemo.synchronized {
-      var m = bloomMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        bloomMemo.put(s, m)
-      }
-      m
+      d: String): String =
+    bloomMemo(s, d) {
+      val dir = TempDirs.scoped("graft-bloom-lake")
+      Tables.documents(s, d).filter(col("text").isNotNull)
+        .select(col("doc_id"), col("source"),
+          fingerprint64(col("text")).as("h"))
+        .repartitionByRange(8, col("doc_id"))
+        .sortWithinPartitions("doc_id")
+        .write.mode("overwrite")
+        .option("parquet.enable.dictionary", "false")
+        .options(LakeLayout.bloomOptions("h", expectedNdv = 100000L))
+        .parquet(dir)
+      dir
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val dir = TempDirs.scoped("graft-bloom-lake")
-        Tables.documents(s, d).filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"),
-            fingerprint64(col("text")).as("h"))
-          .repartitionByRange(8, col("doc_id"))
-          .sortWithinPartitions("doc_id")
-          .write.mode("overwrite")
-          .option("parquet.enable.dictionary", "false")
-          .options(LakeLayout.bloomOptions("h", expectedNdv = 100000L))
-          .parquet(dir)
-        dir
-      })
-    }
-  }
 
   /** Q270: point lookup on a BLOOM-indexed non-sort column — the read
     * path of the r18 layout option under the differential gate: the lake
@@ -2273,43 +2190,28 @@ object CorpusQueries extends QueryGroup {
     * whose schemas GREW additively across ingest generations, the way
     * every long-lived corpus lake actually evolves: b0 (doc_id, source,
     * text) predates language ID, b1 adds `lang`, b2 adds a BIGINT
-    * `quality` score. Memoized per (session, sfDir) under a
-    * [[TempDirs.scoped]] dir (the asOfLakeDir pattern — built once,
-    * cleaned at JVM exit). */
-  private val evoMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, String]]()
+    * `quality` score. Memoized per (session, sfDir). */
+  private val evoMemo = new SessionMemo[String]
 
   private[operators] def schemaEvoLakeDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val perSession = evoMemo.synchronized {
-      var m = evoMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        evoMemo.put(s, m)
-      }
-      m
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    evoMemo(s, d) {
+      val dir = TempDirs.scoped("graft-schema-evo")
+      val docs = Tables.documents(s, d).filter(col("text").isNotNull)
+      docs.filter(col("doc_id") % 3 === 0)
+        .select(lit("b0").as("batch"), col("doc_id"), col("source"),
+          col("text"))
+        .write.parquet(s"$dir/b0")
+      docs.filter(col("doc_id") % 3 === 1)
+        .select(lit("b1").as("batch"), col("doc_id"), col("source"),
+          col("text"), col("lang"))
+        .write.parquet(s"$dir/b1")
+      docs.filter(col("doc_id") % 3 === 2)
+        .select(lit("b2").as("batch"), col("doc_id"), col("source"),
+          col("text"), col("lang"), col("n_chars").as("quality"))
+        .write.parquet(s"$dir/b2")
+      dir
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val dir = TempDirs.scoped("graft-schema-evo")
-        val docs = Tables.documents(s, d).filter(col("text").isNotNull)
-        docs.filter(col("doc_id") % 3 === 0)
-          .select(lit("b0").as("batch"), col("doc_id"), col("source"),
-            col("text"))
-          .write.parquet(s"$dir/b0")
-        docs.filter(col("doc_id") % 3 === 1)
-          .select(lit("b1").as("batch"), col("doc_id"), col("source"),
-            col("text"), col("lang"))
-          .write.parquet(s"$dir/b1")
-        docs.filter(col("doc_id") % 3 === 2)
-          .select(lit("b2").as("batch"), col("doc_id"), col("source"),
-            col("text"), col("lang"), col("n_chars").as("quality"))
-          .write.parquet(s"$dir/b2")
-        dir
-      })
-    }
-  }
 
   /** Q210: schema-evolution lake read — one unified scan over parquet
     * batches written under ADDITIVE schema growth (see
@@ -2344,35 +2246,22 @@ object CorpusQueries extends QueryGroup {
     * GDPR-style deletion batch (the ≡13-mod-97 residue, ~1% of ids)
     * erased through the staged-rename path. Memoized per (session,
     * sfDir) under [[TempDirs.scoped]]. */
-  private val eraseMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, String]]()
+  private val eraseMemo = new SessionMemo[String]
 
   private[operators] def erasureLakeDir(
-      s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val perSession = eraseMemo.synchronized {
-      var m = eraseMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        eraseMemo.put(s, m)
-      }
-      m
+      s: org.apache.spark.sql.SparkSession, d: String): String =
+    eraseMemo(s, d) {
+      val dir = TempDirs.scoped("graft-erasure")
+      val docs = Tables.documents(s, d).filter(col("text").isNotNull)
+        .select(col("doc_id"), col("source"), col("text"))
+      docs.repartitionByRange(8, col("doc_id"))
+        .sortWithinPartitions("doc_id")
+        .write.parquet(s"$dir/data")
+      val ids = docs.filter(col("doc_id") % 97 === 13)
+        .select("doc_id").collect().map(_.getLong(0)).toSeq
+      LakeDeletes.erase(s, s"$dir/data", ids, "doc_id")
+      dir
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val dir = TempDirs.scoped("graft-erasure")
-        val docs = Tables.documents(s, d).filter(col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-        docs.repartitionByRange(8, col("doc_id"))
-          .sortWithinPartitions("doc_id")
-          .write.parquet(s"$dir/data")
-        val ids = docs.filter(col("doc_id") % 97 === 13)
-          .select("doc_id").collect().map(_.getLong(0)).toSeq
-        LakeDeletes.erase(s, s"$dir/data", ids, "doc_id")
-        dir
-      })
-    }
-  }
 
   /** Q212: right-to-be-forgotten erasure audit — reads the lake AFTER
     * [[LakeDeletes.erase]] removed the deletion batch and reports per

@@ -61,12 +61,7 @@ object DedupReport {
     out
   }
 
-  // one memo parquet per live (session, testdata dir) — the
-  // GraphQueries.coPurchaseEdges pattern; weak on the session so stopped
-  // sessions are collectable, dir removed at JVM exit (TempDirs)
-  private val componentsMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  private val componentsMemo = new SessionMemo[String]
 
   /** [[assignComponents]] over the canonical documents table at τ = 0.8 —
     * the derivation FOUR independent declared queries (q66/q79/q154/q174)
@@ -81,27 +76,15 @@ object DedupReport {
     * (deterministic pipeline; DedupReportSpec pins memo ≡ fresh, and the
     * four consumers' DuckDB oracles recompute from raw documents and still
     * hash-match). */
-  def assignComponentsMemo(s: SparkSession, d: String): DataFrame = {
-    val perSession = componentsMemo.synchronized {
-      var m = componentsMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        componentsMemo.put(s, m)
-      }
-      m
-    }
-    val path = perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val p = TempDirs.scoped("graft-dedup-components")
-        // the write IS the run-scoped action that releases the internal
-        // cached projection registered by assignComponents
-        assignComponents(s, graft.Tables.documents(s, d), tau = 0.8)
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
+  def assignComponentsMemo(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(componentsMemo(s, d) {
+      val p = TempDirs.scoped("graft-dedup-components")
+      // the write IS the run-scoped action that releases the internal
+      // cached projection registered by assignComponents
+      assignComponents(s, graft.Tables.documents(s, d), tau = 0.8)
+        .write.mode("overwrite").parquet(p)
+      p
+    })
 
   /** The pipeline plus its internal cached projection. [[build]] needs the
     * cache handle explicitly: it persists the RESULT on top, so an action's

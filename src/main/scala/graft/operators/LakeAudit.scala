@@ -112,77 +112,6 @@ object LakeAudit {
     WapResult(batchId, published = ok, reports)
   }
 
-  /** Pipelined multi-batch WAP publish (guide §2.6 "overlap independent
-    * jobs"): every batch's stage-write + audit runs CONCURRENTLY through a
-    * small driver pool — staging directories are disjoint and the jobs
-    * independent, so batch k+1's write back-fills executors freed by batch
-    * k's audit tail — while promotion + publish-log commit run STRICTLY IN
-    * LIST ORDER on the caller thread. The publish-log seq assignment, the
-    * per-batch audit decision, the returned reports, and the crash/replay
-    * surface are identical to calling [[writeAuditPublish]] in a loop:
-    * staging is invisible to readers, a failing batch stays quarantined
-    * without a log entry, an already-published batch takes the replay
-    * path (commit the possibly-missing entry, re-attest live data), and a
-    * crash leaves a prefix of ordered commits plus orphan staging dirs —
-    * the same states sequential publishing can leave.
-    *
-    * Built for the r20 profile of the lake fixture builds (q194/q265/
-    * q274/q277 first-touch): a chain of small publishes spent more wall
-    * in the serial gaps between their tiny jobs than in the jobs. */
-  def writeAuditPublishPipelined(spark: SparkSession, dir: String,
-      batches: Seq[(String, DataFrame)], rules: Seq[Rule],
-      uniqueKey: Seq[String] = Nil): Seq[WapResult] = {
-    require(batches.map(_._1).distinct.size == batches.size,
-      s"duplicate batchId in one pipelined publish: ${batches.map(_._1)}")
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, math.max(1, batches.size)))
-    try {
-      // fresh batches stage+audit concurrently; already-published ones
-      // take the sequential replay path inline in the commit phase below
-      val stagedFuts = batches.map { case (batchId, df) =>
-        if (fs.exists(dataPath(dir, batchId))) None
-        else Some(pool.submit(new java.util.concurrent.Callable[Seq[RuleReport]] {
-          override def call(): Seq[RuleReport] = {
-            spark.sparkContext.setJobDescription(s"wap stage+audit: $batchId")
-            val staged = stagingPath(dir, batchId)
-            df.write.mode("overwrite").parquet(staged.toString)
-            audit(spark.read.parquet(staged.toString), rules, uniqueKey)
-          }
-        }))
-      }
-      batches.zip(stagedFuts).map {
-        case ((batchId, _), None) =>
-          commitEntry(fs, dir, batchId)
-          WapResult(batchId, published = true,
-            audit(spark.read.parquet(dataPath(dir, batchId).toString),
-              rules, uniqueKey))
-        case ((batchId, _), Some(fut)) =>
-          val reports =
-            try fut.get()
-            catch { case e: java.util.concurrent.ExecutionException =>
-              // quiesce before rethrowing (the LakeDeletes pool
-              // discipline): no staged write may still be in flight when
-              // the caller sees the failure
-              stagedFuts.flatten.foreach(_.cancel(false))
-              pool.shutdown()
-              pool.awaitTermination(600,
-                java.util.concurrent.TimeUnit.SECONDS)
-              throw e.getCause }
-          val ok = reports.forall(_.pass)
-          if (ok) {
-            val staged = stagingPath(dir, batchId)
-            val target = dataPath(dir, batchId)
-            fs.mkdirs(target.getParent)
-            require(fs.rename(staged, target),
-              s"atomic publish rename failed: $staged -> $target")
-            commitEntry(fs, dir, batchId)
-          }
-          WapResult(batchId, published = ok, reports)
-      }
-    } finally pool.shutdown()
-  }
-
   /** The readable table: published batches only — staging is invisible. */
   def readPublished(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/data")

@@ -254,10 +254,12 @@ object LakeDeletes {
           // stage→commit and can delete the freshly replayed survivor
           // file; ADVICE r20). Queued tasks are cancelled unstarted;
           // already-running ones complete their own per-file protocol
-          // (each commits independently), bounded-awaited.
+          // (each commits independently) and are waited for without a
+          // bound, as the sequential form would wait for them.
           futures.foreach(_.cancel(false))
           pool.shutdown()
-          pool.awaitTermination(600, java.util.concurrent.TimeUnit.SECONDS)
+          while (!pool.awaitTermination(1,
+              java.util.concurrent.TimeUnit.MINUTES)) ()
           throw e.getCause }
       } finally pool.shutdown()
     }

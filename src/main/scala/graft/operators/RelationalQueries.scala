@@ -804,40 +804,26 @@ object RelationalQueries extends QueryGroup {
     * way (add the delta branches' partial aggregates to the stored
     * rollup, q124/q170's abelian-group maintenance). */
   // V(O₀, L₀) materialized ONCE per (session, dir) as a temp parquet —
-  // the STORED view the incremental path reads instead of recomputing
-  // (the coPurchaseEdges memo pattern); rows are deterministic, so the
-  // oracle's full-join recompute still hash-matches.
-  private val ivmMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  // the STORED view the incremental path reads instead of recomputing;
+  // rows are deterministic, so the oracle's full-join recompute still
+  // hash-matches.
+  private val ivmMemo = new SessionMemo[String]
 
   private def ivmBaseView(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val perSession = ivmMemo.synchronized {
-      var m = ivmMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty
-        ivmMemo.put(s, m)
-      }
-      m
-    }
-    val path = perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val o0 = Tables.orders(s, d)
-          .filter(!(col("o_orderkey") % 13 === 5))
-          .select("o_orderkey", "o_orderdate")
-        val l0 = Tables.lineitem(s, d)
-          .filter(!(col("l_orderkey") % 17 === 3))
-          .select("l_orderkey", "l_quantity")
-        val p = TempDirs.scoped("graft-ivm-base")
-        o0.join(l0, col("o_orderkey") === col("l_orderkey"))
-          .select(col("o_orderdate"), col("l_quantity"))
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(ivmMemo(s, d) {
+      val o0 = Tables.orders(s, d)
+        .filter(!(col("o_orderkey") % 13 === 5))
+        .select("o_orderkey", "o_orderdate")
+      val l0 = Tables.lineitem(s, d)
+        .filter(!(col("l_orderkey") % 17 === 3))
+        .select("l_orderkey", "l_quantity")
+      val p = TempDirs.scoped("graft-ivm-base")
+      o0.join(l0, col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_orderdate"), col("l_quantity"))
+        .write.mode("overwrite").parquet(p)
+      p
+    })
 
   private val q247: Q = (s, d) => {
     val o = Tables.orders(s, d).select(
@@ -1461,134 +1447,78 @@ object RelationalQueries extends QueryGroup {
   // bal_cents >> 13, count) over the customer base — |buckets| rows per
   // segment, never |distinct values| — materialized ONCE per
   // (session, dir) as a temp parquet the incremental path SCANS.
-  private val ivmBucketMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  private val ivmBucketMemo = new SessionMemo[String]
 
   private def ivmBucketView(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val perSession = ivmBucketMemo.synchronized {
-      var m = ivmBucketMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        ivmBucketMemo.put(s, m)
-      }
-      m
-    }
-    val path = perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val p = TempDirs.scoped("graft-ivm-bucket")
-        Tables.customer(s, d)
-          .groupBy(col("c_mktsegment").as("seg"),
-            shiftright((col("c_acctbal").cast(DecimalType(18, 2)) * 100)
-              .cast("long"), 13).as("bucket"))
-          .agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(ivmBucketMemo(s, d) {
+      val p = TempDirs.scoped("graft-ivm-bucket")
+      Tables.customer(s, d)
+        .groupBy(col("c_mktsegment").as("seg"),
+          shiftright((col("c_acctbal").cast(DecimalType(18, 2)) * 100)
+            .cast("long"), 13).as("bucket"))
+        .agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(p)
+      p
+    })
 
   // The stored value histogram q268 maintains: (segment, exact balance
   // cents, count) over the customer base, materialized ONCE per
   // (session, dir) as a temp parquet the incremental path SCANS.
-  private val ivmHistMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  private val ivmHistMemo = new SessionMemo[String]
 
   private def ivmHistView(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val perSession = ivmHistMemo.synchronized {
-      var m = ivmHistMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        ivmHistMemo.put(s, m)
-      }
-      m
-    }
-    val path = perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val p = TempDirs.scoped("graft-ivm-hist")
-        Tables.customer(s, d)
-          .groupBy(col("c_mktsegment").as("seg"),
-            (col("c_acctbal").cast(DecimalType(18, 2)) * 100).cast("long")
-              .as("bal_cents"))
-          .agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(ivmHistMemo(s, d) {
+      val p = TempDirs.scoped("graft-ivm-hist")
+      Tables.customer(s, d)
+        .groupBy(col("c_mktsegment").as("seg"),
+          (col("c_acctbal").cast(DecimalType(18, 2)) * 100).cast("long")
+            .as("bal_cents"))
+        .agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(p)
+      p
+    })
 
   // The stored join+rollup view q264 maintains: (segment, join-row count,
   // exact DECIMAL Σ o_totalprice) over C₀ ⋈ O₀ (O₀ = orders before the
   // ≡3-mod-17 arrival batch), materialized ONCE per (session, dir) as a
   // temp parquet the incremental path SCANS.
-  private val ivmJoinMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  private val ivmJoinMemo = new SessionMemo[String]
 
   private def ivmJoinView(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val perSession = ivmJoinMemo.synchronized {
-      var m = ivmJoinMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        ivmJoinMemo.put(s, m)
-      }
-      m
-    }
-    val path = perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val p = TempDirs.scoped("graft-ivm-join")
-        val o0 = Tables.orders(s, d)
-          .filter(!(col("o_orderkey") % 17 === 3))
-          .select(col("o_custkey").as("c_custkey"), col("o_totalprice"))
-        Tables.customer(s, d)
-          .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-          .join(o0, Seq("c_custkey"))
-          .groupBy("seg")
-          .agg(count(lit(1)).as("n"),
-            sum(col("o_totalprice").cast(DecimalType(18, 2))).as("s"))
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(ivmJoinMemo(s, d) {
+      val p = TempDirs.scoped("graft-ivm-join")
+      val o0 = Tables.orders(s, d)
+        .filter(!(col("o_orderkey") % 17 === 3))
+        .select(col("o_custkey").as("c_custkey"), col("o_totalprice"))
+      Tables.customer(s, d)
+        .select(col("c_custkey"), col("c_mktsegment").as("seg"))
+        .join(o0, Seq("c_custkey"))
+        .groupBy("seg")
+        .agg(count(lit(1)).as("n"),
+          sum(col("o_totalprice").cast(DecimalType(18, 2))).as("s"))
+        .write.mode("overwrite").parquet(p)
+      p
+    })
 
   // The stored per-segment rollup q258 maintains: (segment, count, exact
   // DECIMAL balance sum) over the customer base, materialized ONCE per
   // (session, dir) as a temp parquet the incremental path SCANS.
-  private val ivmAggMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  private val ivmAggMemo = new SessionMemo[String]
 
   private def ivmAggView(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val perSession = ivmAggMemo.synchronized {
-      var m = ivmAggMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        ivmAggMemo.put(s, m)
-      }
-      m
-    }
-    val path = perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val p = TempDirs.scoped("graft-ivm-agg")
-        Tables.customer(s, d)
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("n"),
-            sum(col("c_acctbal").cast(DecimalType(18, 2))).as("s"))
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
+      d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(ivmAggMemo(s, d) {
+      val p = TempDirs.scoped("graft-ivm-agg")
+      Tables.customer(s, d)
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n"),
+          sum(col("c_acctbal").cast(DecimalType(18, 2))).as("s"))
+        .write.mode("overwrite").parquet(p)
+      p
+    })
 
   /** Q259: typed CSV read under the differential gate — the one §2B
     * source format that was spec-only until now. The fixture is a
@@ -1642,50 +1572,37 @@ object RelationalQueries extends QueryGroup {
   // The deterministic CSV fixture q259 reads: derived customer rows (key
   // ≡ 7 mod 150) + fixed edge rows, written with java.nio so the READER
   // is the only Spark CSV code under test. Memoized per (session, dir).
-  private val csvMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  private val csvMemo = new SessionMemo[String]
 
   private def csvFixtureDir(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val perSession = csvMemo.synchronized {
-      var m = csvMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        csvMemo.put(s, m)
-      }
-      m
+      d: String): String =
+    csvMemo(s, d) {
+      val dir = TempDirs.scoped("graft-csv-fixture")
+      def q(v: String): String = "\"" + v.replace("\"", "\"\"") + "\""
+      val derived = Tables.customer(s, d)
+        .filter(col("c_custkey") % 150 === 7)
+        .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
+        .orderBy("c_custkey")
+        .collect()
+        .map { r =>
+          val bal = java.math.BigDecimal.valueOf(r.getDouble(2))
+            .toPlainString
+          s"${r.getLong(0)},${q(r.getString(1))},$bal,${q(r.getString(3))}"
+        }
+      val edges = Seq(
+        "9000001,\"comma, name\",1.5,\"SEG A\"",
+        "9000002,\"quote \"\" name\",-7.25,\"SEG\"\"B\"",
+        "9000003,NULL,0.0,NULL",
+        "9000004,\"\",NULL,\"\"",
+        "9000005,\"caf\u00e9\",12345678.09,\"SEG C\"")
+      val lines = ("c_custkey,c_name,c_acctbal,c_mktsegment" +: derived)
+        .++(edges)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir, "part-000.csv"),
+        lines.mkString("", "\n", "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      dir
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val dir = TempDirs.scoped("graft-csv-fixture")
-        def q(v: String): String = "\"" + v.replace("\"", "\"\"") + "\""
-        val derived = Tables.customer(s, d)
-          .filter(col("c_custkey") % 150 === 7)
-          .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-          .orderBy("c_custkey")
-          .collect()
-          .map { r =>
-            val bal = java.math.BigDecimal.valueOf(r.getDouble(2))
-              .toPlainString
-            s"${r.getLong(0)},${q(r.getString(1))},$bal,${q(r.getString(3))}"
-          }
-        val edges = Seq(
-          "9000001,\"comma, name\",1.5,\"SEG A\"",
-          "9000002,\"quote \"\" name\",-7.25,\"SEG\"\"B\"",
-          "9000003,NULL,0.0,NULL",
-          "9000004,\"\",NULL,\"\"",
-          "9000005,\"caf\u00e9\",12345678.09,\"SEG C\"")
-        val lines = ("c_custkey,c_name,c_acctbal,c_mktsegment" +: derived)
-          .++(edges)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, "part-000.csv"),
-          lines.mkString("", "\n", "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        dir
-      })
-    }
-  }
 
   /** Q271: typed ORC read under the differential gate — the remaining
     * Spark-native columnar source format next to parquet (q01), JSON
@@ -1749,81 +1666,55 @@ object RelationalQueries extends QueryGroup {
   // the q271 edge-row set (null string vs empty string, null double,
   // non-ASCII as \u escapes, negative and zero doubles, both booleans),
   // written as TWO container files. Memoized per (session, dir).
-  private val avroMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  private val avroMemo = new SessionMemo[String]
 
   private def avroFixtureDir(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val perSession = avroMemo.synchronized {
-      var m = avroMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        avroMemo.put(s, m)
-      }
-      m
+      d: String): String =
+    avroMemo(s, d) {
+      val dir = TempDirs.scoped("graft-avro-fixture")
+      val derived = Tables.customer(s, d)
+        .filter(col("c_custkey") % 150 === 13)
+        .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
+          lit(true).as("active"))
+      val schema = derived.schema
+      val edges = s.createDataFrame(
+        java.util.Arrays.asList(
+          org.apache.spark.sql.Row(9000001L, "caf\u00e9 row", 1.5, false),
+          org.apache.spark.sql.Row(9000002L, null, -7.25, true),
+          org.apache.spark.sql.Row(9000003L, "zero", 0.0, false),
+          org.apache.spark.sql.Row(9000004L, "", null, true)),
+        schema)
+      graft.sources.AvroLake.write(
+        derived.unionByName(edges).repartition(2), dir)
+      dir
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val dir = TempDirs.scoped("graft-avro-fixture")
-        val derived = Tables.customer(s, d)
-          .filter(col("c_custkey") % 150 === 13)
-          .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-            lit(true).as("active"))
-        val schema = derived.schema
-        val edges = s.createDataFrame(
-          java.util.Arrays.asList(
-            org.apache.spark.sql.Row(9000001L, "caf\u00e9 row", 1.5, false),
-            org.apache.spark.sql.Row(9000002L, null, -7.25, true),
-            org.apache.spark.sql.Row(9000003L, "zero", 0.0, false),
-            org.apache.spark.sql.Row(9000004L, "", null, true)),
-          schema)
-        graft.sources.AvroLake.write(
-          derived.unionByName(edges).repartition(2), dir)
-        dir
-      })
-    }
-  }
 
   // The ORC fixture q271 reads: a key-sliced customer projection plus
   // edge rows (null string vs empty string, null double, non-ASCII as
   // \u escapes, negative and zero doubles, both boolean values).
   // Memoized per (session, dir).
-  private val orcMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  private val orcMemo = new SessionMemo[String]
 
   private def orcFixtureDir(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val perSession = orcMemo.synchronized {
-      var m = orcMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        orcMemo.put(s, m)
-      }
-      m
+      d: String): String =
+    orcMemo(s, d) {
+      val dir = TempDirs.scoped("graft-orc-fixture")
+      val derived = Tables.customer(s, d)
+        .filter(col("c_custkey") % 150 === 11)
+        .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
+          lit(true).as("active"))
+      val schema = derived.schema
+      val edges = s.createDataFrame(
+        java.util.Arrays.asList(
+          org.apache.spark.sql.Row(9000001L, "caf\u00e9 row", 1.5, false),
+          org.apache.spark.sql.Row(9000002L, null, -7.25, true),
+          org.apache.spark.sql.Row(9000003L, "zero", 0.0, false),
+          org.apache.spark.sql.Row(9000004L, "", null, true)),
+        schema)
+      derived.unionByName(edges)
+        .coalesce(1).write.mode("overwrite").orc(dir)
+      dir
     }
-    perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val dir = TempDirs.scoped("graft-orc-fixture")
-        val derived = Tables.customer(s, d)
-          .filter(col("c_custkey") % 150 === 11)
-          .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-            lit(true).as("active"))
-        val schema = derived.schema
-        val edges = s.createDataFrame(
-          java.util.Arrays.asList(
-            org.apache.spark.sql.Row(9000001L, "caf\u00e9 row", 1.5, false),
-            org.apache.spark.sql.Row(9000002L, null, -7.25, true),
-            org.apache.spark.sql.Row(9000003L, "zero", 0.0, false),
-            org.apache.spark.sql.Row(9000004L, "", null, true)),
-          schema)
-        derived.unionByName(edges)
-          .coalesce(1).write.mode("overwrite").orc(dir)
-        dir
-      })
-    }
-  }
 
   /** Q263: inclusion-dependency discovery — q255's cross-TABLE companion
     * (the Deequ/metadata-crawler step that proposes FOREIGN KEYS on an

@@ -920,39 +920,25 @@ object VectorQueries extends QueryGroup {
   }
 
   // The pre-delta base kNN graph, materialized ONCE per (session, dir) as
-  // a temp parquet — the stored artifact q252's incremental path reads
-  // (the q247 ivmBaseView pattern). Built from base vectors only, under
-  // the same frozen base-fitted centroids the delta assignment uses.
-  private val knnBaseMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  // a temp parquet — the stored artifact q252's incremental path reads.
+  // Built from base vectors only, under the same frozen base-fitted
+  // centroids the delta assignment uses.
+  private val knnBaseMemo = new SessionMemo[String]
 
   private def knnBaseGraph(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    val perSession = knnBaseMemo.synchronized {
-      var m = knnBaseMemo.get(s)
-      if (m == null) {
-        m = scala.collection.mutable.Map.empty[String, String]
-        knnBaseMemo.put(s, m)
-      }
-      m
-    }
-    val path = perSession.synchronized {
-      perSession.getOrElseUpdate(d, {
-        val e0 = Tables.embeddings(s, d)
-          .filter(size(col("embedding")) === 64 &&
-            !exists(col("embedding"), x => x.isNull))
-          .filter(col("vec_id") % 11 =!= 7)
-        val cents = IvfStorage.labelCentroids(e0)
-        val assigned0 = IvfStorage.assignCells(e0, cents)
-          .select(col("vec_id"), col("embedding"), col("cent_id"))
-        val p = TempDirs.scoped("graft-knn-base")
-        knnEdges(assigned0).write.mode("overwrite").parquet(p)
-        p
-      })
-    }
-    s.read.parquet(path)
-  }
+      d: String): DataFrame =
+    s.read.parquet(knnBaseMemo(s, d) {
+      val e0 = Tables.embeddings(s, d)
+        .filter(size(col("embedding")) === 64 &&
+          !exists(col("embedding"), x => x.isNull))
+        .filter(col("vec_id") % 11 =!= 7)
+      val cents = IvfStorage.labelCentroids(e0)
+      val assigned0 = IvfStorage.assignCells(e0, cents)
+        .select(col("vec_id"), col("embedding"), col("cent_id"))
+      val p = TempDirs.scoped("graft-knn-base")
+      knnEdges(assigned0).write.mode("overwrite").parquet(p)
+      p
+    })
 
   /** Cell-blocked top-3 edges over an assigned frame, with BOTH sides
     * collapsed to exact-embedding content groups — q157/q252's pair+rank

@@ -80,12 +80,19 @@ class LakeAuditSpec extends SparkSpec {
     assert(replay.published, "already-published id reports published")
     assert(readPublished(spark, dir).select("id").as[Long].collect().toSeq
       == Seq(1L), "replay must not alter published data")
+    assert(publishLog(spark, dir).map(_.batchId) == Seq("b1"),
+      "replay must not append a second log entry")
     // a quarantined id re-stages over itself and can then publish
     val dirty = Seq((2L, 99.0, 10.0)).toDF("id", "qty", "price")
     assert(!writeAuditPublish(spark, dirty, dir, "b2", rules).published)
+    assert(publishLog(spark, dir).map(_.batchId) == Seq("b1"),
+      "a quarantined batch leaves no log entry")
     val fixed = Seq((2L, 9.0, 10.0)).toDF("id", "qty", "price")
     assert(writeAuditPublish(spark, fixed, dir, "b2", rules).published)
     assert(readPublished(spark, dir).count() == 2)
+    assert(publishLog(spark, dir) ==
+      Seq(PublishEntry(1L, "b1"), PublishEntry(2L, "b2")),
+      "the fixed batch publishes as the next seq")
   }
 
   // --- publish log + time travel ---------------------------------------
@@ -425,46 +432,5 @@ class LakeAuditSpec extends SparkSpec {
       .as[(Long, Double)].collect().toSeq
     assert(rcpts == Seq((2L, 7.0)),
       "the right-to-be-forgotten witness must survive the restore")
-  }
-
-  test("pipelined publish ≡ sequential: log order, data, reports — incl. a quarantined batch and a replay") {
-    def batches = Seq(
-      "b0" -> Seq((1L, 5.0, 10.0), (2L, 7.0, 20.0)).toDF("id", "qty", "price"),
-      // fails qty_range → must be quarantined with NO log entry
-      "bBad" -> Seq((3L, 99.0, 10.0)).toDF("id", "qty", "price"),
-      "b1" -> Seq((4L, 9.0, 30.0)).toDF("id", "qty", "price"),
-      "b2" -> Seq((5L, 2.0, 40.0)).toDF("id", "qty", "price"))
-    val seqDir = tmpDir("wappipe-seq")
-    val pipeDir = tmpDir("wappipe-par")
-    val seqRes = batches.map { case (b, df) =>
-      writeAuditPublish(spark, df, seqDir, b, rules, Seq("id")) }
-    val pipeRes = writeAuditPublishPipelined(
-      spark, pipeDir, batches, rules, Seq("id"))
-    // identical decisions and reports, in order
-    assert(pipeRes.map(r => (r.batchId, r.published, r.reports)) ==
-      seqRes.map(r => (r.batchId, r.published, r.reports)))
-    // identical publish logs: bBad absent, seqs in list order
-    assert(publishLog(spark, pipeDir) == publishLog(spark, seqDir))
-    assert(publishLog(spark, pipeDir).map(_.batchId) ==
-      Seq("b0", "b1", "b2"))
-    // identical readable data
-    def rows(dir: String) = readPublished(spark, dir)
-      .select("id", "qty", "price")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-      .toSeq.sorted
-    assert(rows(pipeDir) == rows(seqDir))
-    // the quarantined batch stays in staging, invisible
-    assert(spark.read.parquet(s"$pipeDir/staging/batch=bBad").count() == 1)
-    // REPLAY through the pipelined path: published ids are no-ops that
-    // keep the log intact; the quarantined id re-stages and publishes
-    // once its data is fixed
-    val replay = writeAuditPublishPipelined(spark, pipeDir, Seq(
-      "b0" -> Seq((9L, 1.0, 1.0)).toDF("id", "qty", "price"), // ignored
-      "bBad" -> Seq((3L, 9.0, 10.0)).toDF("id", "qty", "price")),
-      rules, Seq("id"))
-    assert(replay.map(_.published) == Seq(true, true))
-    assert(publishLog(spark, pipeDir).map(_.batchId) ==
-      Seq("b0", "b1", "b2", "bBad"))
-    assert(rows(pipeDir).map(_._1).toSet == Set(1L, 2L, 3L, 4L, 5L))
   }
 }
