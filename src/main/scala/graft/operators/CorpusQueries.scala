@@ -1991,7 +1991,7 @@ object CorpusQueries extends QueryGroup {
   // ≡ 2 mod 3), b3 (seq 3, the ≡0-mod-7 revision batch incl. brand-new
   // ≡1-mod-3 docs), then RESTORED to seq 2 — so the latest live set must
   // be exactly the seq-2 snapshot: revisions superseded by the restore
-  // batch, later additions erased. Memoized per (session, sfDir).
+  // batch, later additions erased.
   private val restoreMemo = new SessionMemo[String]
 
   private[operators] def restoreLakeDir(
@@ -2058,7 +2058,7 @@ object CorpusQueries extends QueryGroup {
   // excludes the erased docs (history rewritten), and the republished-
   // then-restored ids are re-erased as post-target additions — the
   // final live set must be exactly (≡0 or ≡2 mod 3) ∖ (≡4 mod 11) with
-  // ORIGINAL texts. Memoized per (session, sfDir).
+  // ORIGINAL texts.
   private val restoreEraseMemo = new SessionMemo[String]
 
   private[operators] def restoreEraseLakeDir(
@@ -2128,7 +2128,7 @@ object CorpusQueries extends QueryGroup {
   // sorted (8 files) carrying a content-fingerprint column `h` the lake is
   // NOT sorted by, with parquet BLOOM FILTERS on h and dictionary encoding
   // disabled (the over-dictionary-ceiling regime 100 TB cardinalities live
-  // in — see LakeLayout.bloomOptions). Memoized per (session, sfDir).
+  // in — see LakeLayout.bloomOptions).
   private val bloomMemo = new SessionMemo[String]
 
   private[operators] def fingerprint64(c: org.apache.spark.sql.Column)
@@ -2190,7 +2190,7 @@ object CorpusQueries extends QueryGroup {
     * whose schemas GREW additively across ingest generations, the way
     * every long-lived corpus lake actually evolves: b0 (doc_id, source,
     * text) predates language ID, b1 adds `lang`, b2 adds a BIGINT
-    * `quality` score. Memoized per (session, sfDir). */
+    * `quality` score. */
   private val evoMemo = new SessionMemo[String]
 
   private[operators] def schemaEvoLakeDir(
@@ -2244,8 +2244,7 @@ object CorpusQueries extends QueryGroup {
     * id-range-sorted parquet lake (8 files via repartitionByRange — the
     * layout that keeps [[LakeDeletes]]'s footer pruning tight), then a
     * GDPR-style deletion batch (the ≡13-mod-97 residue, ~1% of ids)
-    * erased through the staged-rename path. Memoized per (session,
-    * sfDir) under [[TempDirs.scoped]]. */
+    * erased through the staged-rename path. */
   private val eraseMemo = new SessionMemo[String]
 
   private[operators] def erasureLakeDir(

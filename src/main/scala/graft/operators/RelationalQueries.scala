@@ -1571,7 +1571,7 @@ object RelationalQueries extends QueryGroup {
 
   // The deterministic CSV fixture q259 reads: derived customer rows (key
   // ≡ 7 mod 150) + fixed edge rows, written with java.nio so the READER
-  // is the only Spark CSV code under test. Memoized per (session, dir).
+  // is the only Spark CSV code under test.
   private val csvMemo = new SessionMemo[String]
 
   private def csvFixtureDir(s: org.apache.spark.sql.SparkSession,
@@ -1665,7 +1665,7 @@ object RelationalQueries extends QueryGroup {
   // The Avro fixture q275 reads: a key-sliced customer projection plus
   // the q271 edge-row set (null string vs empty string, null double,
   // non-ASCII as \u escapes, negative and zero doubles, both booleans),
-  // written as TWO container files. Memoized per (session, dir).
+  // written as TWO container files.
   private val avroMemo = new SessionMemo[String]
 
   private def avroFixtureDir(s: org.apache.spark.sql.SparkSession,
@@ -1692,7 +1692,6 @@ object RelationalQueries extends QueryGroup {
   // The ORC fixture q271 reads: a key-sliced customer projection plus
   // edge rows (null string vs empty string, null double, non-ASCII as
   // \u escapes, negative and zero doubles, both boolean values).
-  // Memoized per (session, dir).
   private val orcMemo = new SessionMemo[String]
 
   private def orcFixtureDir(s: org.apache.spark.sql.SparkSession,
