@@ -28,7 +28,7 @@ object EtlPipeline {
         .parquet(outDir)
     else
       bucketed
-        .select(to_json(struct(TripEventCodec.outputColumns: _*)).as("value"),
+        .select(TripEventCodec.outputJson.as("value"),
           col("pickup_location"), col("year"), col("month"))
         .write.mode("overwrite")
         .partitionBy(BucketPaths.partitionColumns: _*)

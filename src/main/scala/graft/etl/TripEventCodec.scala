@@ -48,7 +48,9 @@ object TripEventCodec {
     case f => col(f)
   }
 
+  /** One event's JSON line (quirks 1–3), as every JSON sink writes it. */
+  def outputJson: Column = to_json(struct(outputColumns: _*))
+
   /** Serialize TripEvent rows to one JSON line per event (quirks 1–3). */
-  def serialize(df: DataFrame): DataFrame =
-    df.select(to_json(struct(outputColumns: _*)).as("value"))
+  def serialize(df: DataFrame): DataFrame = df.select(outputJson.as("value"))
 }

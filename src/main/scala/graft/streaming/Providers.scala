@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.etl.{BucketPaths, TripEventCodec}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 /** Connector seams. The environment ships no Kinesis/Kafka/ES jars (verified
   * against /opt/spark/jars), so external connectors are pure interfaces with
@@ -55,6 +56,49 @@ final class QueueSource(queue: String, val startingPosition: String = "TRIM_HORI
 trait SinkProvider {
   def name: String
   def write(events: DataFrame, batchId: Long): Unit
+}
+
+/** One partition's writer of a [[RecordSink]], opened on the executor. */
+trait RecordWriter {
+  /** One serialized TripEvent: `index` is its `type`, `id` its `trip_id` as
+    * text, `doc` its 18-field JSON ([[TripEventCodec.serialize]]'s line). */
+  def write(index: String, id: String, doc: String): Unit
+  /** End of the partition: deliver whatever is buffered. */
+  def close(): Unit
+}
+
+/** A sink that takes one serialized record at a time — the reference's
+  * ES, Kinesis, Kafka and discarding sinks, which Flink chains into one
+  * task behind the parse (StreamingEtl.java:106-149). [[EtlStream]] writes
+  * all record sinks of a batch in one pass ([[RecordSink.write]]); on its
+  * own a record sink takes that same path.
+  */
+trait RecordSink extends SinkProvider {
+  /** Called on the driver once per batch write; the returned opener is
+    * shipped to the executors and called once per partition. */
+  def writer(spark: SparkSession): () => RecordWriter
+
+  def write(events: DataFrame, batchId: Long): Unit =
+    RecordSink.write(events, Seq(this))
+}
+
+object RecordSink {
+  /** One job over `events`: each row is decoded once and serialized once,
+    * then handed to every sink's writer for its partition. */
+  def write(events: DataFrame, sinks: Seq[RecordSink]): Unit = {
+    val open = sinks.map(_.writer(events.sparkSession))
+    events
+      .select(col("type"), col("trip_id").cast("string"),
+        TripEventCodec.outputJson)
+      .foreachPartition { rows: Iterator[Row] =>
+        val writers = open.map(_()).toArray
+        rows.foreach { r =>
+          val (index, id, doc) = (r.getString(0), r.getString(1), r.getString(2))
+          writers.foreach(_.write(index, id, doc))
+        }
+        writers.foreach(_.close())
+      }
+  }
 }
 
 /** Per-JVM backing stores for the stub sinks, reached from executor tasks by
@@ -130,7 +174,7 @@ final class FileSink(outDir: String, parquet: Boolean,
         .parquet(tmp)
     else
       bucketed
-        .select(to_json(struct(TripEventCodec.outputColumns: _*)).as("value"),
+        .select(TripEventCodec.outputJson.as("value"),
           col("pickup_location"), col("year"), col("month"))
         .write.mode("overwrite")
         .partitionBy(BucketPaths.partitionColumns: _*)
@@ -169,7 +213,7 @@ final class FileSink(outDir: String, parquet: Boolean,
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, math.max(1, byPartition.size)))
     try {
-      byPartition.map { case (rel, parts) =>
+      val futures = byPartition.map { case (rel, parts) =>
         pool.submit(new Runnable {
           def run(): Unit = {
             val destDir = if (rel.isEmpty) new Path(prefix) else new Path(prefix, rel)
@@ -188,7 +232,18 @@ final class FileSink(outDir: String, parquet: Boolean,
             }
           }
         })
-      }.foreach(_.get())
+      }
+      try futures.foreach(_.get())
+      catch { case e: java.util.concurrent.ExecutionException =>
+        // quiesce before rethrowing, as LakeDeletes.erase does: the replayed
+        // batch deletes and renames `batch-<id>-*` in the same partition
+        // dirs, so it must not race commits still in flight. Queued ones
+        // are cancelled unstarted; running ones finish their partition.
+        futures.foreach(_.cancel(false))
+        pool.shutdown()
+        while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)) ()
+        throw e.getCause
+      }
     } finally pool.shutdown()
     fs.delete(tmpPath, true)
   }
@@ -199,10 +254,9 @@ final class FileSink(outDir: String, parquet: Boolean,
   * (StreamingEtl.java:250-259). Upsert by (index, id) → idempotent →
   * replayed batches are harmless (the exactly-once claim, README.md:18-19).
   *
-  * Executor-side shape: rows flow through `foreachPartition` into a
-  * per-partition bulk buffer that flushes on max-actions / max-size /
-  * flush-interval — the reference's BulkProcessor tunables
-  * (`ElasticsearchBulkFlushMaxSizeMb|MaxActions|Interval`,
+  * Executor-side shape: each partition's records go into a bulk buffer that
+  * flushes on max-actions / max-size / flush-interval — the reference's
+  * BulkProcessor tunables (`ElasticsearchBulkFlushMaxSizeMb|MaxActions|Interval`,
   * StreamingEtl.java:270-280) — and retries bulk executions the cluster
   * rejects (RetryRejectedExecutionFailureHandler analogue, :268). No record
   * ever round-trips through the driver.
@@ -211,7 +265,7 @@ final class ElasticsearchStubSink(
     bulkFlushMaxSizeMb: Int = 5,
     bulkFlushMaxActions: Int = 500,
     bulkFlushIntervalMillis: Long = 0L, // 0 = flush on size/actions/end only
-    maxRetries: Int = 8) extends SinkProvider {
+    maxRetries: Int = 8) extends RecordSink {
   val name = "elasticsearch"
   private val id = java.util.UUID.randomUUID().toString
 
@@ -223,93 +277,125 @@ final class ElasticsearchStubSink(
   /** Release the per-JVM store (long-lived drivers creating many sinks). */
   def close(): Unit = SinkStores.drop(id)
 
-  def write(events: DataFrame, batchId: Long): Unit = {
+  def writer(spark: SparkSession): () => RecordWriter = {
     val (sinkId, maxActions, retries) = (id, bulkFlushMaxActions, maxRetries)
     val maxBytes = bulkFlushMaxSizeMb * 1024L * 1024L
     val intervalNanos = bulkFlushIntervalMillis * 1000000L
-    events
-      .select(col("type").as("index"), col("trip_id").cast("string").as("id"),
-        to_json(struct(TripEventCodec.outputColumns: _*)).as("doc"))
-      .foreachPartition { rows: Iterator[Row] =>
-        val buf = scala.collection.mutable.ArrayBuffer.empty[((String, String), String)]
-        var bytes = 0L
-        var lastFlush = System.nanoTime()
-        def flush(): Unit = if (buf.nonEmpty) {
-          var attempt = 0
-          // retry-on-rejection: a rejected bulk execution is re-submitted
-          // whole (it is idempotent — upserts by (index, id))
-          while (SinkStores.rejects(sinkId)) {
-            attempt += 1
-            if (attempt > retries)
-              throw new IllegalStateException(
-                s"ES bulk rejected $attempt times (maxRetries=$retries)")
-          }
-          val target = SinkStores.map(sinkId)
-          buf.foreach { case (key, doc) => target.put(key, doc) }
-          buf.clear(); bytes = 0L; lastFlush = System.nanoTime()
-        }
-        rows.foreach { r =>
-          buf += (((r.getString(0), r.getString(1)), r.getString(2)))
-          bytes += r.getString(2).length.toLong
-          if (buf.size >= maxActions || bytes >= maxBytes ||
-            (intervalNanos > 0 && System.nanoTime() - lastFlush >= intervalNanos))
-            flush()
-        }
-        flush()
-      }
+    () => new ElasticsearchStubSink.BulkWriter(sinkId, maxActions, maxBytes,
+      intervalNanos, retries)
   }
+}
+
+object ElasticsearchStubSink {
+  /** One partition's bulk client. */
+  private final class BulkWriter(sinkId: String, maxActions: Int, maxBytes: Long,
+      intervalNanos: Long, retries: Int) extends RecordWriter {
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[((String, String), String)]
+    private var bytes = 0L
+    private var lastFlush = System.nanoTime()
+
+    def write(index: String, id: String, doc: String): Unit = {
+      buf += (((index, id), doc))
+      bytes += doc.length.toLong
+      if (buf.size >= maxActions || bytes >= maxBytes ||
+        (intervalNanos > 0 && System.nanoTime() - lastFlush >= intervalNanos))
+        flush()
+    }
+
+    def close(): Unit = flush()
+
+    private def flush(): Unit = if (buf.nonEmpty) {
+      var attempt = 0
+      // retry-on-rejection: a rejected bulk execution is re-submitted
+      // whole (it is idempotent — upserts by (index, id))
+      while (SinkStores.rejects(sinkId)) {
+        attempt += 1
+        if (attempt > retries)
+          throw new IllegalStateException(
+            s"ES bulk rejected $attempt times (maxRetries=$retries)")
+      }
+      val target = SinkStores.map(sinkId)
+      buf.foreach { case (key, doc) => target.put(key, doc) }
+      buf.clear(); bytes = 0L; lastFlush = System.nanoTime()
+    }
+  }
+}
+
+/** Produces each record to a stub stream's per-JVM queue under a fixed key. */
+private final class QueueWriter(sinkId: String, key: String) extends RecordWriter {
+  private val queue = SinkStores.queue(sinkId)
+  def write(index: String, id: String, doc: String): Unit = { queue.add((key, doc)); () }
+  def close(): Unit = ()
 }
 
 /** Kinesis stub: the reference publishes every record with the FIXED
   * partition key "0" (StreamingEtl.java:191-205) — global ordering through a
-  * single shard. Records are produced executor-side (`foreachPartition` into
-  * the per-JVM store — the per-partition KPL-client shape); only the sink id
-  * string is shipped in the task closure.
+  * single shard. Records are produced executor-side into the per-JVM store
+  * (the per-partition KPL-client shape); only the sink id string is shipped
+  * in the task closure.
   *
   * Contract note — `failOnError`: the reference sets
   * `producer.setFailOnError(true)` (StreamingEtl.java:200), i.e. a producer
   * put failure fails the job rather than being logged and skipped. The
   * in-JVM store here has no failure mode to propagate; a real connector
-  * behind this seam must let a put exception escape `write` — the
+  * behind this seam must let a put exception escape its writer — the
   * foreachBatch caller then fails the batch, which is exactly that semantic
   * (the batch replays from the checkpoint). */
-final class KinesisStubSink extends SinkProvider {
+final class KinesisStubSink extends RecordSink {
   val name = "kinesis"
   private val id = java.util.UUID.randomUUID().toString
   def records: ConcurrentLinkedQueue[(String, String)] = SinkStores.queue(id)
   def close(): Unit = SinkStores.drop(id)
 
-  def write(events: DataFrame, batchId: Long): Unit = {
+  def writer(spark: SparkSession): () => RecordWriter = {
     val sinkId = id
-    TripEventCodec.serialize(events).foreachPartition { rows: Iterator[Row] =>
-      val q = SinkStores.queue(sinkId)
-      rows.foreach(r => q.add(("0", r.getString(0)))) // fixed partition key
-    }
+    () => new QueueWriter(sinkId, "0") // fixed partition key
   }
 }
 
 /** Kafka stub (at-least-once, matching the reference's actual default
   * producer semantic — StreamingEtl.java:207-212); executor-side like the
   * Kinesis stub. */
-final class KafkaStubSink(topic: String) extends SinkProvider {
+final class KafkaStubSink(topic: String) extends RecordSink {
   val name = "kafka"
   private val id = java.util.UUID.randomUUID().toString
   def records: ConcurrentLinkedQueue[(String, String)] = SinkStores.queue(id)
   def close(): Unit = SinkStores.drop(id)
 
-  def write(events: DataFrame, batchId: Long): Unit = {
+  def writer(spark: SparkSession): () => RecordWriter = {
     val (sinkId, t) = (id, topic)
-    TripEventCodec.serialize(events).foreachPartition { rows: Iterator[Row] =>
-      val q = SinkStores.queue(sinkId)
-      rows.foreach(r => q.add((t, r.getString(0))))
-    }
+    () => new QueueWriter(sinkId, t)
   }
 }
 
-/** Discarding sink (A15) — forces full computation, writes nothing. */
-final class NoopSink extends SinkProvider {
+/** Discarding sink (A15) — forces full computation, writes nothing. On its
+  * own it is a plain `count()`, with no serialization; beside other record
+  * sinks it counts the records of their shared pass. */
+final class NoopSink extends RecordSink {
   val name = "noop"
-  @volatile var rowsSeen = 0L
-  def write(events: DataFrame, batchId: Long): Unit =
-    rowsSeen += events.count()
+  private var seen: LongAccumulator = _
+
+  private def accumulator(spark: SparkSession): LongAccumulator = synchronized {
+    if (seen == null) seen = spark.sparkContext.longAccumulator(s"$name.rowsSeen")
+    seen
+  }
+
+  /** Rows written so far, summed on the driver. */
+  def rowsSeen: Long = synchronized(if (seen == null) 0L else seen.sum)
+
+  override def write(events: DataFrame, batchId: Long): Unit =
+    accumulator(events.sparkSession).add(events.count())
+
+  def writer(spark: SparkSession): () => RecordWriter = {
+    val acc = accumulator(spark)
+    () => new NoopSink.CountingWriter(acc)
+  }
+}
+
+object NoopSink {
+  private final class CountingWriter(acc: LongAccumulator) extends RecordWriter {
+    private var n = 0L
+    def write(index: String, id: String, doc: String): Unit = n += 1
+    def close(): Unit = acc.add(n)
+  }
 }

@@ -1,10 +1,19 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
+import org.apache.spark.storage.StorageLevel
 
 /** Streaming parity (SURVEY §7 M3): read-once fan-out, per-record dynamic ES
-  * routing, fixed Kinesis partition key, and kill-restart idempotence.
+  * routing, fixed Kinesis partition key, kill-restart idempotence, and the
+  * shape of each batch's fan-out (jobs, caches, passes over the input).
   */
 class EtlStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -137,4 +146,174 @@ class EtlStreamSpec extends SparkSpec {
     val total = spark.read.parquet(s"$out/job_start=$jobStart").count()
     assert(total == 25) // batch-scoped file names are replay-safe
   }
+
+  test("kill in mid fan-out: a replayed batch converges in every sink (A19)") {
+    val in = tmpDir("mf-in"); val out = tmpDir("mf-out"); val ckpt = tmpDir("mf-ckpt")
+    val n = 25
+    val jobStart = System.currentTimeMillis()
+    // maxActions=3: the ES writer flushes, and fails, after the third
+    // record of its partition has reached the Kinesis and Kafka writers
+    val es = new ElasticsearchStubSink(bulkFlushMaxActions = 3, maxRetries = 2)
+    val kinesis = new KinesisStubSink
+    val kafka = new KafkaStubSink("trips")
+    def run() = {
+      val q = EtlStream.start(spark, new JsonFileSource(in),
+        Seq(new FileSink(out, parquet = true, jobStart), es, kinesis, kafka), ckpt,
+        Trigger.AvailableNow())
+      q.awaitTermination(120000)
+    }
+    writeBatchFile(in, "b0.json", (0 until n).map(i => line(i, if (i % 3 == 0) "other" else "trip")))
+    es.injectRejections(Int.MaxValue) // beyond maxRetries on every flush
+    intercept[StreamingQueryException](run())
+    assert(es.count == 0)
+    assert(kinesis.records.size() > 0 && kinesis.records.size() < n,
+      s"the first run must fail partway through the record pass (${kinesis.records.size()})")
+
+    es.injectRejections(0)
+    run() // restart from the same checkpoint: batch 0 replays
+    val want = spark.read.parquet(s"$out/job_start=$jobStart")
+    assert(want.count() == n) // FileSink overwrote its own batch files
+    assert(es.count == n) // upserts by (type, trip_id)
+    val docs = es.store.values().asScala.toSet
+    assert(docs.size == n)
+    // at-least-once: every doc, possibly twice
+    for (sink <- Seq(kinesis.records, kafka.records)) {
+      assert(sink.size() >= n)
+      assert(sink.asScala.map(_._2).toSet == docs)
+    }
+  }
+
+  /** The jobs launched while it is registered: (job group, batch id, shape).
+    * A streaming query's jobs carry its run id as their group and the
+    * micro-batch id as a local property. The shape tells a single pass
+    * over the input ("pass": one stage of result tasks, as
+    * `foreachPartition` runs) from the stages of a shuffle ("map": a job of
+    * map tasks, as AQE submits each map stage; "result": a result stage
+    * behind a shuffle). */
+  private final class JobTap extends SparkListener {
+    private val started = new ConcurrentLinkedQueue[(String, String, Seq[Int])]()
+    private val taskTypes = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val p = e.properties
+      started.add((p.getProperty("spark.jobGroup.id"), p.getProperty("streaming.sql.batchId"),
+        e.stageInfos.map(_.stageId)))
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      taskTypes.put(e.stageId, e.taskType); ()
+    }
+    private def shape(stages: Seq[Int]): String =
+      if (taskTypes.get(stages.max) == "ShuffleMapTask") "map"
+      else if (stages.size == 1) "pass"
+      else "result"
+    /** Job shapes per batch of the streaming run `runId`, once every event
+      * up to now has been delivered (a marker job's start, queued behind
+      * them, has arrived). */
+    def byBatch(runId: String): Map[Long, Seq[String]] = {
+      val marker = java.util.UUID.randomUUID().toString
+      spark.sparkContext.setJobGroup(marker, "listener flush")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.asScala.exists(_._1 == marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      started.asScala.toSeq.collect { case (`runId`, b, stages) => (b.toLong, shape(stages)) }
+        .groupMap(_._1)(_._2)
+    }
+  }
+
+  /** A record sink that counts what it is handed and notes, per batch
+    * write, whether the driver's cache was empty when its writer opened. */
+  private final class ProbeSink extends RecordSink {
+    val name = "probe"
+    val rows = spark.sparkContext.longAccumulator("probe.rows")
+    val opened = new ConcurrentLinkedQueue[Boolean]()
+    def writer(s: SparkSession): () => RecordWriter = {
+      opened.add(s.sharedState.cacheManager.isEmpty)
+      val acc = rows
+      () => new ProbeWriter(acc)
+    }
+  }
+
+  /** A frame sink decorator noting, per write, whether the batch is cached. */
+  private final class FrameProbe(inner: SinkProvider) extends SinkProvider {
+    val name = inner.name
+    val writes = new ConcurrentLinkedQueue[(Long, Boolean)]() // (batchId, cached)
+    def write(events: DataFrame, batchId: Long): Unit = {
+      writes.add((batchId, events.storageLevel != StorageLevel.NONE))
+      inner.write(events, batchId)
+    }
+  }
+
+  /** Three one-file batches of `perBatch` events through `sinks`; returns
+    * the run's job shapes per batch and how many source lines were read. */
+  private def fanOut(tag: String, perBatch: Int, sinks: Seq[SinkProvider])
+      : (Map[Long, Seq[String]], Long) = {
+    val in = tmpDir(s"$tag-in"); val ckpt = tmpDir(s"$tag-ckpt")
+    for (b <- 0 until 3)
+      writeBatchFile(in, s"b$b.json", (0 until perBatch).map(i => line(b * perBatch + i)))
+    val reads = spark.sparkContext.longAccumulator(s"$tag.reads")
+    val counted = udf { (v: String) => reads.add(1); v }
+    val source = new SourceProvider {
+      def read(s: SparkSession): DataFrame =
+        new JsonFileSource(in, maxFilesPerTrigger = 1).read(s).select(counted(col("value")).as("value"))
+    }
+    val tap = new JobTap
+    spark.sparkContext.addSparkListener(tap)
+    try {
+      val q = EtlStream.start(spark, source, sinks, ckpt, Trigger.AvailableNow())
+      q.awaitTermination(120000)
+      q.exception.foreach(e => throw e)
+      (tap.byBatch(q.runId.toString), reads.sum)
+    } finally spark.sparkContext.removeSparkListener(tap)
+  }
+
+  test("fan-out shape: record sinks share one job per batch, with nothing cached") {
+    val (es, kinesis, kafka, noop, probe) = (new ElasticsearchStubSink, new KinesisStubSink,
+      new KafkaStubSink("trips"), new NoopSink, new ProbeSink)
+    val (jobs, reads) = fanOut("shape-rec", 10, Seq(noop, es, kinesis, kafka, probe))
+    assert(jobs.keySet == Set(0L, 1L, 2L))
+    jobs.foreach { case (b, shapes) => assert(shapes == Seq("pass"), s"batch $b ran $shapes") }
+    assert(reads == 30) // each line decoded once
+    assert(probe.rows.sum == 30)
+    assert(probe.opened.asScala.toSeq == Seq(true, true, true))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(noop.rowsSeen == 30 && es.count == 30)
+    assert(kinesis.records.size() == 30 && kafka.records.size() == 30)
+    Seq(es.close _, kinesis.close _, kafka.close _).foreach(_())
+  }
+
+  test("fan-out shape: a file sink beside record sinks persists once, then releases it") {
+    val file = new FrameProbe(new FileSink(tmpDir("shape-file-out"), parquet = true))
+    val (es, noop, probe) = (new ElasticsearchStubSink, new NoopSink, new ProbeSink)
+    val (jobs, reads) = fanOut("shape-file", 10, Seq(file, es, noop, probe))
+    assert(reads == 30) // the record pass reads the cached batch
+    // one FileSink write over the cached batch, one record pass, per batch
+    assert(file.writes.asScala.toSeq.sortBy(_._1) == Seq(0L -> true, 1L -> true, 2L -> true))
+    assert(probe.opened.asScala.toSeq == Seq(false, false, false))
+    // AQE builds the cache in a job of its own (a pass over the source),
+    // the FileSink writes through a shuffle, and the record sinks share
+    // one pass over the cached batch
+    assert(jobs.keySet == Set(0L, 1L, 2L))
+    jobs.foreach { case (b, shapes) =>
+      assert(shapes == Seq("pass", "map", "result", "pass"), s"batch $b ran $shapes")
+    }
+    assert(probe.rows.sum == 30 && noop.rowsSeen == 30 && es.count == 30)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    es.close()
+  }
+
+  test("fan-out shape: the discard sink on its own is a count, with no serialization") {
+    val noop = new NoopSink
+    val (jobs, reads) = fanOut("shape-noop", 10, Seq(noop))
+    assert(jobs.keySet == Set(0L, 1L, 2L))
+    jobs.foreach { case (b, shapes) =>
+      assert(!shapes.contains("pass"), s"batch $b ran $shapes")
+    }
+    assert(reads == 30 && noop.rowsSeen == 30)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+}
+
+private final class ProbeWriter(acc: org.apache.spark.util.LongAccumulator) extends RecordWriter {
+  def write(index: String, id: String, doc: String): Unit = acc.add(1)
+  def close(): Unit = ()
 }
