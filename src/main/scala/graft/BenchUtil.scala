@@ -13,7 +13,7 @@ object BenchUtil {
     else (sorted(n / 2 - 1) + sorted(n / 2)) / 2
   }
 
-  /** The per-run list as a JSON array of 1-d.p. seconds. */
-  def runsJson(secs: Seq[Double]): String =
-    secs.map(s => "%.1f".format(s)).mkString("[", ",", "]")
+  /** The per-run list as a JSON array of seconds to `decimals` places. */
+  def runsJson(secs: Seq[Double], decimals: Int): String =
+    secs.map(s => s"%.${decimals}f".format(s)).mkString("[", ",", "]")
 }

@@ -110,7 +110,7 @@ object CorpusBench {
     require(measured.map(_._2).distinct.size == 1,
       s"kept diverged across runs: ${measured.map(_._2).mkString(", ")}")
     val medianSec = BenchUtil.medianOf(measured.map(_._1))
-    val runsJson = BenchUtil.runsJson(measured.map(_._1))
+    val runsJson = BenchUtil.runsJson(measured.map(_._1), 1)
     println(s"""{"metric":"corpus_throughput","docs":$n,""" +
       s""""gen_sec":${"%.1f".format(genSec)},""" +
       s""""sec":${"%.1f".format(medianSec)},"sec_runs":$runsJson,""" +

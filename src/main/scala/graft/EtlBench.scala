@@ -63,15 +63,15 @@ object EtlBench {
         System.err.println(s"[etl-bench] run $r TIMED OUT after ${etlSec}s with ${noop.rowsSeen}/$n rows — no metric emitted")
         sq.stop(); spark.stop(); sys.exit(1)
       }
-      println(s"""{"metric":"etl_throughput_run","run":$r,"etl_sec":${"%.1f".format(etlSec)},"records_per_sec":${(noop.rowsSeen / etlSec).round},"parsed":${noop.rowsSeen}}""")
+      println(s"""{"metric":"etl_throughput_run","run":$r,"etl_sec":${"%.3f".format(etlSec)},"records_per_sec":${(noop.rowsSeen / etlSec).round},"parsed":${noop.rowsSeen}}""")
       (etlSec, noop.rowsSeen)
     }
 
     val medianSec = BenchUtil.medianOf(measured.map(_._1))
     val parsed = measured.head._2
     val recPerSec = (parsed / medianSec).round
-    val runsJson = BenchUtil.runsJson(measured.map(_._1))
-    println(s"""{"metric":"etl_throughput","records":$n,"parsed":$parsed,"gen_sec":${"%.1f".format(genSec)},"etl_sec":${"%.1f".format(medianSec)},"etl_sec_runs":$runsJson,"records_per_sec":$recPerSec,"sinks":${if (withParquet) 2 else 1},"reference_envelope_rec_per_sec":16000}""")
+    val runsJson = BenchUtil.runsJson(measured.map(_._1), 3)
+    println(s"""{"metric":"etl_throughput","records":$n,"parsed":$parsed,"gen_sec":${"%.3f".format(genSec)},"etl_sec":${"%.3f".format(medianSec)},"etl_sec_runs":$runsJson,"records_per_sec":$recPerSec,"sinks":${if (withParquet) 2 else 1},"reference_envelope_rec_per_sec":16000}""")
     spark.stop()
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.etl.EtlConfig
 import graft.streaming._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** The reference's entry point rebuilt (StreamingEtl.main, SURVEY §3):
@@ -75,11 +74,8 @@ object EtlMain {
     val cfg = EtlConfig.fromArgsAndProperties(args.toSeq, props).validated
     val (source, sinks) = wire(cfg)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.withGraftConfs(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus, "graft-etl")
     spark.sparkContext.setLogLevel("WARN")
 
     val trigger =

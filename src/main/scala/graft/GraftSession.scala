@@ -42,38 +42,6 @@ object GraftSession {
     .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
     .config("spark.ui.enabled", "false")
 
-  /** Production configuration for a real multi-executor cluster at the
-    * ~100 TB design point. Not applied to local sessions (the local rig
-    * wants small fixed parallelism for determinism); documented + tested so
-    * cluster deployments start from a reviewed baseline instead of defaults.
-    *
-    *  - shuffle.partitions 4096: ~25 GB per shuffle partition at 100 TB input
-    *    scans that reduce 10×; AQE coalesces small stages back down.
-    *  - maxPartitionBytes 256 MB: fewer, fuller scan tasks on wide parquet.
-    *  - adaptive.advisoryPartitionSizeInBytes 128 MB: AQE's coalesce/skew
-    *    target.
-    *  - autoBroadcastJoinThreshold 64 MB: dims up to ~64 MB broadcast
-    *    instead of shuffling the fact side (executors are large at this
-    *    scale).
-    *  - shuffle spill compression + zstd: shuffle volume dominates cost.
-    */
-  def clusterConfs(shufflePartitions: Int = 4096): Map[String, String] = Map(
-    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
-    "spark.sql.files.maxPartitionBytes" -> (256L * 1024 * 1024).toString,
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (128L * 1024 * 1024).toString,
-    "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
-    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> (256L * 1024 * 1024).toString,
-    "spark.io.compression.codec" -> "zstd",
-    "spark.shuffle.compress" -> "true",
-    "spark.shuffle.spill.compress" -> "true")
-
-  /** Cluster-shaped builder: graft confs + the 100 TB baseline above. */
-  def clusterBuilder(b: SparkSession.Builder,
-                     shufflePartitions: Int = 4096): SparkSession.Builder =
-    clusterConfs(shufflePartitions).foldLeft(withGraftConfs(b)) {
-      case (bb, (k, v)) => bb.config(k, v)
-    }
-
   /** Local session for tests and ad-hoc runs. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors().min(32),
             shufflePartitions: Int = 32,

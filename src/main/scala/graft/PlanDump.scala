@@ -1,12 +1,44 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Regenerates PLANS.md: formatted physical plans for headline queries —
-  * the inspectable record of pushdown/pruning/broadcast/top-k behavior.
+import org.apache.spark.sql.execution.FormattedMode
+/** Plan capture, two ways.
+  *
+  * With no arguments or only `[outFile]` it regenerates PLANS.md: formatted
+  * physical plans for headline queries at sf0.001 — the inspectable record
+  * of pushdown/pruning/broadcast/top-k behavior.
+  *
+  * With `<outDir> <tag> <sfDir> <query> [query…]` it writes
+  * `.explain("formatted")` for each named query to
+  * `<outDir>/<query>_<tag>.txt` — the before/after evidence files an
+  * OPTIMIZATION_r*.md cites. These run at the bench session shape
+  * (`local[$SPARK_GRAFT_CPUS]`, shuffle partitions = cpus) so the captured
+  * plans are the ones the bench executes, not the sf0.001 PLANS.md shapes.
+  *
   * Usage: runMain graft.PlanDump [outFile]
+  *        runMain graft.PlanDump <outDir> <tag> <sfDir> <query> [query…]
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("PLANS.md")
+  def main(args: Array[String]): Unit =
+    if (args.length > 1) explainTo(args.toSeq) else plansMd(args.headOption.getOrElse("PLANS.md"))
+
+  private def explainTo(args: Seq[String]): Unit = {
+    require(args.length >= 4, "usage: PlanDump <outDir> <tag> <sfDir> <query> [query…]")
+    val Seq(outDir, tag, sfDir, queries @ _*) = args
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus, "graft-plan-dump")
+    spark.sparkContext.setLogLevel("WARN")
+    Files.createDirectories(Paths.get(outDir))
+    queries.foreach { name =>
+      val fn = SparkEntry.queries.getOrElse(name,
+        sys.error(s"unknown query: $name"))
+      val txt = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+      Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), txt)
+      println(s"[explain] wrote $outDir/${name}_$tag.txt")
+    }
+    spark.stop()
+  }
+
+  private def plansMd(out: String): Unit = {
     val spark = GraftSession.local(4, 4)
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"

@@ -1,15 +1,17 @@
 package graft
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.metrics.{JobMetrics, TaskRow}
 
-/** Optimization-round per-job profiler: runs each named query once (count()
-  * action, the Bench methodology) with a SparkListener attached and prints,
-  * per Spark JOB, wall seconds, summed task time, shuffle read/write bytes
-  * and input bytes — the structural evidence wall-clock A/Bs on a noisy
-  * host cannot give (the guide's §1 empirical loop without a UI: this
-  * sandbox runs spark.ui.enabled=false). Job rows attribute compose-time
-  * actions (adaptive sizing counts, driver collects) to the query that
-  * issued them, which is exactly what per-query bench seconds hide.
+/** Optimization-round per-job profiler: runs each named query into the noop
+  * sink (the whole answer, as perfbench's `queries_headline` times it — a
+  * `count()` lets Catalyst prune what it does not need) with [[JobMetrics]]
+  * attached and prints, per Spark JOB, wall seconds, summed task time,
+  * shuffle read/write bytes and input bytes — the structural evidence
+  * wall-clock A/Bs on a noisy host cannot give, and that graft sessions
+  * (spark.ui.enabled=false) show nowhere else. Job rows
+  * attribute compose-time actions (adaptive sizing counts, driver collects)
+  * to the query that issued them, which is exactly what per-query bench
+  * seconds hide. The header's row count comes from a `count()` run after
+  * the job rows are read.
   *
   * Usage: runMain graft.ProfileQuery <sfDir> <query> [query…]
   */
@@ -17,54 +19,19 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, queries @ _*) = args
     require(queries.nonEmpty, "ProfileQuery: name at least one query")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.withGraftConfs(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus, "graft-profile")
     spark.sparkContext.setLogLevel("WARN")
     // warmup (the Bench preamble)
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
 
-    case class JobAgg(var start: Long = 0L, var end: Long = 0L,
-      var taskMs: Long = 0L, var shufRead: Long = 0L, var shufWrite: Long = 0L,
-      var input: Long = 0L, var tasks: Int = 0, var desc: String = "",
-      var gcMs: Long = 0L, var deserMs: Long = 0L, var cpuMs: Long = 0L)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobAgg]()
-    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val a = new JobAgg(start = j.time)
-        a.desc = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs.put(j.jobId, a)
-        j.stageIds.foreach(sid => stageToJob.put(sid, j.jobId))
-      }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        val a = jobs.get(j.jobId); if (a != null) a.end = j.time
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val jid = stageToJob.get(t.stageId)
-        val a = jobs.get(jid)
-        if (a != null && t.taskMetrics != null) a.synchronized {
-          a.taskMs += t.taskMetrics.executorRunTime
-          a.shufRead += t.taskMetrics.shuffleReadMetrics.totalBytesRead
-          a.shufWrite += t.taskMetrics.shuffleWriteMetrics.bytesWritten
-          a.input += t.taskMetrics.inputMetrics.bytesRead
-          a.gcMs += t.taskMetrics.jvmGCTime
-          a.deserMs += t.taskMetrics.executorDeserializeTime
-          a.cpuMs += t.taskMetrics.executorCpuTime / 1000000L
-          a.tasks += 1
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val recorder = JobMetrics.attach(spark.sparkContext)
     queries.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))
+      def answer(): Unit =
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       // run 1 warms session JIT/codegen (a cold session charges ~0.5 s of
       // interpreter-mode blocking to EVERY task of the first queries —
       // measured on q01/q13); run 2 is the reported, representative one.
@@ -76,29 +43,34 @@ object ProfileQuery {
       val cold = sys.env.get("SPARK_GRAFT_PROFILE_COLD").contains("1")
       val run1 = if (cold) 0.0 else {
         val w0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        answer()
         (System.nanoTime() - w0) / 1e9
       }
-      jobs.clear(); stageToJob.clear()
+      recorder.flush()
+      recorder.clear()
       spark.sparkContext.setJobDescription(s"profile:$name")
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
+      answer()
       val wall = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
-      Thread.sleep(300) // let listener events drain
-      import scala.jdk.CollectionConverters._
-      val rows = jobs.asScala.toSeq.sortBy(_._1)
+      recorder.flush()
+      val jobs = recorder.jobs
+      val tasks = recorder.tasks.groupBy(_.job)
+      val n = fn(spark, sfDir).count()
       println(f"== $name rows=$n wall=$wall%.2fs run1=$run1%.2fs " +
-        f"jobs=${rows.size}")
-      rows.foreach { case (id, a) =>
-        println(f"  job $id%3d wall=${(a.end - a.start) / 1e3}%7.2fs " +
-          f"task=${a.taskMs / 1e3}%8.2fs tasks=${a.tasks}%4d " +
-          f"cpu=${a.cpuMs / 1e3}%7.2fs gc=${a.gcMs / 1e3}%6.2fs " +
-          f"deser=${a.deserMs / 1e3}%6.2fs " +
-          f"in=${a.input / 1e6}%8.1fMB sr=${a.shufRead / 1e6}%8.1fMB " +
-          f"sw=${a.shufWrite / 1e6}%8.1fMB")
+        f"jobs=${jobs.size}")
+      jobs.foreach { j =>
+        val ts = tasks.getOrElse(j.id, Nil)
+        def total(f: TaskRow => Long): Long = ts.map(f).sum
+        println(f"  job ${j.id}%3d wall=${(j.endMs - j.startMs) / 1e3}%7.2fs " +
+          f"task=${total(_.runMs) / 1e3}%8.2fs tasks=${ts.size}%4d " +
+          f"cpu=${total(_.cpuMs) / 1e3}%7.2fs gc=${total(_.gcMs) / 1e3}%6.2fs " +
+          f"deser=${total(_.deserializeMs) / 1e3}%6.2fs " +
+          f"in=${total(_.inputBytes) / 1e6}%8.1fMB sr=${total(_.shuffleReadBytes) / 1e6}%8.1fMB " +
+          f"sw=${total(_.shuffleWriteBytes) / 1e6}%8.1fMB")
       }
     }
+    recorder.detach()
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.metrics.JobMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * budget — locating the crossover where label propagation's per-round
   * cheapness loses to star's round count.
   *
-  * Usage: `runMain graft.ScaleBench [docs|chains|q74ab|j37ab|dedupreport|ann]`.
-  * `q74ab` A/Bs the containment-join strategies on the 10× corpus;
-  * `j37ab` A/Bs the Jaccard pair-stage strategies on the sf0.1 corpus;
+  * Usage: `runMain graft.ScaleBench [mode]`, mode one of docs (default),
+  * chains, select, leak, ann, bpe, unigram, dedupreport, vecstream, graph,
+  * interval, tokingest, cdc, ivm, blocklist, linkage, quantile.
   * `dedupreport` measures the one-pass [[operators.DedupReport]] against
   * the contract-independent q66+q79 pair; `ann` scales the
   * ANN/similarity-search family (walls, recall@10 vs exact, IVF
@@ -111,24 +111,6 @@ object ScaleBench {
     walk(df.queryExecution.executedPlan).sum
   }
 
-  /** Task-level shuffle/skew accounting for everything run inside `body`. */
-  private final class TaskStats extends SparkListener {
-    @volatile var shuffleBytes = 0L
-    @volatile var inputBytes = 0L
-    @volatile var maxTaskMs = 0L
-    @volatile var tasks = 0L
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-      val m = t.taskMetrics
-      if (m != null) {
-        shuffleBytes += m.shuffleReadMetrics.totalBytesRead +
-          m.shuffleWriteMetrics.bytesWritten
-        inputBytes += m.inputMetrics.bytesRead
-        maxTaskMs = math.max(maxTaskMs, m.executorRunTime)
-        tasks += 1
-      }
-    }
-  }
-
   /** Each pipeline runs TWICE: the first (cold) wall is recorded but the
     * scaling exponent reads the second (warm) run with task stats — a
     * single-shot measurement charges JIT/codegen/cache warmup to whichever
@@ -140,25 +122,23 @@ object ScaleBench {
     val c0 = System.nanoTime()
     body
     val cold = (System.nanoTime() - c0) / 1e9
-    val stats = new TaskStats
-    spark.sparkContext.addSparkListener(stats)
+    val stats = JobMetrics.attach(spark.sparkContext)
     val t0 = System.nanoTime()
     var wall = 0.0
     val rows =
       try { val r = body; wall = (System.nanoTime() - t0) / 1e9; r }
       finally {
-        // drain the async listener bus so late task-end events land in
-        // `stats` before it detaches (listenerBus itself is private[spark]);
-        // the wall clock stops BEFORE this drain — a fixed 300 ms inside
-        // the timed window would bias every scaling exponent downward
-        Thread.sleep(300)
-        spark.sparkContext.removeSparkListener(stats)
+        // the wall clock stops BEFORE the drain: the flush's marker job
+        // inside the timed window would bias every scaling exponent
+        stats.flush()
+        stats.detach()
       }
+    val tasks = stats.tasks
     println(s"""{"bench":"scale","pipeline":"$name","mult":$mult,""" +
       s""""wall_sec":$wall,"cold_sec":$cold,"rows":$rows,""" +
-      s""""shuffle_bytes":${stats.shuffleBytes},""" +
-      s""""input_bytes":${stats.inputBytes},""" +
-      s""""max_task_ms":${stats.maxTaskMs},"tasks":${stats.tasks}}""")
+      s""""shuffle_bytes":${tasks.map(t => t.shuffleReadBytes + t.shuffleWriteBytes).sum},""" +
+      s""""input_bytes":${tasks.map(_.inputBytes).sum},""" +
+      s""""max_task_ms":${tasks.map(_.runMs).maxOption.getOrElse(0L)},"tasks":${tasks.size}}""")
   }
 
   private val pipelines = Seq(
@@ -167,12 +147,8 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("docs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.withGraftConfs(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, cpus, "graft-scale-bench")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect() // session warmup
     mode match {
@@ -240,20 +216,6 @@ object ScaleBench {
             .foreach { q =>
               measured(spark, q, m)(SparkEntry.queries(q)(spark, dir).count())
             }
-        }
-      case "q74ab" =>
-        // blocked vs tiled on the 10× corpus at full session width — the
-        // straggler diagnosis: blocked's task granularity is whole blocks
-        import graft.functions.TextFunctions
-        import graft.operators.SimilarityJoin
-        val docs = spark.read.parquet("/tmp/graft-scale/m10/documents.parquet")
-          .select(col("doc_id").as("id"), col("source").as("block"),
-            TextFunctions.tokenSet(col("text")).as("w"))
-        (1 to 2).foreach { r =>
-          measured(spark, s"q74_blocked_r$r", 10)(
-            SimilarityJoin.overlapBlocked(docs, 0.95).count())
-          measured(spark, s"q74_tiled8_r$r", 10)(
-            SimilarityJoin.overlapBlockedTiled(docs, 0.95, chunks = 8).count())
         }
       case "ann" =>
         // the ANN/similarity-search family at 1×/3×/10× the sf0.1 vector
@@ -475,27 +437,6 @@ object ScaleBench {
             s""""cells":$nCells,"nprobe":2,""" +
             s""""probe_files_read":$read,"files_total":$total}""")
         }
-      case "j37ab" =>
-        // Jaccard pair-stage strategy A/B on the REAL sf0.1 corpus:
-        // postings (q37's regime choice) vs the hashed-merge blocked
-        // variant, plain and staged, interleaved ×2
-        import graft.functions.TextFunctions
-        import graft.operators.SimilarityJoin
-        val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        val docs = Tables.documents(spark, d)
-          .select(col("doc_id").as("id"), col("source").as("block"),
-            TextFunctions.tokenSet(col("text")).as("w"))
-        (1 to 2).foreach { r =>
-          measured(spark, s"j37_postings_r$r", 1)(
-            SimilarityJoin.postingsCount(docs, 0.8).count())
-          measured(spark, s"j37_blocked_r$r", 1)(
-            SimilarityJoin.jaccardBlocked(docs, 0.8).count())
-          measured(spark, s"j37_staged_postings_r$r", 1)(
-            SimilarityJoin.stagedPostingsCount(spark, docs, 0.8).count())
-          measured(spark, s"j37_staged_blocked_r$r", 1)(
-            SimilarityJoin.staged(spark, docs, 0.8)(
-              SimilarityJoin.jaccardBlocked(_, _)).count())
-        }
       case "bpe" =>
         // BPE training cost vs corpus size: the loop folds to the
         // distinct-word table first, so the per-iteration cost should
@@ -616,136 +557,6 @@ object ScaleBench {
           measured(spark, s"rebuild_full_r$r", 1)(
             operators.DedupReport.assignComponents(spark, docsAll).count())
         } finally standing.release()
-      case "q69prof" =>
-        // stage breakdown for q69 at the given dir: pair volumes and the
-        // component-resolution cost under both collapse modes
-        val d = args.lift(1).getOrElse("/tmp/graft-sf1")
-        val e = Tables.embeddings(spark, d)
-        import graft.functions.VectorFunctions.cosineNative
-        val W = org.apache.spark.sql.expressions.Window
-          .partitionBy("label", "embedding")
-        val numbered = e.withColumn("grp_id", min("vec_id").over(W))
-        val reps = numbered.filter(col("vec_id") === col("grp_id"))
-        measured(spark, "q69_direct_pairs", 1) {
-          val a = e.select(col("vec_id").as("a_id"), col("label"),
-            col("embedding").as("a_emb"))
-          val b = e.select(col("vec_id").as("b_id"),
-            col("label").as("b_label"), col("embedding").as("b_emb"))
-          a.join(b, col("label") === col("b_label") &&
-              col("a_id") < col("b_id"))
-            .filter(cosineNative(col("a_emb"), col("b_emb")) >= 0.35)
-            .count()
-        }
-        measured(spark, "q69_rep_pairs", 1) {
-          val ra = reps.select(col("grp_id").as("a_id"), col("label"),
-            col("embedding").as("a_emb"))
-          val rb = reps.select(col("grp_id").as("b_id"),
-            col("label").as("b_label"), col("embedding").as("b_emb"))
-          ra.join(rb, col("label") === col("b_label") &&
-              col("a_id") < col("b_id"))
-            .filter(cosineNative(col("a_emb"), col("b_emb")) >= 0.35)
-            .count()
-        }
-        measured(spark, "q69_full_grouped", 1) {
-          graft.operators.VectorQueries
-            .cosineDedup(e, collapseIdentical = true).count()
-        }
-      case "graphlake" =>
-        // Does a CLUSTERED stored layout of the co-purchase edge list buy
-        // the graph consumers anything (the HilbertLayoutSpec question
-        // asked of iteration shuffle, not scan skipping)? Three physical
-        // layouts of the SAME symmetrized edges (src, dst LONG):
-        //   plain    — the shipped memo's unordered parquet
-        //   sorted   — range-partitioned + sorted by dst (a 2-column edge
-        //              list's space-filling key degenerates to the join
-        //              key itself — this IS the Hilbert/degree clustering
-        //              candidate, and measures the compression win)
-        //   bucketed — an external bucketed TABLE on dst: the ONLY layout
-        //              the planner can exploit (bucket metadata elides
-        //              the edge-side exchange of a dst-keyed shuffle join)
-        // measured in the two regimes that matter:
-        //   rescan — the 100 TB regime where edges do NOT fit in cache:
-        //            3 LPA rounds each re-reading the lake, broadcast OFF,
-        //            so every round's label join shuffles; bucketing
-        //            should strip the |E|-row edge-side exchange per round
-        //   cached — the shipped q134 pipeline (edges persisted once,
-        //            rounds broadcast): the working set lives in the block
-        //            manager, so stored layout should be INVISIBLE here
-        val d = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        val base = "/tmp/graft-scale/graphlake"
-        val li = Tables.lineitem(spark, d)
-          .select("l_orderkey", "l_partkey").distinct()
-        val e0 = li.as("x").join(li.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey") &&
-              col("x.l_partkey") < col("y.l_partkey"))
-          .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
-          .distinct()
-        val sym = e0.select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(e0.select(col("b").as("src"), col("a").as("dst")))
-        sym.write.mode("overwrite").parquet(s"$base/plain")
-        spark.read.parquet(s"$base/plain")
-          .repartitionByRange(32, col("dst")).sortWithinPartitions("dst")
-          .write.mode("overwrite").parquet(s"$base/sorted")
-        spark.sql("DROP TABLE IF EXISTS graft_scale_edges_bkt")
-        spark.read.parquet(s"$base/plain")
-          .write.mode("overwrite").bucketBy(32, "dst").sortBy("dst")
-          .option("path", s"$base/bucketed")
-          .saveAsTable("graft_scale_edges_bkt")
-        def bytesOf(p: String): Long = {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.getContentSummary(hp).getLength
-        }
-        println(s"""{"bench":"graphlake","edge_rows":${sym.count()},""" +
-          s""""bytes_plain":${bytesOf(s"$base/plain")},""" +
-          s""""bytes_sorted":${bytesOf(s"$base/sorted")},""" +
-          s""""bytes_bucketed":${bytesOf(s"$base/bucketed")}}""")
-        val reads: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-          "plain" -> (() => spark.read.parquet(s"$base/plain")),
-          "sorted" -> (() => spark.read.parquet(s"$base/sorted")),
-          "bucketed" -> (() => spark.table("graft_scale_edges_bkt")))
-        // 3 deterministic LPA rounds, the lake re-read EVERY round (the
-        // cache-doesn't-fit simulation); labels localCheckpoint per round
-        // so each round is its own job, never one fused lineage
-        def lpaRescan(read: () => org.apache.spark.sql.DataFrame): Long = {
-          var labels = read().select(col("src").as("node")).distinct()
-            .select(col("node"), col("node").as("lbl")).localCheckpoint()
-          for (_ <- 1 to 3) {
-            val nl = read().join(
-                labels.select(col("node").as("dst"), col("lbl")), "dst")
-              .select(col("src").as("node"), col("lbl"))
-            val counts = nl.groupBy("node", "lbl").agg(count(lit(1)).as("c"))
-            labels = counts.groupBy("node")
-              .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-              .select(col("node"), (-col("m.nl")).as("lbl")).localCheckpoint()
-          }
-          labels.count()
-        }
-        val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        try {
-          (1 to 2).foreach { r =>
-            reads.foreach { case (nme, rd) =>
-              measured(spark, s"lpa_rescan_${nme}_r$r", 1)(lpaRescan(rd))
-            }
-          }
-        } finally {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-          spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        }
-        // the shipped cached pipeline over each layout (persist once,
-        // broadcast rounds) — expect layout-invariance
-        (1 to 2).foreach { r =>
-          reads.foreach { case (nme, rd) =>
-            measured(spark, s"lpa_cached_${nme}_r$r", 1)(
-              operators.LabelPropagation.run(
-                rd().filter(col("src") < col("dst"))
-                  .select(col("src").as("a"), col("dst").as("b")),
-                3, driverMaxEdges = 0L).count())
-          }
-        }
-        spark.sql("DROP TABLE graft_scale_edges_bkt")
       case "vecstream" =>
         // streaming vector-lake ingest throughput: file-arrival stream →
         // VectorStream cell-partitioned lake (assignment + drift observe +
@@ -814,86 +625,6 @@ object ScaleBench {
           val rows = spark.read.parquet(lake).count()
           println(s"""{"bench":"vecstream_pq","run":$r,"rows":$rows,""" +
             s""""wall_sec":$wall,"rows_per_sec":${(rows / wall).toLong}}""")
-        }
-      case "recenter" =>
-        // incremental IVF re-centroiding under drift at 1×/3×/10× lake
-        // size, with cells ∝ corpus (constant cell size — the layout the
-        // IvfStorage scaladoc prescribes at scale). A drifted batch lands
-        // in a BOUNDED cell set; recenter's REWRITE tracks membership
-        // CHANGE (in a well-separated cosine regime a mean-refit moves
-        // few or zero members — rewritten_rows stays ~0 across 10× lake
-        // growth) while the ivf_full_rebuild twin rows rewrite lake_rows
-        // every time. That rewritten-rows/wall gap is the operator's
-        // value; exactness vs the rebuild is spec-pinned (IvfStorageSpec,
-        // on real embeddings where boundary movers DO occur).
-        import graft.operators.IvfStorage
-        import spark.implicits._
-        Seq(1, 3, 10).foreach { m =>
-          val n = 5000L * m
-          val dir = s"/tmp/graft-scale/recenter-m$m"
-          val k = math.max(16L, n / 500).toInt
-          // CLUSTERED corpus (k true centers, tight per-dim noise): IVF
-          // cells are only meaningful over clustered embeddings — on
-          // uniform data every point sits on a Voronoi boundary and ANY
-          // centroid move reassigns globally, which measures the data
-          // regime, not the operator
-          val cents = spark.range(k).select(
-            col("id").cast("int").as("cent_id"),
-            expr("""transform(sequence(0, 63), i ->
-              |  CAST(CAST(pmod(xxhash64(id, i), 1000) AS DOUBLE) / 1000.0
-              |    - 0.5 AS FLOAT))""".stripMargin).as("centroid"))
-          val e = spark.range(n).select(
-            col("id").as("vec_id"),
-            pmod(xxhash64(col("id")), lit(k.toLong)).as("cl"))
-            .select(col("vec_id"),
-              expr("""transform(sequence(0, 63), i ->
-                |  CAST(CAST(pmod(xxhash64(cl, i), 1000) AS DOUBLE) / 1000.0
-                |    - 0.5
-                |    + (CAST(pmod(xxhash64(vec_id, i + 100), 100) AS DOUBLE)
-                |       / 100.0 - 0.5) * 0.05 AS FLOAT))""".stripMargin)
-                .as("embedding"))
-          IvfStorage.writeCellPartitioned(e, cents, dir)
-          // drift: biased near-copies of TWO cells' members arrive via the
-          // incremental append path (the monitored-drift scenario) — the
-          // +0.15/dim bias drags the flagged centroids without ejecting
-          // members past the (well-separated) neighboring centers
-          val lowCells = Seq(0, 1)
-          val batch = IvfStorage.assignCells(e, cents)
-            .filter(col("cent_id").isin(lowCells.map(Integer.valueOf): _*))
-            .select(
-              (col("vec_id") + 100000000L).as("vec_id"),
-              expr("transform(embedding, x -> CAST(x + 0.15 AS FLOAT))")
-                .as("embedding"))
-          IvfStorage.appendCellPartitioned(batch, cents, dir)
-          // flag exactly the cells the batch landed in — what a
-          // driftReport occupancy/quality threshold would name
-          val flagged = IvfStorage.assignCells(batch, cents)
-            .select("cent_id").distinct().as[Int].collect().toSeq.sorted
-          val t0 = System.nanoTime()
-          val res = IvfStorage.recenter(spark, dir, cents, flagged)
-          val wall = (System.nanoTime() - t0) / 1e9
-          val rewrittenRows =
-            if (res.rewrittenCells.isEmpty) 0L
-            else spark.read.parquet(dir).filter(col("cent_id")
-              .isin(res.rewrittenCells.map(Integer.valueOf): _*)).count()
-          val lakeRows = spark.read.parquet(dir).count()
-          println(s"""{"bench":"scale","pipeline":"ivf_recenter",""" +
-            s""""mult":$m,"wall_sec":$wall,"cells":$k,""" +
-            s""""flagged_cells":${flagged.size},""" +
-            s""""rewritten_cells":${res.rewrittenCells.size},""" +
-            s""""rewritten_rows":$rewrittenRows,""" +
-            s""""moved_rows":${res.movedRows},"lake_rows":$lakeRows}""")
-          // the alternative recenter replaces: a FULL rebuild under the
-          // same refreshed centroids rewrites lake_rows at every mult —
-          // that row-count gap (and its wall) is the operator's value
-          val rdir = s"/tmp/graft-scale/recenter-rebuild-m$m"
-          val all = spark.read.parquet(dir).select("vec_id", "embedding")
-          val r0 = System.nanoTime()
-          IvfStorage.writeCellPartitioned(all, res.centroids, rdir)
-          val rwall = (System.nanoTime() - r0) / 1e9
-          println(s"""{"bench":"scale","pipeline":"ivf_full_rebuild",""" +
-            s""""mult":$m,"wall_sec":$rwall,"cells":$k,""" +
-            s""""rewritten_rows":$lakeRows,"lake_rows":$lakeRows}""")
         }
       case "graph" =>
         // the graph family at 1×/3×/10× the q133 edge volume, on a
@@ -1252,7 +983,7 @@ object ScaleBench {
           }
           t.unpersist()
         }
-      case other => sys.error(s"unknown mode $other (docs|chains|q74ab|j37ab|bpe|unigram|dedupreport|ann|vecstream|graph|cdc|blocklist|quantile|linkage)")
+      case other => sys.error(s"unknown mode $other (docs|chains|select|leak|ann|bpe|unigram|dedupreport|vecstream|graph|interval|tokingest|cdc|ivm|blocklist|linkage|quantile)")
     }
     spark.stop()
   }

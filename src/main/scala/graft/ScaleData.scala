@@ -50,12 +50,8 @@ object ScaleData {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ScaleData <srcSfDir> <outDir> <copies>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.withGraftConfs(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus, "graft-scale-data")
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, args(0), args(1), args(2).toInt)
     finally spark.stop()

@@ -508,20 +508,7 @@ object SimilarityJoin {
     staged(s, docs, tau)(
       prefixFilter(_, _, metricName = "sj_candidates_staged_prefix"))
 
-  /** Dup-collapse staging around the blocked overlap join. The staging
-    * algebra holds for the overlap coefficient exactly as for Jaccard: two
-    * docs of one (block, token-set) group have overlap 1 (clique pairs),
-    * and a member's overlap to ANY outside doc equals its representative's
-    * (|A∩X| and min(|A|,|X|) both depend only on the set) — so a
-    * boilerplate-heavy corpus's clique volume never reaches the quadratic
-    * stage here either. */
-  def stagedOverlapBlocked(s: SparkSession, docs: DataFrame,
-      tau: Double): DataFrame =
-    staged(s, docs, tau, valueCol = "overlap")(
-      overlapBlocked(_, _, metricName = "sj_pairs_staged_blocked"))
-
-  def staged(s: SparkSession, docs: DataFrame, tau: Double,
-      valueCol: String = "jaccard")(
+  def staged(s: SparkSession, docs: DataFrame, tau: Double)(
       inner: (DataFrame, Double) => DataFrame): DataFrame = {
     // 128-bit order-independent set fingerprint. The NUL joiner keeps the
     // encoding unambiguous for space-bearing elements (shingle sets, where
@@ -559,7 +546,7 @@ object SimilarityJoin {
     val m2 = mapping.select(col("rep").as("b_id"), col("id").as("idb"))
     val cross = repPairs.join(m1, "a_id").join(m2, "b_id")
       .select(least(col("ida"), col("idb")).as("a_id"),
-        greatest(col("ida"), col("idb")).as("b_id"), col(valueCol))
+        greatest(col("ida"), col("idb")).as("b_id"), col("jaccard"))
     // clique pairs: same group ⇒ identical sets ⇒ Jaccard exactly 1
     val x = mapping.select(col("block"), col("fp"), col("id").as("a_id"))
     val y = mapping.select(col("block").as("b_block"), col("fp").as("b_fp"),
@@ -567,7 +554,7 @@ object SimilarityJoin {
     val clique = x.join(y,
         col("block") === col("b_block") && col("fp") === col("b_fp") &&
           col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"), lit(1.0).as(valueCol))
+      .select(col("a_id"), col("b_id"), lit(1.0).as("jaccard"))
     RunScopedCache.releaseAfterRun(s, collapsed)
     cross.unionByName(clique)
   }

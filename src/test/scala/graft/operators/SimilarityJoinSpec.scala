@@ -93,36 +93,6 @@ class SimilarityJoinSpec extends SparkSpec {
     }
   }
 
-  test("staged × overlap composition is row-identical to blocked, incl. dup cliques") {
-    import spark.implicits._
-    // dup-heavy fixture: token-set duplicates (reordered/repeated tokens)
-    // must come back as clique pairs with overlap exactly 1.0
-    val docs = Seq(
-      (1L, "blk", Seq("a", "b", "c", "d")),
-      (2L, "blk", Seq("d", "c", "b", "a")),      // same set as 1 (clique)
-      (3L, "blk", Seq("a", "b", "c", "d", "e", "f", "g", "h")),
-      (4L, "blk", Seq("a", "b", "c")),           // ⊂ 1/2 and ⊂ 3
-      (5L, "blk", Seq("x", "y", "z")),
-      (6L, "other", Seq("a", "b", "c", "d"))     // other block: no pairs
-    ).toDF("id", "block", "w")
-      .select(col("id"), col("block"), array_distinct(col("w")).as("w"))
-    val naive = SimilarityJoin.overlapBlocked(docs, 0.95)
-    val stagedRows =
-      pairRows(SimilarityJoin.stagedOverlapBlocked(spark, docs, 0.95))
-    assert(pairRows(naive) == stagedRows)
-    val pairs = stagedRows.toSet
-    assert(pairs.contains((1L, 2L, 1.0)), s"clique pair missing: $pairs")
-    assert(pairs.contains((1L, 4L, 1.0)) && pairs.contains((2L, 4L, 1.0)),
-      s"containment must fan out to both clique members: $pairs")
-    assert(!pairs.exists(p => p._1 == 6L || p._2 == 6L), "blocks must bound scope")
-    // and on the real corpus
-    val corpus = Tables.documents(spark, sfDir)
-      .select(col("doc_id").as("id"), col("source").as("block"),
-        TextFunctions.tokenSet(col("text")).as("w"))
-    assertSamePairs(SimilarityJoin.overlapBlocked(corpus, 0.95),
-      SimilarityJoin.stagedOverlapBlocked(spark, corpus, 0.95))
-  }
-
   test("all overlap strategies match an independent brute-force reference (seeded)") {
     import spark.implicits._
     val vocab = (1 to 12).map(i => s"t$i").toVector
@@ -145,8 +115,7 @@ class SimilarityJoinSpec extends SparkSpec {
       Seq(
         "postings" -> SimilarityJoin.overlapPostings(df, 0.75),
         "blocked" -> SimilarityJoin.overlapBlocked(df, 0.75),
-        "tiled" -> SimilarityJoin.overlapBlockedTiled(df, 0.75, 4),
-        "staged" -> SimilarityJoin.stagedOverlapBlocked(spark, df, 0.75)
+        "tiled" -> SimilarityJoin.overlapBlockedTiled(df, 0.75, 4)
       ).foreach { case (name, out) =>
         val got = out.collect().map(r => (r.getAs[Long]("a_id"),
           r.getAs[Long]("b_id"), r.getAs[Double]("overlap"))).toSet

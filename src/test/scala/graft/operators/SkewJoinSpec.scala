@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.metrics.JobMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -59,37 +60,22 @@ class SkewJoinSpec extends SparkSpec {
       SkewTools.saltedJoin(skewedFacts(10), dim(), Seq("k"), 8, "full_outer"))
   }
 
-  /** Collects per-task (shuffle-read records, duration) so the A/B can
-    * assert on the REDUCER-TIME distribution rather than local wall-clock:
-    * on a real cluster, stage wall-clock IS the max task; a local[4] test
-    * JVM hides it behind map-side work shared by both plans. */
-  private final class TaskTap extends org.apache.spark.scheduler.SparkListener {
-    import scala.collection.concurrent.TrieMap
-    private val tasks = TrieMap.empty[Long, (Long, Long)]
-    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (e.taskMetrics != null)
-        tasks.put(e.taskInfo.taskId,
-          (e.taskMetrics.shuffleReadMetrics.recordsRead, e.taskInfo.duration))
-    def reset(): Unit = tasks.clear()
-    /** The listener bus is async: wait until task events stop arriving. */
-    private def settle(): Unit = {
-      var last = -1
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (tasks.size != last && System.nanoTime() < deadline) {
-        last = tasks.size; Thread.sleep(200)
-      }
+  /** (max shuffle-read records in one task, that task's duration ms), so
+    * the A/B can assert on the REDUCER-TIME distribution rather than local
+    * wall-clock: on a real cluster, stage wall-clock IS the max task; a
+    * local[4] test JVM hides it behind map-side work shared by both plans. */
+  private def hottest(m: JobMetrics): (Long, Long) = {
+    m.flush()
+    m.tasks.filter(_.shuffleReadRecords > 0) match {
+      case ts if ts.nonEmpty =>
+        val t = ts.maxBy(_.shuffleReadRecords)
+        (t.shuffleReadRecords, t.durationMs)
+      case _ => (0L, 0L)
     }
-    /** (max shuffle-read records in one task, that task's duration ms). */
-    def hottest(): (Long, Long) = {
-      settle()
-      tasks.values.filter(_._1 > 0) match {
-        case vs if vs.nonEmpty => vs.maxBy(_._1)
-        case _ => (0L, 0L)
-      }
-    }
-    /** Shuffle records read across every task since the last reset. */
-    def shuffled(): Long = { settle(); tasks.values.map(_._1).sum }
   }
+
+  /** Shuffle records read across every task since the last clear. */
+  private def shuffled(m: JobMetrics): Long = { m.flush(); m.tasks.map(_.shuffleReadRecords).sum }
 
   test("salted join spreads the hot reducer (AQE skew off): task metrics + wall-clock") {
     val confs = Seq(
@@ -101,8 +87,7 @@ class SkewJoinSpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val tap = new TaskTap
-    spark.sparkContext.addSparkListener(tap)
+    val metrics = JobMetrics.attach(spark.sparkContext)
     try {
       // 1.2M rows: the hot reducer still holds ~1.19M rows (sorted on one
       // task), plenty to dominate its stage; every assertion below is
@@ -114,9 +99,9 @@ class SkewJoinSpec extends SparkSpec {
       facts.count() // materialize input so the A/B isolates the join
       val d = dim()
       def run(df: DataFrame): (Long, Double, Long, Long) = {
-        tap.reset()
+        metrics.clear()
         val (r, sec) = timed(df.agg(sum(col("v") * col("w"))).collect())
-        val (maxRecords, maxTaskMs) = tap.hottest()
+        val (maxRecords, maxTaskMs) = hottest(metrics)
         (r.head.getDouble(0).round, sec, maxRecords, maxTaskMs)
       }
       run(facts.join(d, "k")) // warm both shapes once
@@ -141,7 +126,7 @@ class SkewJoinSpec extends SparkSpec {
       // (CLAUDE.md) — reported via info() above, not asserted; the
       // task-metric assertion is the deterministic skew proof
     } finally {
-      spark.sparkContext.removeSparkListener(tap)
+      metrics.detach()
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
@@ -154,13 +139,12 @@ class SkewJoinSpec extends SparkSpec {
     val buckets = 32
     val facts = skewedFacts(n).persist()
     facts.count()
-    val tap = new TaskTap
-    spark.sparkContext.addSparkListener(tap)
+    val metrics = JobMetrics.attach(spark.sparkContext)
     try {
       def run[A](body: => A): (A, Double, Long) = {
-        tap.reset()
+        metrics.clear()
         val (r, sec) = timed(body)
-        (r, sec, tap.shuffled())
+        (r, sec, shuffled(metrics))
       }
       val (directRows, directSec, directShuffled) = run(
         facts.groupBy("k").agg(count(lit(1)).as("n"),
@@ -184,7 +168,7 @@ class SkewJoinSpec extends SparkSpec {
         s"salted shuffled $saltedShuffled records vs direct $directShuffled")
       assert(saltedShuffled < n / 10, s"salted shuffled $saltedShuffled of $n input rows")
     } finally {
-      spark.sparkContext.removeSparkListener(tap)
+      metrics.detach()
       facts.unpersist()
     }
   }

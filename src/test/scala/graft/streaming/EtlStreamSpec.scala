@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import graft.metrics.JobMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
@@ -183,41 +183,22 @@ class EtlStreamSpec extends SparkSpec {
     }
   }
 
-  /** The jobs launched while it is registered: (job group, batch id, shape).
-    * A streaming query's jobs carry its run id as their group and the
-    * micro-batch id as a local property. The shape tells a single pass
+  /** Job shapes per micro-batch of the streaming run `runId`, read after a
+    * flush. A streaming query's jobs carry its run id as their group and
+    * the micro-batch id as a local property. The shape tells a single pass
     * over the input ("pass": one stage of result tasks, as
     * `foreachPartition` runs) from the stages of a shuffle ("map": a job of
     * map tasks, as AQE submits each map stage; "result": a result stage
     * behind a shuffle). */
-  private final class JobTap extends SparkListener {
-    private val started = new ConcurrentLinkedQueue[(String, String, Seq[Int])]()
-    private val taskTypes = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val p = e.properties
-      started.add((p.getProperty("spark.jobGroup.id"), p.getProperty("streaming.sql.batchId"),
-        e.stageInfos.map(_.stageId)))
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      taskTypes.put(e.stageId, e.taskType); ()
-    }
-    private def shape(stages: Seq[Int]): String =
-      if (taskTypes.get(stages.max) == "ShuffleMapTask") "map"
+  private def byBatch(m: JobMetrics, runId: String): Map[Long, Seq[String]] = {
+    m.flush()
+    val taskTypes = m.tasks.map(t => t.stage -> t.taskType).toMap
+    def shape(stages: Seq[Int]): String =
+      if (taskTypes.get(stages.max).contains("ShuffleMapTask")) "map"
       else if (stages.size == 1) "pass"
       else "result"
-    /** Job shapes per batch of the streaming run `runId`, once every event
-      * up to now has been delivered (a marker job's start, queued behind
-      * them, has arrived). */
-    def byBatch(runId: String): Map[Long, Seq[String]] = {
-      val marker = java.util.UUID.randomUUID().toString
-      spark.sparkContext.setJobGroup(marker, "listener flush")
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!started.asScala.exists(_._1 == marker) && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      started.asScala.toSeq.collect { case (`runId`, b, stages) => (b.toLong, shape(stages)) }
-        .groupMap(_._1)(_._2)
-    }
+    m.jobs.filter(_.group == runId).map(j => (j.batchId.get, shape(j.stageIds)))
+      .groupMap(_._1)(_._2)
   }
 
   /** A record sink that counts what it is handed and notes, per batch
@@ -256,14 +237,13 @@ class EtlStreamSpec extends SparkSpec {
       def read(s: SparkSession): DataFrame =
         new JsonFileSource(in, maxFilesPerTrigger = 1).read(s).select(counted(col("value")).as("value"))
     }
-    val tap = new JobTap
-    spark.sparkContext.addSparkListener(tap)
+    val metrics = JobMetrics.attach(spark.sparkContext)
     try {
       val q = EtlStream.start(spark, source, sinks, ckpt, Trigger.AvailableNow())
       q.awaitTermination(120000)
       q.exception.foreach(e => throw e)
-      (tap.byBatch(q.runId.toString), reads.sum)
-    } finally spark.sparkContext.removeSparkListener(tap)
+      (byBatch(metrics, q.runId.toString), reads.sum)
+    } finally metrics.detach()
   }
 
   test("fan-out shape: record sinks share one job per batch, with nothing cached") {
