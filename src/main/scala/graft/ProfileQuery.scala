@@ -10,7 +10,10 @@ import graft.metrics.{JobMetrics, TaskRow}
   * (spark.ui.enabled=false) show nowhere else. Job rows
   * attribute compose-time actions (adaptive sizing counts, driver collects)
   * to the query that issued them, which is exactly what per-query bench
-  * seconds hide. The header's row count comes from a `count()` run after
+  * seconds hide: each job line ends with `exec=<id> <call site>`, the SQL
+  * execution (Dataset action) the job ran under and where it was called
+  * (`exec=-` for a job outside any, such as a parquet read's schema
+  * inference). The header's row count comes from a `count()` run after
   * the job rows are read.
   *
   * Usage: runMain graft.ProfileQuery <sfDir> <query> [query…]
@@ -48,13 +51,12 @@ object ProfileQuery {
       }
       recorder.flush()
       recorder.clear()
-      spark.sparkContext.setJobDescription(s"profile:$name")
       val t0 = System.nanoTime()
       answer()
       val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.setJobDescription(null)
       recorder.flush()
       val jobs = recorder.jobs
+      val callSites = recorder.executions
       val tasks = recorder.tasks.groupBy(_.job)
       val n = fn(spark, sfDir).count()
       println(f"== $name rows=$n wall=$wall%.2fs run1=$run1%.2fs " +
@@ -67,7 +69,8 @@ object ProfileQuery {
           f"cpu=${total(_.cpuMs) / 1e3}%7.2fs gc=${total(_.gcMs) / 1e3}%6.2fs " +
           f"deser=${total(_.deserializeMs) / 1e3}%6.2fs " +
           f"in=${total(_.inputBytes) / 1e6}%8.1fMB sr=${total(_.shuffleReadBytes) / 1e6}%8.1fMB " +
-          f"sw=${total(_.shuffleWriteBytes) / 1e6}%8.1fMB")
+          f"sw=${total(_.shuffleWriteBytes) / 1e6}%8.1fMB " +
+          j.executionId.fold("exec=-")(x => s"exec=$x ${callSites.getOrElse(x, "?")}"))
       }
     }
     recorder.detach()

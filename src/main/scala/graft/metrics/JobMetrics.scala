@@ -7,12 +7,14 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** One Spark job: its group (a streaming query's run id), the micro-batch
-  * it ran for, its description, start and end times (epoch ms; `endMs` is
-  * -1 until the job ends) and every stage it lists, skipped ones included. */
+  * it ran for, its description, the SQL execution (Dataset action) it ran
+  * under, start and end times (epoch ms; `endMs` is -1 until the job ends)
+  * and every stage it lists, skipped ones included. */
 final case class JobRow(id: Int, group: String, batchId: Option[Long], description: String,
-    startMs: Long, endMs: Long, stageIds: Seq[Int])
+    executionId: Option[Long], startMs: Long, endMs: Long, stageIds: Seq[Int])
 
 /** One finished task. `job` is the job that listed its stage most recently
   * when it ended (-1 if no such job started while the listener was
@@ -32,6 +34,7 @@ final case class TaskRow(job: Int, stage: Int, taskType: String, durationMs: Lon
   * [[flush]], never after a sleep. */
 final class JobMetrics private (sc: SparkContext) extends SparkListener {
   private val jobRows = new ConcurrentHashMap[Int, JobRow]()
+  private val executionRows = new ConcurrentHashMap[Long, String]()
   private val taskRows = new ConcurrentLinkedQueue[TaskRow]()
   private val stageToJob = new ConcurrentHashMap[Int, Int]()
   private val markers = new ConcurrentHashMap[String, CountDownLatch]()
@@ -48,8 +51,14 @@ final class JobMetrics private (sc: SparkContext) extends SparkListener {
       case None =>
         e.stageIds.foreach(stageToJob.put(_, e.jobId))
         jobRows.put(e.jobId, JobRow(e.jobId, group.orNull, prop("streaming.sql.batchId").map(_.toLong),
-          prop("spark.job.description").getOrElse(""), e.time, -1L, e.stageIds))
+          prop("spark.job.description").getOrElse(""), prop("spark.sql.execution.id").map(_.toLong),
+          e.time, -1L, e.stageIds))
     }
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: SparkListenerSQLExecutionStart => executionRows.put(x.executionId, x.description); ()
+    case _ => ()
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = {
@@ -89,7 +98,12 @@ final class JobMetrics private (sc: SparkContext) extends SparkListener {
   /** Tasks seen since the last [[clear]], in the order they ended. */
   def tasks: Seq[TaskRow] = taskRows.asScala.toSeq
 
-  def clear(): Unit = { jobRows.clear(); taskRows.clear() }
+  /** The description of each SQL execution started since the last
+    * [[clear]], by execution id: the action's call site (`collect at
+    * File.scala:12`) unless the caller set a job description. */
+  def executions: Map[Long, String] = executionRows.asScala.toMap
+
+  def clear(): Unit = { jobRows.clear(); taskRows.clear(); executionRows.clear() }
 
   def detach(): Unit = { attached = false; sc.removeSparkListener(this) }
 }

@@ -37,7 +37,7 @@ object PageRank {
     * Below `broadcastNodes` the per-iteration rank table (|V| rows)
     * broadcasts, so each round is a map-side join over the cached edges
     * plus one |V|-bounded shuffle (partial aggs collapse the contribution
-    * stream map-side) — the runAdaptive-style small-regime escape. Above
+    * stream map-side) — ConnectedComponents.run's small-regime escape. Above
     * it, rounds fall back to shuffle joins keyed on src, the plan a web-
     * scale graph needs (|V| in the billions: ranks cannot broadcast).
     * Iteration count is fixed and ≤ 10, so the plan is a bounded chain —
@@ -67,7 +67,7 @@ object PageRank {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ecnt = raw.count()
     require(ecnt > 0, "PageRank needs a non-empty edge set")
-    // small-regime escape (the runAdaptive discipline, measured on q104:
+    // small-regime escape (as in ConnectedComponents.run, measured on q104:
     // a handful-of-MB graph spends its whole wall on per-round job
     // overhead): collect the edge list and run the IDENTICAL integer
     // recurrence driver-side, degrees tallied in the same pass —

@@ -1115,14 +1115,14 @@ object TextQueries extends QueryGroup {
     * Scale shape: everything after the (hash-keyed, capped) pair stage is
     * DIMENSION-bounded — sources number thousands where documents number
     * billions — so the component resolution runs on a source-count graph
-    * ([[ConnectedComponents.runAdaptive]]: driver union-find at this size,
-    * the distributed iteration past `driverMax`); node ids are the
+    * ([[ConnectedComponents.run]]: driver union-find at this size, the
+    * distributed iteration past `driverMaxEdges`); node ids are the
     * sources' rank in name order, so the min-id component label IS the
     * min-name label the oracle's recursive CTE computes. */
   private val q205: Q = (s, d) => {
-    // The capped universe feeds FOUR executions without this persist: the
-    // component resolution's deciding count + collect (compose-time
-    // actions inside runAdaptive) and the two independent subtrees of the
+    // The capped universe feeds THREE executions without this persist: the
+    // component resolution's bounded collect (a compose-time action inside
+    // ConnectedComponents.run) and the two independent subtrees of the
     // final plan (sizes→ids and the labeled output) — each re-ran the
     // full documents scan + md5 + two-exchange distinct/spread pipeline
     // (guide §2.4: remove repeated shuffles outright; measured 7.4 →
@@ -1151,8 +1151,8 @@ object TextQueries extends QueryGroup {
       .join(ids.select(col("source").as("src_a"), col("sid").as("a")), "src_a")
       .join(ids.select(col("source").as("src_b"), col("sid").as("b")), "src_b")
       .select("a", "b")
-    val comp = ConnectedComponents.runAdaptive(edges)
-    // register AFTER runAdaptive's compose-time actions: the final
+    val comp = ConnectedComponents.run(edges)
+    // register AFTER run's compose-time actions: the final
     // consuming action reads kept's IMR through sizes→ids and releases it
     RunScopedCache.releaseAfterRun(s, kept)
     val labeled = ids.join(comp, col("sid") === col("node"), "left")

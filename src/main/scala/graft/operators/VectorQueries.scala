@@ -709,18 +709,14 @@ object VectorQueries extends QueryGroup {
       col("embedding").as("a_emb"))
     val b = repRows.select(col("vec_id").as("b_id"),
       col("cent_id").as("b_cent"), col("embedding").as("b_emb"))
-    // pairs persisted: runAdaptive's path-picking count and the resolution
-    // itself both read them
     val pairs = a.join(b,
         col("cent_id") === col("b_cent") && col("a_id") < col("b_id"))
       .filter(cosineNative(col("a_emb"), col("b_emb")) >= tau)
       .select(col("a_id").as("a"), col("b_id").as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, pairs)
     // near-dup cluster graphs at THIS corpus are driver-sized (~1k edges);
-    // a 100 TB corpus' edge set exceeds driverMax and takes the
+    // a 100 TB corpus' edge set exceeds driverMaxEdges and takes the
     // distributed min-label path unchanged
-    val comp = ConnectedComponents.runAdaptive(pairs)
+    val comp = ConnectedComponents.run(pairs)
     assigned.select(col("vec_id"), col("cent_id"), col("rep"))
       .join(comp, col("rep") === col("node"), "left")
       .select(col("vec_id"), col("cent_id").cast("long").as("cell"),

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extension registering graft's native expressions with the
-  * function registry (usable from SQL and via `call_function`). Activated by
+/** Session extension registering graft's optimizer rules and its native
+  * expressions with the function registry (usable from SQL and via
+  * `call_function`). Activated by
   * `spark.sql.extensions=graft.plans.GraftExtensions` (set in GraftSession).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -13,6 +14,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => BandJoinRewrite)
     e.injectOptimizerRule(_ => IntervalOverlapRewrite)
+    e.injectOptimizerRule(_ => CaseMapRewrite)
     GraftFunctions.all.foreach { case (name, clazz, arity, builder) =>
       e.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo(clazz.getName, name),

@@ -36,6 +36,23 @@ class JobMetricsSpec extends SparkSpec {
     } finally { metrics.detach(); sc.removeSparkListener(slow) }
   }
 
+  test("each job names the Dataset action it ran under and that action's call site") {
+    val metrics = JobMetrics.attach(spark.sparkContext)
+    try {
+      metrics.flush()
+      metrics.clear()
+      spark.range(0, 100, 1, 2).selectExpr("sum(id)").collect()
+      spark.range(0, 100, 1, 2).repartition(3).count()
+      metrics.flush()
+      val jobs = metrics.jobs
+      val ids = jobs.flatMap(_.executionId).distinct
+      assert(jobs.forall(_.executionId.isDefined) && ids.size == 2, jobs)
+      val sites = ids.map(metrics.executions)
+      assert(sites.head.startsWith("collect at JobMetricsSpec.scala:"), sites)
+      assert(sites.last.startsWith("count at JobMetricsSpec.scala:"), sites)
+    } finally metrics.detach()
+  }
+
   test("main code reads Spark's job events only through graft.metrics") {
     // a hand-rolled listener re-states the bus-draining rule JobMetrics.flush
     // holds once (three earlier copies waited on the bus with a sleep)

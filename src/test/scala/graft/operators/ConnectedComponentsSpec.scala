@@ -1,14 +1,20 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
+import graft.metrics.JobMetrics
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
 
+  private def labels(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  // driverMaxEdges = 0: these cases exercise the distributed rounds, which
+  // run() would otherwise skip on graphs this small
   private def components(edges: (Long, Long)*): Map[Long, Long] =
-    ConnectedComponents.run(edges.toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    labels(ConnectedComponents.run(edges.toDF("a", "b"), driverMaxEdges = 0L))
 
   test("transitive chain collapses to one component; separate clusters stay apart") {
     val got = components((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
@@ -33,8 +39,7 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   private def starComponents(edges: (Long, Long)*): Map[Long, Long] =
-    ConnectedComponents.runStar(edges.toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    labels(ConnectedComponents.runStar(edges.toDF("a", "b")))
 
   test("large-star/small-star equals min-label propagation on random graphs") {
     // 4 seeds (was 8): each seed pays a full iterated-rounds distributed
@@ -44,31 +49,73 @@ class ConnectedComponentsSpec extends SparkSpec {
       val n = 30
       val edges = Seq.fill(40)((rnd.nextInt(n).toLong + 1, rnd.nextInt(n).toLong + 1))
         .filter { case (a, b) => a != b }
-      val viaLabels = components(edges: _*)
+      val viaRounds = components(edges: _*)
       val viaStars = starComponents(edges: _*)
-      assert(viaStars == viaLabels, s"seed $seed: $viaStars vs $viaLabels")
+      val viaUnionFind = labels(ConnectedComponents.run(edges.toDF("a", "b")))
+      assert(viaStars == viaRounds, s"seed $seed: $viaStars vs $viaRounds")
+      assert(viaUnionFind == viaRounds, s"seed $seed: $viaUnionFind vs $viaRounds")
     }
   }
 
-  test("runAdaptive equals run on BOTH sides of the driver-size threshold") {
+  test("run equals run(driverMaxEdges = 0) on both sides of the threshold") {
     for (seed <- 1 to 4) {
       val rnd = new scala.util.Random(seed)
       val n = 30
       val edges = Seq.fill(40)((rnd.nextInt(n).toLong + 1, rnd.nextInt(n).toLong + 1))
       val df = edges.toDF("a", "b")
-      val distributed = components(edges: _*)
-      // driverMax=0 forces the distributed path; large forces union-find
-      val viaDriver = ConnectedComponents.runAdaptive(df, driverMax = 1000000L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaDistributed = ConnectedComponents.runAdaptive(df, driverMax = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaDriver == distributed, s"seed $seed union-find diverged")
-      assert(viaDistributed == distributed, s"seed $seed escalation diverged")
+      val rounds = components(edges: _*)
+      // the default threshold resolves 40 edges with union-find; 10 is
+      // below the edge count, so the probe finds too many rows and the
+      // rounds run over the probe's persisted edges
+      val viaDriver = labels(ConnectedComponents.run(df))
+      val viaProbe = labels(ConnectedComponents.run(df, driverMaxEdges = 10L))
+      assert(viaDriver == rounds, s"seed $seed union-find diverged")
+      assert(viaProbe == rounds, s"seed $seed escalation diverged")
     }
     // self-loop-only input: no edge-touched nodes at all
-    val loops = ConnectedComponents.runAdaptive(
-      Seq((5L, 5L)).toDF("a", "b"), driverMax = 1000000L)
-    assert(loops.count() == 0)
+    assert(ConnectedComponents.run(Seq((5L, 5L)).toDF("a", "b")).count() == 0)
+    // ids keep their type on the driver path, as the rounds keep it
+    val ints = Seq((3, 1), (1, 2)).toDF("a", "b")
+    val viaDriver = ConnectedComponents.run(ints)
+    assert(viaDriver.schema.map(_.dataType) ==
+      ConnectedComponents.run(ints, driverMaxEdges = 0L).schema.map(_.dataType))
+    assert(viaDriver.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+      Map(1 -> 1, 2 -> 1, 3 -> 1))
+    // non-integer ids have no driver path: the rounds resolve them
+    val named = ConnectedComponents.run(Seq(("b", "a"), ("c", "b")).toDF("a", "b"))
+    assert(named.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+      Map("a" -> "a", "b" -> "a", "c" -> "a"))
+  }
+
+  test("run's job count: one job on the driver, one upstream pass above the threshold") {
+    val sc = spark.sparkContext
+    val pinnedBefore = sc.getPersistentRDDs.keySet
+    val metrics = JobMetrics.attach(sc)
+    try {
+      // a driver-sized graph from a one-partition source: the bounded
+      // collect is the only job (no rounds, no count before the collect)
+      val small = spark.range(0, 40, 1, 1)
+        .select(col("id").as("a"), (col("id") % 7).as("b"))
+      metrics.flush()
+      metrics.clear()
+      val resolved = ConnectedComponents.run(small)
+      metrics.flush()
+      assert(metrics.jobs.size == 1, metrics.jobs.map(_.description))
+      val leaked = sc.getPersistentRDDs.keySet -- pinnedBefore
+      assert(leaked.isEmpty, s"the driver path left cached RDDs: $leaked")
+      assert(labels(resolved).values.toSet == (0L until 7L).toSet)
+      // above the threshold: the rows the upstream map stage produces are
+      // counted, so a probe that re-ran it would count them twice
+      val upstreamRows = sc.longAccumulator("cc-upstream-rows")
+      val tally = udf { (x: Long) => upstreamRows.add(1); x }
+      val large = spark.range(0, 60, 1, 3)
+        .select(tally(col("id")).as("id"))
+        .repartition(3)
+        .select(col("id").as("a"), (col("id") % 5).as("b"))
+      val comp = labels(ConnectedComponents.run(large, driverMaxEdges = 10L))
+      assert(comp.values.toSet == (0L until 5L).toSet)
+      assert(upstreamRows.value == 60L, s"upstream map stage ran ${upstreamRows.value / 60.0}×")
+    } finally metrics.detach()
   }
 
   test("large-star/small-star collapses a long path in few rounds") {
@@ -111,7 +158,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     import spark.implicits._
     val path = (1L until 30L).map(i => (i, i + 1)).toDF("a", "b")
     val e = intercept[IllegalStateException](
-      ConnectedComponents.run(path, maxIter = 5).collect())
+      ConnectedComponents.run(path, maxIter = 5, driverMaxEdges = 0L).collect())
     assert(e.getMessage.contains("did not converge"))
   }
 
@@ -122,12 +169,12 @@ class ConnectedComponentsSpec extends SparkSpec {
     val path = (1L until 12L).map(i => (i, i + 1)).toDF("a", "b")
     val ckpt = tmpDir("cc-reliable")
     val mode = ConnectedComponents.ReliableCheckpoints(ckpt, everyRounds = 2)
-    val viaLocal = ConnectedComponents.run(path)
+    val viaLocal = ConnectedComponents.run(path, driverMaxEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // reliable mode must release every per-round persist before returning
     // (seal contract) — a long-lived cluster session pins nothing per run()
     val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val viaReliable = ConnectedComponents.run(path, mode = mode)
+    val viaReliable = ConnectedComponents.run(path, mode = mode, driverMaxEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaReliable == viaLocal)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
