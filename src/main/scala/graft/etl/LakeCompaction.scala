@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.operators.LakeCommit
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSinkLog, SinkFileStatus}
@@ -16,12 +17,16 @@ import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSinkLog, SinkFi
   * of magnitude slower on local/object filesystems, see FileSink.promote),
   * greedy-packs each partition's data files in name order into bins of
   * cumulative size ≤ `targetBytes`, and keeps only bins that actually
-  * shrink the file count (≥ 2 files). `compact` rewrites every planned bin
-  * concurrently — each bin is one small Spark job (scan just that bin's
-  * files → one output file), submitted from a bounded thread pool so a
+  * shrink the file count (≥ 2 files). `compact` rewrites the planned bins
+  * eight at a time through [[graft.operators.LakeCommit.runAll]], so a
   * thousand-bin lake keeps the cluster busy without flooding the
-  * scheduler — then commits per bin: rename the staged file to its
-  * deterministic name, delete the originals, drop the staging dir.
+  * scheduler. Each bin is one small Spark job (scan just that bin's
+  * files → one staged output file,
+  * [[graft.operators.LakeCommit.writeOneFile]]) and commits on its own:
+  * rename the staged file to its deterministic name, then delete the
+  * originals. After a failed bin, bins not yet started are skipped and
+  * the running ones finish before the failure is rethrown; every bin is
+  * atomic and idempotent, and a re-run re-plans, so it converges.
   *
   * Determinism + idempotence: the output file is named
   * `compact-<md5 of the source-file names>`, so re-planning the same bin
@@ -50,6 +55,9 @@ import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSinkLog, SinkFi
   * [[vacuumUnreferenced]].
   */
 object LakeCompaction {
+
+  /** Bins rewritten at once: each is one small single-task Spark job. */
+  private val MaxConcurrentBins = 8
 
   /** One rewrite unit: ≥ 2 data files in one partition dir whose combined
     * size fits `targetBytes` (a lone oversized file is already compact). */
@@ -138,15 +146,16 @@ object LakeCompaction {
     * inside the single-task bin rewrite, so it costs one in-memory sort of
     * `targetBytes` per bin and changes nothing else (content identity is
     * row-set identity; parquet row order is not part of the table
-    * contract). */
-  /** @param writeOptions extra parquet writer options applied to every
+    * contract).
+    *
+    * @param writeOptions extra parquet writer options applied to every
     *   rewritten file — the lake-layout levers that only matter at
     *   rewrite time, e.g. [[graft.operators.LakeLayout.bloomOptions]]'s
     *   `parquet.bloom.filter.enabled#<col>` for point-lookup skipping on
     *   a NON-sort column (BloomLakeSpec measures the effect; sort columns
     *   already skip via row-group min/max). */
   def compact(spark: SparkSession, dir: String, targetBytes: Long,
-      maxConcurrentBins: Int = 8, sortBy: Seq[String] = Nil,
+      sortBy: Seq[String] = Nil,
       allowManifested: Boolean = false,
       writeOptions: Map[String, String] = Map.empty): Report = {
     val root = new Path(dir)
@@ -178,11 +187,11 @@ object LakeCompaction {
           "stopped. Stop the sink, then pass allowManifested = true.")
         assertNoActiveWriter(spark, fs, mroot)
         compactManifested(spark, fs, mroot, fs.makeQualified(root),
-          targetBytes, maxConcurrentBins, sortBy, writeOptions)
+          targetBytes, sortBy, writeOptions)
       case None =>
         val bins = plan(spark, dir, targetBytes)
         if (bins.isEmpty) return Report(0, 0, 0, 0, 0L)
-        runBins(bins, maxConcurrentBins)(bin =>
+        LakeCommit.runAll(bins, MaxConcurrentBins)(bin =>
           rewrite(spark, fs, bin, sortBy, deleteOriginals = true,
             writeOptions))
         Report(bins.map(_.partitionDir).distinct.size, bins.size,
@@ -260,53 +269,10 @@ object LakeCompaction {
     None
   }
 
-  /** Run every bin on a bounded pool and await ALL of them before
-    * returning: bailing on the first failure would hand control back to
-    * the caller while the remaining rewrites keep mutating the lake in the
-    * background. Completed bins stay committed (each rewrite is
-    * individually atomic + idempotent); failures are aggregated and
-    * rethrown together. */
-  private def runBins(bins: Seq[Bin], maxConcurrentBins: Int)(
-      work: Bin => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(maxConcurrentBins, bins.size))
-    try {
-      val futures = bins.map { bin =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = work(bin)
-        })
-      }
-      val failures = futures.flatMap { f =>
-        try { f.get(); None }
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Some(Option(e.getCause).getOrElse(e))
-          case e: InterruptedException =>
-            // driver-thread interrupt (job cancellation, SIGINT): without
-            // this arm the await-all contract silently breaks — the
-            // remaining bins would keep mutating the lake in the
-            // background after control returns. Cancel them, restore the
-            // interrupt flag, and surface the interruption.
-            futures.foreach(_.cancel(true))
-            Thread.currentThread().interrupt()
-            throw e
-        }
-      }
-      failures match {
-        case first +: rest =>
-          rest.foreach(first.addSuppressed)
-          throw first
-        case _ =>
-      }
-    } finally pool.shutdown()
-  }
-
   private def rewrite(spark: SparkSession, fs: FileSystem, bin: Bin,
       sortBy: Seq[String], deleteOriginals: Boolean,
-      writeOptions: Map[String, String] = Map.empty): Unit = {
+      writeOptions: Map[String, String]): Unit = {
     val partDir = new Path(bin.partitionDir)
-    val staging = new Path(partDir, s".compacting-${bin.outputName}")
-    fs.delete(staging, true)
     // explicit leaf files → no partition inference: data columns only,
     // exactly what belongs inside a file of this partition dir.
     // mergeSchema ALWAYS: a bin can mix pre- and post-evolution files, and
@@ -318,17 +284,10 @@ object LakeCompaction {
       if (sortBy.isEmpty) one
       else one.sortWithinPartitions(sortBy.map(
         org.apache.spark.sql.functions.col): _*)
-    clustered.write.mode("overwrite").options(writeOptions)
-      .parquet(staging.toString)
-    val part = fs.listStatus(staging)
-      .map(_.getPath).find(p => p.getName.startsWith("part-"))
-      .getOrElse(throw new java.io.IOException(s"no staged file under $staging"))
-    val dest = new Path(partDir, bin.outputName)
-    fs.delete(dest, false) // idempotent re-run overwrites its own output
-    if (!fs.rename(part, dest))
-      throw new java.io.IOException(s"compaction rename failed: $part -> $dest")
+    LakeCommit.writeOneFile(clustered,
+      new Path(partDir, s".compacting-${bin.outputName}"),
+      new Path(partDir, bin.outputName), writeOptions)
     if (deleteOriginals) bin.files.foreach(f => fs.delete(new Path(f), false))
-    fs.delete(staging, true)
   }
 
   // ---------------------------------------------------------------------
@@ -387,8 +346,7 @@ object LakeCompaction {
     * interval re-derived from the single compact's position). */
   private def compactManifested(spark: SparkSession, fs: FileSystem,
       manifestRoot: Path, subtree: Path, targetBytes: Long,
-      maxConcurrentBins: Int, sortBy: Seq[String],
-      writeOptions: Map[String, String] = Map.empty): Report = {
+      sortBy: Seq[String], writeOptions: Map[String, String]): Report = {
     val metadataDir = new Path(manifestRoot, "_spark_metadata")
     val (log, entries, healed) = openLogHealed(spark, fs, metadataDir)
     val latestBatchId = log.getLatestBatchId().getOrElse(
@@ -419,7 +377,7 @@ object LakeCompaction {
       return Report(0, 0, 0, 0, 0L, manifestRepaired = healed)
     }
     // step 2: write the compacted files — invisible to manifest readers
-    runBins(bins, maxConcurrentBins)(bin =>
+    LakeCommit.runAll(bins, MaxConcurrentBins)(bin =>
       rewrite(spark, fs, bin, sortBy, deleteOriginals = false,
         writeOptions))
     // step 3: swap the manifest's file list in ONE rename, then restore

@@ -129,8 +129,7 @@ object CdcMerge {
     resolved.write.mode("overwrite").parquet(s"$dir/base_next")
     val f = fs(spark, dir)
     f.delete(new Path(s"$dir/base"), true)
-    require(f.rename(new Path(s"$dir/base_next"), new Path(s"$dir/base")),
-      s"compact: rename base_next -> base failed under $dir")
+    LakeCommit.rename(f, new Path(s"$dir/base_next"), new Path(s"$dir/base"))
     f.delete(new Path(s"$dir/delta"), true)
   }
 }

@@ -86,13 +86,6 @@ object DedupReport {
       p
     })
 
-  /** The pipeline plus its internal cached projection. [[build]] needs the
-    * cache handle explicitly: it persists the RESULT on top, so an action's
-    * plan surfaces only the outer InMemoryRelation — RunScopedCache's
-    * listener (which matches cache plans appearing in the executed query)
-    * would never see the inner one and the projection would stay pinned
-    * forever (exactly the leak DedupBucketCapSpec's cache-drain polls
-    * caught in round 10). */
   /** Fingerprint-group collapse (the clique argument in
     * [[assignComponents]]' doc): every doc labeled with its group's
     * min-doc_id `rep`; token sets materialized for REPRESENTATIVES only —
@@ -100,10 +93,9 @@ object DedupReport {
     * with the dup rate instead of pinning the full corpus text. */
   private def groupCollapsed(documents: DataFrame): DataFrame = {
     // fingerprint materialized as a column so the width pin can
-    // repartition on it (the window then reuses the exchange) — the
-    // fingerprint kernel over the whole corpus otherwise ran inside ONE
-    // AQE-coalesced task (r20 profile: a 2.4 s single-task job with 2 s
-    // of CPU on the q154 memo build; the pinPairWidth discipline)
+    // repartition on it and the window reuses that exchange instead of
+    // planning its own. The fingerprint kernel itself runs before the pin,
+    // in as many tasks as the input has splits (one for a one-file corpus)
     val width = documents.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
     val grpW = Window.partitionBy(col("source"), col("__fp"))
@@ -120,6 +112,13 @@ object DedupReport {
           TextFunctions.tokenSet(col("text"))).as("w"))
   }
 
+  /** The pipeline plus its internal cached projection. [[build]] needs the
+    * cache handle explicitly: it persists the RESULT on top, so an action's
+    * plan surfaces only the outer InMemoryRelation — RunScopedCache's
+    * listener (which matches cache plans appearing in the executed query)
+    * would never see the inner one and the projection would stay pinned
+    * forever (exactly the leak DedupBucketCapSpec's cache-drain polls
+    * caught in round 10). */
   private def assignComponentsImpl(s: SparkSession, documents: DataFrame,
       tau: Double): (DataFrame, DataFrame) = {
     val docs = groupCollapsed(documents)

@@ -328,7 +328,7 @@ object IvfStorage {
     val out = fs.create(tmp, true)
     try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
-    require(fs.rename(tmp, fin), s"recenter manifest commit failed: $fin")
+    LakeCommit.rename(fs, tmp, fin)
   }
 
   /** Idempotent swap: per manifest line, `emptied` deletes the live cell
@@ -353,8 +353,7 @@ object IvfStorage {
         case "staged" =>
           if (fs.exists(staged)) {
             if (fs.exists(live)) fs.delete(live, true)
-            require(fs.rename(staged, live),
-              s"recenter swap failed: $staged -> $live")
+            LakeCommit.rename(fs, staged, live)
           } // else: already swapped by a previous attempt — live is NEW
         case other => throw new IllegalStateException(
           s"corrupt recenter manifest line '$line' in $manifest")

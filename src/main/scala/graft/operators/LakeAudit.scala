@@ -99,8 +99,7 @@ object LakeAudit {
     val ok = reports.forall(_.pass)
     if (ok) {
       fs.mkdirs(target.getParent)
-      require(fs.rename(staged, target),
-        s"atomic publish rename failed: $staged -> $target")
+      LakeCommit.rename(fs, staged, target)
       // record publish order through the optimistic-concurrency commit —
       // never a data-dir reconciliation (O(batches) listings per publish
       // would make a long-lived stream quadratic on exactly the stores

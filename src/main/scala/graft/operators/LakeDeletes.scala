@@ -101,10 +101,20 @@ object LakeDeletes {
     }
   }
 
-  /** Finish any commit a crash interrupted: every file under
-    * `.erase-staging/` was fully written before its original was touched,
-    * so it wins — delete the (possibly still present) destination and
-    * rename the staged file in. Returns the number of replayed commits. */
+  /** Finish one `.erase-staging/` entry. A staged FILE was fully written
+    * before its original was touched, so it wins: delete the (possibly
+    * still present) destination and rename the staged file in. A
+    * directory is a torn tmp write and is dropped. */
+  private def completeStaged(fs: FileSystem, root: Path,
+      st: org.apache.hadoop.fs.FileStatus): Unit =
+    if (st.isFile) {
+      val dest = new Path(root, decodeDest(st.getPath.getName))
+      if (fs.exists(dest)) fs.delete(dest, false)
+      LakeCommit.rename(fs, st.getPath, dest)
+    } else fs.delete(st.getPath, true)
+
+  /** Finish any commit a crash interrupted ([[completeStaged]] on every
+    * staging entry). Returns the number of replayed commits. */
   private[operators] def replayStaging(spark: SparkSession,
       dir: String): Int = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -112,18 +122,10 @@ object LakeDeletes {
     val fs = root.getFileSystem(conf)
     val stage = stagingDir(dir)
     if (!fs.exists(stage)) return 0
-    var n = 0
-    fs.listStatus(stage).foreach { st =>
-      if (st.isFile) {
-        val dest = new Path(root, decodeDest(st.getPath.getName))
-        if (fs.exists(dest)) fs.delete(dest, false)
-        if (!fs.rename(st.getPath, dest))
-          throw new java.io.IOException(s"replay rename failed: $dest")
-        n += 1
-      } else fs.delete(st.getPath, true) // stale tmp write dir
-    }
+    val entries = fs.listStatus(stage)
+    entries.foreach(completeStaged(fs, root, _))
     fs.delete(stage, true)
-    n
+    entries.count(_.isFile)
   }
 
   /** Retention sweep for crash-orphaned erase stages — the aging story
@@ -147,20 +149,11 @@ object LakeDeletes {
     val fs = root.getFileSystem(conf)
     val stage = stagingDir(dir)
     if (!fs.exists(stage)) return 0
-    var n = 0
-    fs.listStatus(stage).foreach { st =>
-      if (nowMs - st.getModificationTime > retentionMs) {
-        if (st.isFile) {
-          val dest = new Path(root, decodeDest(st.getPath.getName))
-          if (fs.exists(dest)) fs.delete(dest, false)
-          if (!fs.rename(st.getPath, dest))
-            throw new java.io.IOException(s"vacuum replay rename failed: $dest")
-        } else fs.delete(st.getPath, true)
-        n += 1
-      }
-    }
+    val aged = fs.listStatus(stage)
+      .filter(st => nowMs - st.getModificationTime > retentionMs)
+    aged.foreach(completeStaged(fs, root, _))
     if (fs.listStatus(stage).isEmpty) fs.delete(stage, true)
-    n
+    aged.length
   }
 
   /** Delete every row whose `idCol` is in `ids`, rewriting only the files
@@ -186,82 +179,38 @@ object LakeDeletes {
     val deleted = new java.util.concurrent.atomic.AtomicLong(0L)
     // Per-candidate work items are INDEPENDENT — disjoint files, each with
     // its own staged name and its own count/write jobs — so they run
-    // through a small driver thread pool (guide §2.6 "overlap independent
-    // jobs"): the per-file protocol (membership count → staged survivor
-    // write → rename commit) is byte-identical to the sequential form,
-    // only the driver-side latency between the tiny jobs (footer read,
-    // plan build, job submit, renames) now overlaps. The r20 profile of
-    // an 8-file erase measured more wall BETWEEN its ~16 jobs than in
-    // them. Crash safety is unchanged: each file's staged write commits
-    // independently, and a crash mid-pool leaves per-file states that
-    // [[replayStaging]] already heals.
-    def eraseOne(p: Path, rowsBefore: Long): Unit = {
+    // through the driver pool (guide §2.6 "overlap independent jobs"): the
+    // per-file protocol (membership count → staged survivor write → rename
+    // commit) is the sequential one, only the driver-side latency between
+    // the tiny jobs (footer read, plan build, job submit, renames)
+    // overlaps. The r20 profile of an 8-file erase measured more wall
+    // BETWEEN its ~16 jobs than in them. Each file's staged write commits
+    // independently, and runAll returns only when no per-file work is in
+    // flight, so the documented recovery (re-running erase, whose
+    // [[replayStaging]] heals every per-file state) never races a commit.
+    LakeCommit.runAll(candidates, 8) { case (p, _, _, rowsBefore) =>
       val df = spark.read.parquet(p.toString)
       val hit = df.filter(idCond).count()
       if (hit > 0L) {
         val rel = root.toUri.relativize(p.toUri).getPath
         val stage = stagingDir(dir)
         fs.mkdirs(stage)
-        val survivors = rowsBefore - hit
-        if (survivors > 0L) {
-          // keyed by the FULL relative path (same scheme as the staged
-          // name): two candidate files sharing a base name in different
-          // subdirectories were safe sequentially (tmp deleted per
-          // iteration) but race in the pooled path — both threads would
-          // write into one tmp dir and stage each other's survivors
-          // (ADVICE r20)
-          val tmp = new Path(stage, s".tmp-${encodeDest(rel)}")
-          df.filter(!idCond).coalesce(1)
-            .write.mode("overwrite").parquet(tmp.toString)
-          val part = fs.listStatus(tmp)
-            .map(_.getPath).find(q => isDataFile(q.getName))
-            .getOrElse(throw new IllegalStateException(
-              s"no part file under $tmp"))
+        if (rowsBefore - hit > 0L) {
+          // the tmp dir is keyed by the FULL relative path, like the staged
+          // name: two candidates sharing a base name in different
+          // subdirectories must not write into one tmp dir (ADVICE r20)
           val staged = new Path(stage, encodeDest(rel))
-          if (!fs.rename(part, staged))
-            throw new java.io.IOException(s"stage rename failed: $staged")
-          fs.delete(tmp, true)
+          LakeCommit.writeOneFile(df.filter(!idCond),
+            new Path(stage, s".tmp-${encodeDest(rel)}"), staged)
           // commit: from here the staged file is the truth
           fs.delete(p, false)
-          if (!fs.rename(staged, p))
-            throw new java.io.IOException(s"commit rename failed: $p")
+          LakeCommit.rename(fs, staged, p)
         } else {
           fs.delete(p, false) // every row erased: the file just goes
         }
         touched.incrementAndGet()
         deleted.addAndGet(hit)
       }
-    }
-    if (candidates.size <= 1) {
-      candidates.foreach { case (p, _, _, rowsBefore) =>
-        eraseOne(p, rowsBefore) }
-    } else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, candidates.size))
-      try {
-        val futures = candidates.map { case (p, _, _, rowsBefore) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = eraseOne(p, rowsBefore)
-          })
-        }
-        // .get() propagates the first per-file failure (unwrapped below
-        // so callers keep seeing the original IOException)
-        try futures.foreach(_.get())
-        catch { case e: java.util.concurrent.ExecutionException =>
-          // quiesce before rethrowing: erase() must never throw with
-          // per-file work still in flight — the documented recovery is
-          // re-running erase (whose replayStaging would RACE an in-flight
-          // stage→commit and can delete the freshly replayed survivor
-          // file; ADVICE r20). Queued tasks are cancelled unstarted;
-          // already-running ones complete their own per-file protocol
-          // (each commits independently) and are waited for without a
-          // bound, as the sequential form would wait for them.
-          futures.foreach(_.cancel(false))
-          pool.shutdown()
-          while (!pool.awaitTermination(1,
-              java.util.concurrent.TimeUnit.MINUTES)) ()
-          throw e.getCause }
-      } finally pool.shutdown()
     }
     val stage = stagingDir(dir)
     if (fs.exists(stage) && fs.listStatus(stage).isEmpty)

@@ -4,6 +4,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.etl.{BucketPaths, TripEventCodec}
+import graft.operators.LakeCommit
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -207,44 +208,22 @@ final class FileSink(outDir: String, parquet: Boolean,
         if (parent == tmpPath.toString) ""
         else parent.stripPrefix(tmpPath.toString + "/")
       }.toSeq
-    // one commit task per partition dir — renames are metadata ops but a
+    // one commit unit per partition dir — renames are metadata ops but a
     // micro-batch can touch hundreds of partitions × many part files, and a
-    // sequential driver loop would dominate the batch time
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, byPartition.size)))
-    try {
-      val futures = byPartition.map { case (rel, parts) =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            val destDir = if (rel.isEmpty) new Path(prefix) else new Path(prefix, rel)
-            fs.mkdirs(destDir)
-            val stale = fs.listStatus(destDir)
-              .filter(_.getPath.getName.startsWith(s"batch-$batchId-"))
-            stale.foreach(s => fs.delete(s.getPath, false))
-            parts.foreach { case (src, k) =>
-              val suffix = src.getName.dropWhile(_ != '.') // .snappy.parquet / .txt
-              val dest = new Path(destDir, f"batch-$batchId-$k%05d$suffix")
-              // Hadoop rename reports failure by RETURNING false — an
-              // unchecked failure here would silently drop this file's rows
-              // when the staging dir is deleted below
-              if (!fs.rename(src, dest))
-                throw new java.io.IOException(s"commit rename failed: $src -> $dest")
-            }
-          }
-        })
+    // sequential driver loop would dominate the batch time. runAll returns
+    // only when no unit is running, so a replayed batch (which deletes and
+    // renames `batch-<id>-*` in the same dirs) cannot race this one.
+    LakeCommit.runAll(byPartition, 16) { case (rel, parts) =>
+      val destDir = if (rel.isEmpty) new Path(prefix) else new Path(prefix, rel)
+      fs.mkdirs(destDir)
+      val stale = fs.listStatus(destDir)
+        .filter(_.getPath.getName.startsWith(s"batch-$batchId-"))
+      stale.foreach(s => fs.delete(s.getPath, false))
+      parts.foreach { case (src, k) =>
+        val suffix = src.getName.dropWhile(_ != '.') // .snappy.parquet / .txt
+        LakeCommit.rename(fs, src, new Path(destDir, f"batch-$batchId-$k%05d$suffix"))
       }
-      try futures.foreach(_.get())
-      catch { case e: java.util.concurrent.ExecutionException =>
-        // quiesce before rethrowing, as LakeDeletes.erase does: the replayed
-        // batch deletes and renames `batch-<id>-*` in the same partition
-        // dirs, so it must not race commits still in flight. Queued ones
-        // are cancelled unstarted; running ones finish their partition.
-        futures.foreach(_.cancel(false))
-        pool.shutdown()
-        while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)) ()
-        throw e.getCause
-      }
-    } finally pool.shutdown()
+    }
     fs.delete(tmpPath, true)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{FailingRenameFileSystem, SparkSpec}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -68,6 +68,44 @@ class LakeDeletesSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
     assert(left == (0L until 600L).filterNot(ids.contains))
     assert(!fs.exists(new Path(s"$dir/data/.erase-staging")))
+  }
+
+  test("a failed per-file commit rethrows only when no per-file work is in flight; a re-run converges") {
+    FailingRenameFileSystem.register(spark)
+    val local = tmpDir("lakedel-fail")
+    (0 until 8).foreach { f =>
+      (f * 50 until (f + 1) * 50)
+        .map(i => (i.toLong, s"src${i % 4}", s"text $i"))
+        .toDF("doc_id", "source", "text")
+        .coalesce(1).write.mode("append").parquet(s"$local/data")
+    }
+    val dir = s"failrename://$local/data"
+    val dataDir = new Path(s"$local/data")
+    val victim = fs.listStatus(dataDir).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet")).min
+    val ids = (0L until 400L by 25L).toSeq // two hits per file
+    // hook the eight per-file commit renames (staged file → its original
+    // path); only the victim's fails, the other seven are still renaming
+    FailingRenameFileSystem.arm(expected = 8,
+      hooked = _.getParent.toUri.getPath == dataDir.toUri.getPath,
+      fails = _.getName == victim)
+    try {
+      val e = intercept[java.io.IOException](
+        LakeDeletes.erase(spark, dir, ids, "doc_id"))
+      assert(e.getMessage.contains("commit rename failed") &&
+        e.getMessage.contains(victim), e.getMessage)
+      assert(FailingRenameFileSystem.othersAtFailure.get() == 7)
+      // no per-file work is still running: a re-run started now cannot
+      // race one
+      assert(FailingRenameFileSystem.inFlight.get() == 0)
+    } finally FailingRenameFileSystem.armed = false
+    // the victim's survivors are staged; the re-run replays them in
+    val rep = LakeDeletes.erase(spark, dir, ids, "doc_id")
+    assert(rep.filesTotal == 8 && rep.filesTouched == 0, rep)
+    val left = spark.read.parquet(dir)
+      .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+    assert(left == (0L until 400L).filterNot(ids.contains))
+    assert(!fs.exists(new Path(dataDir, ".erase-staging")))
   }
 
   test("re-running the same batch touches zero files") {

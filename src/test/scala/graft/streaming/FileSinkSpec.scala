@@ -1,51 +1,8 @@
 package graft.streaming
 
-import java.net.URI
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import graft.SparkSpec
+import graft.{FailingRenameFileSystem, SparkSpec}
 import graft.etl.TripEventCodec
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions.col
-
-/** The local filesystem under the `failrename` scheme, with a hook on
-  * [[FileSink]]'s commit renames (destination named `batch-*`): once
-  * `expected` of them have started, the k-th to have started fails after
-  * k × 400 ms, so a caller that returns at the first failure leaves the
-  * later ones running. */
-class FailingRenameFileSystem extends RawLocalFileSystem {
-  override def getScheme: String = "failrename"
-  override def getUri: URI = URI.create("failrename:///")
-
-  override def rename(src: Path, dst: Path): Boolean = {
-    import FailingRenameFileSystem._
-    if (!armed || !dst.getName.startsWith("batch-")) super.rename(src, dst)
-    else {
-      val k = arrivals.getAndIncrement()
-      inFlight.incrementAndGet()
-      try {
-        started.countDown()
-        started.await(30, TimeUnit.SECONDS)
-        Thread.sleep(k * 400L)
-        false
-      } finally inFlight.decrementAndGet()
-    }
-  }
-}
-
-object FailingRenameFileSystem {
-  @volatile var armed = false
-  @volatile var started = new CountDownLatch(0)
-  val arrivals = new AtomicInteger()
-  val inFlight = new AtomicInteger()
-
-  def arm(expected: Int): Unit = {
-    started = new CountDownLatch(expected)
-    arrivals.set(0)
-    armed = true
-  }
-}
 
 class FileSinkSpec extends SparkSpec {
   import spark.implicits._
@@ -60,8 +17,7 @@ class FileSinkSpec extends SparkSpec {
        | "trip_id": ${1000 + loc}, "type": "trip"}""".stripMargin.replaceAll("\n", "")
 
   test("a failed commit rename rethrows only after the batch's other renames end") {
-    spark.sparkContext.hadoopConfiguration.set("fs.failrename.impl",
-      classOf[FailingRenameFileSystem].getName)
+    FailingRenameFileSystem.register(spark)
     val locs = 1 to 4
     val events = TripEventCodec.parse(locs.map(event).toDF("value"), col("value"))
     val out = "failrename://" + tmpDir("filesink-rename")
