@@ -31,9 +31,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q06_join_multiway")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each composes
+    * in a [[RunScope]]: the first action over its result releases the
+    * caches it persisted. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    groups.flatMap(_.queries).toMap
+    groups.flatMap(_.queries).toMap.map { case (name, q) =>
+      name -> ((s: SparkSession, d: String) => RunScope.compose(q(s, d)))
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for ⚙ engine-only ops. */

@@ -554,11 +554,11 @@ object CorpusOps {
     *
     * Returns (id, is_target, n_feat, weight). */
   def importanceWeights(docs: DataFrame, idCol: String, isTarget: Column,
-      buckets: Int = 64): DataFrame = {
+      buckets: Int = 64): DataFrame = RunScope.compose {
     val toks = TextFunctions.tokens(col("text"))
     // persisted: the model-fit pass and the weighting pass both read the
     // hashed feature stream — without this the explode + per-feature md5
-    // run twice (the q95 run-scoped-cache pattern; at 100 TB this is the
+    // run twice (the q95 owned-cache pattern; at 100 TB this is the
     // materialize-the-projection artifact). The doc-side repartition pins
     // explode width: a small-file corpus scans as 1–2 tasks and the whole
     // per-feature kernel (shingle transform + md5) runs single-threaded
@@ -571,7 +571,7 @@ object CorpusOps {
     // repartition, so the shingle expression is evaluated up to 3× per row
     // on the SCAN side — with the interpreted HOF that tripled cost was the
     // query's hot spot (PLANS.md q110), with the kernel it is noise
-    val feats = docs.filter(col("text").isNotNull)
+    val feats = RunScope.own(docs.filter(col("text").isNotNull)
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col(idCol))
       .select(col(idCol), isTarget.as("is_target"),
@@ -581,9 +581,7 @@ object CorpusOps {
         posexplode(col("feats")).as(Seq("pos0", "feat")))
       .select(col(idCol), col("is_target"), (col("pos0") + 1).as("pos"),
         pmod(call_function("md5_prefix32", col("feat")),
-          lit(buckets.toLong)).as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(docs.sparkSession, feats)
+          lit(buckets.toLong)).as("bucket")))
     val counts = feats.groupBy("bucket").agg(
       count(lit(1)).as("cnt_r"),
       count(when(col("is_target"), 1)).as("cnt_t"))
@@ -637,20 +635,18 @@ object CorpusOps {
     *
     * Returns (id, is_pos, is_train, n_feat, margin, predicted). */
   def classifierScores(docs: DataFrame, idCol: String, isPos: Column,
-      buckets: Int = 4096): DataFrame = {
+      buckets: Int = 4096): DataFrame = RunScope.compose {
     val trainCut = 3435973836L // ⌊0.8 · 2³²⌋
     val toks = TextFunctions.tokens(col("text"))
     val isTrain = call_function("md5_prefix32",
       concat(col(idCol).cast("string"), lit("#cls"))) < trainCut
-    val base = docs.filter(col("text").isNotNull)
+    val base = RunScope.own(docs.filter(col("text").isNotNull)
       .repartition(docs.sparkSession.sparkContext.defaultParallelism,
         col(idCol))
       .select(col(idCol), isPos.as("is_pos"), isTrain.as("is_train"),
         call_function("md5_buckets",
           concat(toks, call_function("word_shingles", toks, lit(2))),
-          lit(buckets)).as("fb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(docs.sparkSession, base)
+          lit(buckets)).as("fb")))
     // training pass (eager, B-bounded): per-bucket class doc-frequencies
     // + class priors, collected into the weight array
     val trainD = base.filter(col("is_train"))
@@ -658,6 +654,9 @@ object CorpusOps {
       .agg(count(when(col("is_pos"), 1)).as("tot_pos"),
         count(when(!col("is_pos"), 1)).as("tot_neg"))
       .collect().head
+    // the priors collect read the cache: released here, before the
+    // query's action, so the passes below recompute the projection
+    base.unpersist()
     val (totPos, totNeg) = (priors.getLong(0), priors.getLong(1))
     val w = new Array[Long](buckets)
     trainD.select(col("is_pos"), explode(col("fb")).as("bucket"))

@@ -428,9 +428,10 @@ object CorpusQueries extends QueryGroup {
   // calibration, confusion, AUC, operating point, conformal, gains,
   // isotonic, McNemar), previously re-trained and re-scored per query.
   // Resolved ONCE per (session, testdata dir) and materialized to a
-  // session-scoped temp parquet they all scan: a RunScopedCache persist
-  // cannot span independent declared queries (each consumer's own
-  // actions would release it), so the memo is a derived TABLE. That is also the production shape: at 100 TB the
+  // session-scoped temp parquet they all scan: a cache cannot span
+  // independent declared queries (each query's first action releases
+  // what its composition owns), so the memo is a derived TABLE. That is
+  // also the production shape: at 100 TB the
   // scored corpus IS the stored artifact of the quality-filter stage —
   // trained and scored once, consumed by every eval/calibration/selection
   // readout, never refit per report. Rows are identical to a fresh
@@ -445,8 +446,6 @@ object CorpusQueries extends QueryGroup {
       d: String): org.apache.spark.sql.DataFrame =
     s.read.parquet(clsScoresMemo(s, d) {
       val p = TempDirs.scoped("graft-classifier-scores")
-      // the write IS the run-scoped action that releases the internal
-      // cached feature projection registered by classifierScores
       CorpusOps.classifierScores(Tables.documents(s, d), "doc_id",
           col("lang") === "en", 4096)
         .write.mode("overwrite").parquet(p)
@@ -1302,10 +1301,14 @@ object CorpusQueries extends QueryGroup {
     * the same single IEEE divisions of the same integer sums the minimax
     * selects, so the swap is bit-exact, not approximate. */
   private[operators] def isotonicFit(h: org.apache.spark.sql.DataFrame,
-      maxQuadratic: Long = 4096L): org.apache.spark.sql.DataFrame = {
+      maxQuadratic: Long = 4096L): org.apache.spark.sql.DataFrame =
+    RunScope.compose(isotonicFitted(h, maxQuadratic))
+
+  private def isotonicFitted(h: org.apache.spark.sql.DataFrame,
+      maxQuadratic: Long): org.apache.spark.sql.DataFrame = {
     val s = h.sparkSession
-    val hp = h.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dCount = hp.count() // deciding action — not release-registered
+    val hp = RunScope.own(h)
+    val dCount = hp.count() // deciding action
     if (dCount > maxQuadratic) {
       // linear PAV driver-side: integer pool sums, merge while the
       // previous pool's mean >= the new one's (cross-multiplied — exact)
@@ -1343,7 +1346,6 @@ object CorpusQueries extends QueryGroup {
           org.apache.spark.sql.types.DoubleType)))
       return s.createDataFrame(out.toSeq.asJava, schema)
     }
-    RunScopedCache.releaseAfterRun(s, hp)
     val wOrd = Window.orderBy("margin")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pre = hp

@@ -5,7 +5,6 @@ import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Scale-path near-duplicate detection: MinHash+LSH and SimHash (SURVEY §2B
   * Q35 ⚙ / training-data-pipeline dedup). Both are engine-only (⚙): their
@@ -98,11 +97,6 @@ object DedupQueries extends QueryGroup {
       .filter(col("bsz") >= 2)
   }
 
-  /** See [[RunScopedCache.releaseAfterRun]] — release `cached` once the
-    * first action that read it completes. */
-  private def unpersistAfterRun(s: SparkSession, cached: DataFrame): Unit =
-    RunScopedCache.releaseAfterRun(s, cached)
-
   /** Q41 ⚙: MinHash + LSH banding → candidate pairs → exact Jaccard.
     *
     * Perf shape: each shingle string is hashed to a long ONCE; the k minhash
@@ -118,7 +112,7 @@ object DedupQueries extends QueryGroup {
     *
     * The shared (doc_id, shingles, token-set) projection is persisted so the
     * candidate branch and the verify branch read `documents` once, and
-    * released by [[unpersistAfterRun]] when the query's action completes; at
+    * released by the query's first action ([[RunScope]]); at
     * 100 TB the same role is played by materializing this projection to
     * storage (it is the reusable artifact of the whole dedup pipeline). */
   private val q41: Q = (s, d) =>
@@ -142,13 +136,11 @@ object DedupQueries extends QueryGroup {
     * bounded band buckets → candidate pairs → exact-Jaccard verify. */
   private def lshBandedJaccard(s: SparkSession, d: String, bandFn: String,
       metric: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(
+    val docs = RunScope.own(Tables.documents(s, d).select(
       col("doc_id"),
       call_function("word_shingles",
         TextFunctions.tokens(col("text")), lit(3)).as("sh"),
-      TextFunctions.tokenSet(col("text")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    unpersistAfterRun(s, docs)
+      TextFunctions.tokenSet(col("text")).as("w")))
     // native one-pass signature+banding (graft.plans.MinHashBands); only
     // (doc_id, band) goes through the shuffle — token arrays never do.
     val banded = docs.select(col("doc_id"),
@@ -541,7 +533,7 @@ object DedupQueries extends QueryGroup {
     val k = 16
     // group key = SORTED distinct token set: all pair-level values are set
     // functions, so set-equal docs collapse regardless of token order
-    val groups = Tables.documents(s, d).filter(col("text").isNotNull)
+    val groups = RunScope.own(Tables.documents(s, d).filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"),
         array_sort(TextFunctions.tokenSet(col("text"))).as("w"))
       .filter(size(col("w")) > 0)
@@ -550,15 +542,13 @@ object DedupQueries extends QueryGroup {
       .withColumn("mh", call_function("minhash_sig_md5", col("w"), lit(k)))
       .withColumn("n_w", size(col("w")))
       .withColumn("hw", call_function("token_hashes", col("w")))
-      .select("source", "gid", "c", "mh", "n_w", "hw")
-      .persist()
+      .select("source", "gid", "c", "mh", "n_w", "hw"))
     // signatures materialize ONCE (the q41 persisted-projection
     // discipline): un-persisted, the optimizer inlines the signature
     // expression into BOTH join sides' pair-level consumers and
     // recomputes it per candidate pair — measured 17 s (HOF) / 50 s
     // (native, inlined deeper) vs 4.8 s persisted+hashed-intersection on
     // the sf0.1 singleton
-    RunScopedCache.releaseAfterRun(s, groups)
     val a = groups.select(col("source"), col("gid").as("a_id"),
       col("c").as("a_c"), col("n_w").as("a_n"), col("hw").as("a_h"),
       col("mh").as("a_mh"))
@@ -722,13 +712,11 @@ object DedupQueries extends QueryGroup {
     * verify join touches only colliding docs. Token sets cross the wire
     * once, candidates only. */
   private val q113: Q = (s, d) => {
-    val docs = Tables.documents(s, d).select(
+    val docs = RunScope.own(Tables.documents(s, d).select(
       col("doc_id"), (col("doc_id") % 5 === 0).as("is_bench"),
       call_function("word_shingles",
         TextFunctions.tokens(col("text")), lit(3)).as("sh"),
-      TextFunctions.tokenSet(col("text")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    unpersistAfterRun(s, docs)
+      TextFunctions.tokenSet(col("text")).as("w")))
     val banded = docs.select(col("doc_id"), col("is_bench"),
       posexplode(call_function("minhash_bands_md5", col("sh"),
         lit(numHashes), lit(bandSize))).as(Seq("band_idx", "band_hash")))

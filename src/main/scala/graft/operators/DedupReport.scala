@@ -54,11 +54,23 @@ object DedupReport {
     * stay singletons via a per-doc group key (the shared md5('')
     * fingerprint would glue them into one bogus clique). */
   def assignComponents(s: SparkSession, documents: DataFrame,
-      tau: Double = 0.8): DataFrame = {
-    val (out, cachedDocs) = assignComponentsImpl(s, documents, tau)
-    // run-scoped: the first action reading the projection releases it
-    RunScopedCache.releaseAfterRun(s, cachedDocs)
-    out
+      tau: Double = 0.8): DataFrame = RunScope.compose {
+    val docs = RunScope.own(groupCollapsed(documents))
+    val repDocs = docs.filter(col("doc_id") === col("rep") && col("w").isNotNull)
+      .select(col("doc_id").as("id"), col("source").as("block"), col("w"))
+    // round 10: the rep pair stage picks blocked-vs-tiled by measurement
+    // (hashed merge kernel; identical pairs to postingsCount, spec-pinned
+    // — postings remains the sparse-corpus regime)
+    val repPairs = SimilarityJoin.jaccardAdaptive(repDocs, tau)
+      .select(col("a_id").as("a"), col("b_id").as("b"))
+    // components run on the REPRESENTATIVE graph only; the rep-graph label
+    // (min rep id) IS the cluster's min doc_id because each group's
+    // minimum member is its rep
+    val comp = ConnectedComponents.run(repPairs)
+    docs.select(col("doc_id"), col("rep"))
+      .join(comp, col("rep") === col("node"), "left")
+      .select(col("doc_id"),
+        coalesce(col("component"), col("rep")).as("component"))
   }
 
   private val componentsMemo = new SessionMemo[String]
@@ -66,10 +78,10 @@ object DedupReport {
   /** [[assignComponents]] over the canonical documents table at τ = 0.8 —
     * the derivation FOUR independent declared queries (q66/q79/q154/q174)
     * share — resolved ONCE per (session, testdata dir) and materialized to
-    * a session-scoped temp parquet they all scan. A RunScopedCache persist
-    * cannot span independent declared queries (each consumer's own persist
-    * would nest it invisibly — the round-11 lesson), so the memo is a
-    * derived TABLE, which is also the production shape: at 100 TB the
+    * a session-scoped temp parquet they all scan. A cache cannot span
+    * independent declared queries (each query's first action releases
+    * what its composition owns), so the memo is a derived TABLE, which is
+    * also the production shape: at 100 TB the
     * (doc_id, component) assignment is the stored artifact of the dedup
     * stage, written once and scanned by every downstream consumer, never
     * re-resolved per report. Rows are identical to a fresh resolution
@@ -79,8 +91,6 @@ object DedupReport {
   def assignComponentsMemo(s: SparkSession, d: String): DataFrame =
     s.read.parquet(componentsMemo(s, d) {
       val p = TempDirs.scoped("graft-dedup-components")
-      // the write IS the run-scoped action that releases the internal
-      // cached projection registered by assignComponents
       assignComponents(s, graft.Tables.documents(s, d), tau = 0.8)
         .write.mode("overwrite").parquet(p)
       p
@@ -112,48 +122,21 @@ object DedupReport {
           TextFunctions.tokenSet(col("text"))).as("w"))
   }
 
-  /** The pipeline plus its internal cached projection. [[build]] needs the
-    * cache handle explicitly: it persists the RESULT on top, so an action's
-    * plan surfaces only the outer InMemoryRelation — RunScopedCache's
-    * listener (which matches cache plans appearing in the executed query)
-    * would never see the inner one and the projection would stay pinned
-    * forever (exactly the leak DedupBucketCapSpec's cache-drain polls
-    * caught in round 10). */
-  private def assignComponentsImpl(s: SparkSession, documents: DataFrame,
-      tau: Double): (DataFrame, DataFrame) = {
-    val docs = groupCollapsed(documents)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val repDocs = docs.filter(col("doc_id") === col("rep") && col("w").isNotNull)
-      .select(col("doc_id").as("id"), col("source").as("block"), col("w"))
-    // round 10: the rep pair stage picks blocked-vs-tiled by measurement
-    // (hashed merge kernel; identical pairs to postingsCount, spec-pinned
-    // — postings remains the sparse-corpus regime)
-    val repPairs = SimilarityJoin.jaccardAdaptive(repDocs, tau)
-      .select(col("a_id").as("a"), col("b_id").as("b"))
-    // components run on the REPRESENTATIVE graph only; the rep-graph label
-    // (min rep id) IS the cluster's min doc_id because each group's
-    // minimum member is its rep
-    val comp = ConnectedComponents.run(repPairs)
-    val out = docs.select(col("doc_id"), col("rep"))
-      .join(comp, col("rep") === col("node"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("rep")).as("component"))
-    (out, docs)
-  }
-
   /** Resolve once, derive everything. The assignment is materialized
     * eagerly (the one heavy job); keepers/histogram/summary are cheap
-    * scans of the cached two-column frame. */
+    * scans of the cached two-column frame. The resolution's own cache goes
+    * when the materialization ends. */
   def build(s: SparkSession, documents: DataFrame,
       tau: Double = 0.8): Report = {
-    val (resolved, cachedDocs) = assignComponentsImpl(s, documents, tau)
-    val assignments = resolved.persist(StorageLevel.MEMORY_AND_DISK)
-    // on a failed materialization no Report (hence no release handle) is
-    // ever returned — drop the just-persisted frame too, or a session
-    // retrying builds accumulates dead pinned caches
-    try assignments.count() // materialize: derivations below read cache
-    catch { case t: Throwable => assignments.unpersist(); throw t }
-    finally cachedDocs.unpersist() // see assignComponentsImpl's doc
+    val assignments = RunScope.within {
+      val a = assignComponents(s, documents, tau).persist(StorageLevel.MEMORY_AND_DISK)
+      // on a failed materialization no Report (hence no release handle) is
+      // ever returned — drop the just-persisted frame too, or a session
+      // retrying builds accumulates dead pinned caches
+      try a.count() // materialize: derivations below read cache
+      catch { case t: Throwable => a.unpersist(); throw t }
+      a
+    }
     val keepers = assignments
       .withColumn("keep", col("doc_id") === col("component"))
     val histogram = assignments
@@ -214,13 +197,15 @@ object DedupReport {
     * fast path (no old-corpus scan at all). */
   def extendWithIndex(s: SparkSession, oldReps: DataFrame,
       assignments: DataFrame, newDocs: DataFrame,
-      tau: Double = 0.8): DataFrame = {
-    val nd = groupCollapsed(newDocs).persist(StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, nd)
+      tau: Double = 0.8): DataFrame = RunScope.compose {
+    val nd = RunScope.own(groupCollapsed(newDocs))
     val newReps = nd.filter(col("doc_id") === col("rep") && col("w").isNotNull)
       .select(col("doc_id").as("id"), col("source").as("block"), col("w"))
     val newNew = SimilarityJoin.jaccardAdaptive(newReps, tau)
       .select(col("a_id").as("a"), col("b_id").as("b"))
+    // the adaptive sizing job above read the cache: released here, before
+    // the query's action, so the passes below recompute the collapse
+    nd.unpersist()
     val newOld = SimilarityJoin.jaccardBipartite(newReps, oldReps, tau,
         metricName = "extend_pairs_bipartite")
       .join(assignments.select(col("doc_id").as("b_id"),

@@ -52,17 +52,16 @@ object PageRank {
   def run(edges0: DataFrame, iterations: Int,
       driverMaxEdges: Long = 2000000L,
       broadcastNodes: Long = 10000000L,
-      seeds: Option[DataFrame] = None): DataFrame = {
+      seeds: Option[DataFrame] = None): DataFrame =
+    RunScope.compose(ranked(edges0, iterations, driverMaxEdges, broadcastNodes, seeds))
+
+  private def ranked(edges0: DataFrame, iterations: Int, driverMaxEdges: Long,
+      broadcastNodes: Long, seeds: Option[DataFrame]): DataFrame = {
     require(iterations >= 1 && iterations <= 10,
       s"iterations must be in [1, 10] (bounded plan chain): $iterations")
-    val spark = edges0.sparkSession
-    // the deciding count() must not be release-registered (it would
-    // release the cache at the count and the collect / deg build would
-    // re-derive the whole edge list — measured ~1.5 s wasted on q129):
-    // the collected branch unpersists explicitly after its warm collect;
-    // the distributed branch drops the cache right after the deg/edges
-    // build consumes it (its IMR would be invisible — nested under the
-    // edges/nodes caches — so a release listener could never fire)
+    // the edge list is cached for the deciding count and then dropped
+    // explicitly: by the collected branch after its warm collect, by the
+    // distributed branch once the deg/edges build has consumed it
     val raw = edges0.select(col("src"), col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ecnt = raw.count()
@@ -95,9 +94,8 @@ object PageRank {
     // (deg broadcasts while |V| allows); the giant-graph non-broadcast
     // branch re-exchanges per round regardless, where the extra build
     // shuffle is noise.
-    val edges = raw.join(deg, "src")
-      .repartition(col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = RunScope.own(raw.join(deg, "src")
+      .repartition(col("dst")))
     // seeds stay DISTRIBUTED on this path (a web-scale personalization
     // set — all pages of one site — would OOM a collect and bloat the
     // plan as an in-list): membership becomes a left-join flag, which
@@ -105,23 +103,19 @@ object PageRank {
     // it is not. Flag semantics are identical to the collected path's
     // set membership, so PageRankSpec's bit-equality pin still holds.
     val nodes0 = deg.select(col("src").as("node"))
-    val nodes = (seeds match {
+    val nodes = RunScope.own(seeds match {
       case Some(sd) =>
         nodes0.join(
           sd.select(col("node")).distinct().withColumn("is_seed", lit(true)),
           Seq("node"), "left")
           .withColumn("is_seed", coalesce(col("is_seed"), lit(false)))
       case None => nodes0.withColumn("is_seed", lit(true))
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    })
     // materialize BOTH working-set caches while raw is still warm, then
-    // drop raw and register the run-scoped releases — registering before
-    // these counts would release each cache at its own deciding action
-    // and every iteration would rebuild it from source
+    // drop raw
     val nn = nodes.count()
     edges.count()
     raw.unpersist()
-    RunScopedCache.releaseAfterRun(spark, edges)
-    RunScopedCache.releaseAfterRun(spark, nodes)
     val small = nn <= broadcastNodes
     // personalized: unit-based seed algebra; standard: q129's pinned form.
     // ns counts seeds PRESENT IN THE GRAPH (the collected path indexes
@@ -129,6 +123,9 @@ object PageRank {
     val (baseCol, initCol) = seeds match {
       case Some(_) =>
         val ns = nodes.filter(col("is_seed")).count()
+        // this count read the node cache: released here, before the
+        // query's action, so the rounds recompute the node table
+        nodes.unpersist()
         require(ns > 0, "personalization needs a non-empty seed set")
         val unit = Scale / ns
         (when(col("is_seed"), lit((15L * unit) / 100L)).otherwise(lit(0L)),
@@ -257,37 +254,28 @@ object Triangles {
     *   tens of MB up to ~50M edges). Set false for graphs whose node or
     *   adjacency tables outgrow executor memory — the joins fall back to
     *   key-keyed shuffles, the only plan a billion-node graph admits. */
-  def perNode(edges0: DataFrame, broadcastTables: Boolean = true): DataFrame = {
+  def perNode(edges0: DataFrame, broadcastTables: Boolean = true): DataFrame = RunScope.compose {
     val spark = edges0.sparkSession
     def bc(df: DataFrame): DataFrame = if (broadcastTables) broadcast(df) else df
     val e = edges0.select(col("a"), col("b"))
     val deg0 = degrees(e)
     val lowFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-    // ONE run-scoped cache, on the oriented edges — they feed the
-    // adjacency build, the probe side, and the final degree table.
-    // (Exactly one persist level: nesting a second cache under it would
-    // hide the inner InMemoryRelation from RunScopedCache's release
-    // listener and pin it forever — the documented DedupReport leak.)
-    // Inside this single materialization `e` occurs twice (degrees +
-    // join); ReuseExchange dedupes its shuffle within the plan.
-    val o = e
+    // the oriented edges are cached — they feed the adjacency build, the
+    // probe side, and the final degree table. Inside this single
+    // materialization `e` occurs twice (degrees + join); ReuseExchange
+    // dedupes its shuffle within the plan.
+    val o = RunScope.own(e
       .join(bc(deg0.select(col("n").as("a"), col("deg").as("da"))), "a")
       .join(bc(deg0.select(col("n").as("b"), col("deg").as("db"))), "b")
       .select(when(lowFirst, col("a")).otherwise(col("b")).as("src"),
-        when(lowFirst, col("b")).otherwise(col("a")).as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(spark, o)
+        when(lowFirst, col("b")).otherwise(col("a")).as("dst")))
     // adjacency persisted: it feeds BOTH broadcast sides of the wedge
     // probe, and the two BroadcastExchanges differ by a rename so the
     // planner builds each from scratch — re-running the collect_list
     // aggregation twice (profiled at sf0.1: 2 × ~25 s of task time,
     // guide §2.4). The cache materializes at the first broadcast build
-    // and the second reads it; its IMR stays visible in the final plan
-    // (adj is not nested under another persist), so the run-scoped
-    // release fires at the query's own action.
-    val adj = o.groupBy("src").agg(collect_list(col("dst")).as("nbrs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(spark, adj)
+    // and the second reads it.
+    val adj = RunScope.own(o.groupBy("src").agg(collect_list(col("dst")).as("nbrs")))
     // the wedge-closure probe is COMPUTE-amplifying (an array_intersect
     // of two O(√m) lists per oriented edge) over small input bytes, so
     // AQE coalesces it to a handful of tasks (profiled: 40 s of CPU on 8
@@ -352,18 +340,17 @@ object LabelPropagation {
     * LabelPropagationSpec). */
   def run(edges0: DataFrame, iterations: Int,
       broadcastTables: Boolean = true,
-      driverMaxEdges: Long = 2000000L): DataFrame = {
+      driverMaxEdges: Long = 2000000L): DataFrame =
+    RunScope.compose(propagated(edges0, iterations, broadcastTables, driverMaxEdges))
+
+  private def propagated(edges0: DataFrame, iterations: Int,
+      broadcastTables: Boolean, driverMaxEdges: Long): DataFrame = {
     require(iterations >= 1 && iterations <= 10,
       s"iterations must be in [1, 10] (bounded plan chain): $iterations")
-    val spark = edges0.sparkSession
     def bc(df: DataFrame): DataFrame = if (broadcastTables) broadcast(df) else df
-    // lifetime: the deciding count() must NOT be release-registered — a
-    // listener registered before it would release the cache at the count
-    // and the collect/rounds would re-derive the edge list from scratch.
-    // Collected branch unpersists explicitly after its collect; the
-    // distributed branch registers the release AFTER the count, so the
-    // final action (whose plan reads e's InMemoryRelation directly via
-    // the un-persisted sym union) drops it.
+    // the edge list is cached for the deciding count; the collected
+    // branch unpersists it after its collect, the distributed branch once
+    // sym has consumed it
     val e = edges0.select(col("a"), col("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ecnt = e.count()
@@ -373,17 +360,12 @@ object LabelPropagation {
     // on sym), so BOTH per-round aggregations — (node, lbl) counts and
     // the per-node argmax — reuse the cached hash(src≡node) layout and
     // the rounds run exchange-free over 2|E| rows. Materialize sym while
-    // e is warm, then drop e EXPLICITLY (its IMR nests under sym's and a
-    // release listener could never see it — the DedupReport leak) and
-    // register the run-scoped release on sym, whose IMR the final action
-    // reads directly.
-    val sym = e.select(col("a").as("src"), col("b").as("dst"))
+    // e is warm, then drop e.
+    val sym = RunScope.own(e.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     sym.count()
     e.unpersist()
-    RunScopedCache.releaseAfterRun(spark, sym)
     var labels = sym.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     for (_ <- 1 to iterations) {
@@ -477,14 +459,17 @@ object KCore {
     * from lineage; a production run over billions of edges would
     * checkpoint the live edge set every few rounds instead. */
   def run(edges0: DataFrame, k: Int, rounds: Int,
-      driverMaxEdges: Long = 2000000L): DataFrame = {
+      driverMaxEdges: Long = 2000000L): DataFrame =
+    RunScope.compose(peel(edges0, k, rounds, driverMaxEdges))
+
+  private def peel(edges0: DataFrame, k: Int, rounds: Int,
+      driverMaxEdges: Long): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(rounds >= 1 && rounds <= 12,
       s"rounds must be in [1, 12] (bounded plan chain): $rounds")
-    val spark = edges0.sparkSession
     val first = edges0.select(col("a"), col("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ecnt = first.count() // deciding count — never release-registered
+    val ecnt = first.count() // deciding count
     if (ecnt <= driverMaxEdges) return runCollected(first, k, rounds)
     def degreesOf(e: DataFrame): DataFrame =
       e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
@@ -492,34 +477,29 @@ object KCore {
     var curEdges = first
     var curAlive = first.select(col("a").as("node"))
       .unionAll(first.select(col("b").as("node"))).distinct()
-    val degCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val peeled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var converged = false
     var r = 1
     while (r <= rounds && !converged) {
-      val deg = curAlive.join(degreesOf(curEdges), Seq("node"), "left")
-        .select(col("node"), coalesce(col("dc"), lit(0L)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      degCaches += deg
+      val deg = RunScope.own(curAlive.join(degreesOf(curEdges), Seq("node"), "left")
+        .select(col("node"), coalesce(col("dc"), lit(0L)).as("deg")))
       val p = deg.filter(col("deg") < k)
         .select(col("node"), lit(r).as("peel_round"), col("deg"))
       if (p.count() == 0L) {
         // nothing peels: remaining rounds are no-ops; this round's deg
         // table IS the survivor degree table. The live edge cache is no
         // longer referenced by anything the final action reads (its deg
-        // aggregation just materialized), so a release LISTENER on it
-        // would never fire — drop it directly.
+        // aggregation just materialized) — drop it now.
         converged = true
         peeled += deg.select(col("node"), lit(0).as("peel_round"), col("deg"))
         curEdges.unpersist()
       } else {
         peeled += p
         val aliveNext = deg.filter(col("deg") >= k).select(col("node"))
-        val eNext = curEdges
+        val eNext = RunScope.own(curEdges
           .join(aliveNext.select(col("node").as("a")), Seq("a"), "left_semi")
           .join(aliveNext.select(col("node").as("b")), Seq("b"), "left_semi")
-          .select(col("a"), col("b"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select(col("a"), col("b")))
         eNext.count() // materialize (reads curEdges + this round's deg)
         curEdges.unpersist()
         curEdges = eNext
@@ -534,12 +514,6 @@ object KCore {
         .select(col("node"), lit(0).as("peel_round"),
           coalesce(col("dc"), lit(0L)).as("deg"))
     }
-    // register releases only now: during the loop each round's action
-    // READS earlier deg caches (alive sets are filters over them) and a
-    // listener would have dropped them mid-iteration, forcing the final
-    // union to re-derive whole unpersisted edge chains
-    degCaches.foreach(RunScopedCache.releaseAfterRun(spark, _))
-    if (!converged) RunScopedCache.releaseAfterRun(spark, curEdges)
     peeled.reduce(_.unionAll(_))
   }
 
@@ -600,12 +574,9 @@ object GraphQueries extends QueryGroup {
   /** The part co-purchase edge list (canonical a < b pairs sharing an
     * order) shared by q133 and q134 — derived ONCE per (session, testdata
     * dir) and materialized to a session-scoped temp parquet that both
-    * queries scan. A RunScopedCache persist cannot span two INDEPENDENT
-    * declared queries: each consumer wraps the edges in its own persist,
-    * which nests the edge cache invisibly under the consumer's
-    * InMemoryRelation (the round-11 lesson — the release listener can
-    * never see it, so it pins forever and trips the suite's cache-leak
-    * tripwire). A derived TABLE is also the production shape: at 100 TB
+    * queries scan. A cache cannot span two INDEPENDENT declared queries:
+    * each query's first action releases what its composition owns. A
+    * derived TABLE is also the production shape: at 100 TB
     * an edge list is a stored artifact every graph analysis scans, not a
     * self-join each analysis re-runs. Rows are identical either way
     * (deterministic derivation; the oracles recompute from raw lineitem
@@ -1054,9 +1025,8 @@ object GraphQueries extends QueryGroup {
     // round never shuffles |E| REGISTER ARRAYS (64 ints/row — the
     // heaviest shuffle payload in the suite; sf1 measured ~3 GB/round
     // on the union-then-groupBy form)
-    val edges = purchaseEdgesSym(s, d)
-      .repartition(col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = RunScope.own(purchaseEdgesSym(s, d)
+      .repartition(col("dst")))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // registers broadcast while the packed-register table fits a
     // per-executor broadcast BUDGET — the threshold is BYTES, not a node
@@ -1105,17 +1075,15 @@ object GraphQueries extends QueryGroup {
           .join(broadcast(reg), edges("src") === reg("node"))
           .select(col("dst").as("node"), col("regs"))
           .groupBy("node").agg(regMins.as("nregs"))
-        reg.join(nbAgg, Seq("node"), "left")
+        RunScope.own(reg.join(nbAgg, Seq("node"), "left")
           .select(col("node"), coalesce(
             expr("zip_with(regs, nregs, (x, y) -> least(x, y))"),
-            col("regs")).as("regs"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            col("regs")).as("regs")))
       } else {
         val nb = edges.join(reg, edges("src") === reg("node"))
           .select(col("dst").as("node"), col("regs"))
-        reg.unionAll(nb).groupBy("node")
-          .agg(regMins.as("regs"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        RunScope.own(reg.unionAll(nb).groupBy("node")
+          .agg(regMins.as("regs")))
       }
       rounds += reg
     }
@@ -1128,9 +1096,6 @@ object GraphQueries extends QueryGroup {
     // of near-zero CPU blocked on cache population plus duplicate merge
     // work). Three |V|-row counts are noise; each round now computes
     // exactly once, reading the PREVIOUS round's completed cache.
-    // Release listeners register AFTER these counts (the round-11
-    // PageRank lesson: registered before, each count would release the
-    // cache it just built).
     rounds.foreach(_.count())
     def ballSum(r: DataFrame, tag: String): DataFrame =
       r.select(col("node"), expr(
@@ -1138,7 +1103,7 @@ object GraphQueries extends QueryGroup {
         .as(s"s$tag"))
     val est = (c: org.apache.spark.sql.Column) =>
       lit(0.709) * lit(4096.0) * lit(134217728.0) / c.cast("double")
-    val out = ballSum(rounds(0), "1")
+    ballSum(rounds(0), "1")
       .join(ballSum(rounds(1), "2"), "node")
       .join(ballSum(rounds(2), "3"), "node")
       .join(deg.select(col("src").as("node"),
@@ -1149,9 +1114,6 @@ object GraphQueries extends QueryGroup {
         est(col("s3")).as("est3"))
       .orderBy(col("s3").asc, col("node"))
       .limit(100)
-    RunScopedCache.releaseAfterRun(s, edges)
-    rounds.foreach(r => RunScopedCache.releaseAfterRun(s, r))
-    out
   }
 
   val queries: Seq[(String, Q)] = Seq(

@@ -100,17 +100,13 @@ object MediaDedup {
   /** Shared tail of the q102/q103 pipelines: banded pairs re-keyed to the
     * human-readable "kind:seed" endpoints, deterministically ordered. */
   private def keyedPairs(spark: SparkSession, hashed0: DataFrame,
-      metric: String, block: String): DataFrame = {
+      metric: String, block: String): DataFrame = RunScope.compose {
     // persist the decode-bearing hash projection: the final plan consumes
     // it FOUR times (banded exact branch, star branch, and both key-join
     // sides), and every consumption re-ran the per-row media codec UDFs
     // (PNG/WAV decode + hash — the only genuinely expensive per-row work
-    // in this family; guide §2.4). Run-scoped: the IMR is visible in the
-    // final plan (no nested persist inside simhashBandPairs), so the
-    // query's own action releases it.
-    val hashed = hashed0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(spark, hashed)
+    // in this family; guide §2.4). The query's first action releases it.
+    val hashed = RunScope.own(hashed0)
     val keyed = hashed.select(col("media_id"), col("key"))
     pairs(spark, hashed, "phash", metric, block)
       .join(keyed.select(col("media_id").as("a_id"), col("key").as("a_key")),

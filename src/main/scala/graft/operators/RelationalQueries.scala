@@ -1182,12 +1182,9 @@ object RelationalQueries extends QueryGroup {
     * is deliberate: the collected targets are ≤ 2 ranks per segment BY
     * CONSTRUCTION, and collecting them is what lets the drill-down push
     * LITERAL value ranges to the parquet reader (a join filter never
-    * reaches it). The latest-wins frame is RunScopedCache-persisted
-    * under the compose-time-action discipline (supersede right after
-    * persisting — its first consuming action runs BEFORE its own
-    * release registration, the r16 hazard; releaseAfterRun registered
-    * only AFTER the locate collect, the round-11 rule — the readout's
-    * final action reads the same IMR twice and releases it): without
+    * reaches it). The latest-wins frame is cached and owned by the
+    * composition ([[RunScope]]): the compose-time locate actions read it
+    * and the readout's first action releases it. Without
     * the cache the per-custkey window recomputed FOUR times per run
     * (retract + add at locate, anti-join + add at readout — the r20
     * profile).
@@ -1213,14 +1210,9 @@ object RelationalQueries extends QueryGroup {
         col("o_orderkey").as("seq"),
         when(col("o_orderkey") % 10 === 0, lit("D"))
           .otherwise(lit("U")).as("op"))
-    val latest = feed.withColumn("rn", row_number().over(
+    val latest = RunScope.own(feed.withColumn("rn", row_number().over(
         W.partitionBy("c_custkey").orderBy(col("seq").desc)))
-      .filter(col("rn") === 1).drop("rn", "seq")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // compose-time actions below consume this cache BEFORE its release
-    // listener registers — clear any stale equivalent listener NOW (the
-    // r16 hazard; the SimilarityJoin.staged rule)
-    RunScopedCache.supersede(s, latest)
+      .filter(col("rn") === 1).drop("rn", "seq"))
     // materialize BEFORE the two-branch locate consumes it: the p50/p90
     // union branches otherwise race to populate the cache concurrently
     // (the q254 round-cache lesson — profiled here as two 65-task jobs
@@ -1280,10 +1272,6 @@ object RelationalQueries extends QueryGroup {
         (col("t.r") - (col("cum") - col("n"))).as("resid"),
         col("t.which").as("which"), col("nr"))
     val targetRows = targets0.collect()
-    // release registered only AFTER the compose-time locate actions (the
-    // round-11 rule): the readout plan below reads the cached `latest`
-    // IMR twice and its consuming action fires the release
-    RunScopedCache.releaseAfterRun(s, latest)
     val targets = s.createDataFrame(
       java.util.Arrays.asList(targetRows: _*), targets0.schema)
     val targetBuckets = targetRows.map(_.getAs[Long]("bucket"))
@@ -1337,8 +1325,8 @@ object RelationalQueries extends QueryGroup {
     * locate collect and the refinement rounds run Spark jobs when the
     * query is COMPOSED — driver-sized by construction (≤ 2 ranks per
     * segment; ~5 counting passes), and what lets the drill push LITERAL
-    * value ranges into the scan. Schema-only consumers pay them; no
-    * RunScopedCache is involved, so no release-listener interplay.
+    * value ranges into the scan. Schema-only consumers pay them; nothing
+    * is cached.
     *
     * The ORACLE recomputes the surviving set's exact nearest-rank
     * percentiles directly — the hash match proves coarse-bucket state +

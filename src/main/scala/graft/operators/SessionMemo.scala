@@ -24,6 +24,8 @@ import org.apache.spark.sql.SparkSession
   *    calls for other entries or other handles never wait on it. A build
   *    may call another handle.
   *  - A build that throws stores nothing; the next call builds again.
+  *  - A build runs in [[RunScope.within]]: the caches it owns go when it
+  *    ends, never with an enclosing query's scope.
   *
   * Files a build writes belong to the build: memo parquet and fixture
   * lakes live under [[TempDirs.scoped]] and go at JVM exit.
@@ -44,7 +46,7 @@ final class SessionMemo[V] {
     val entry = entries.computeIfAbsent(dir, _ => new Entry)
     entry.synchronized {
       entry.value.getOrElse {
-        val v = build
+        val v = RunScope.within(build)
         entry.value = Some(v)
         v
       }

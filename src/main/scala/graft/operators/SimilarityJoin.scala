@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Exact τ-Jaccard self-join over token sets, with two interchangeable
   * physical strategies (results are provably identical):
@@ -488,8 +487,8 @@ object SimilarityJoin {
     *
     * The staged projection (id, group, rep, token set for reps only) is
     * persisted so the corpus is scanned and fingerprinted once across the
-    * rep/member/clique branches, and released by
-    * [[RunScopedCache.releaseAfterRun]] when the query's action completes.
+    * rep/member/clique branches; the composition owns it ([[RunScope]]),
+    * so the query's first action releases it.
     *
     * [[stagedPostingsCount]] / [[stagedPrefixFilter]] are the two named
     * compositions; [[staged]] is the strategy-agnostic core. */
@@ -509,34 +508,23 @@ object SimilarityJoin {
       prefixFilter(_, _, metricName = "sj_candidates_staged_prefix"))
 
   def staged(s: SparkSession, docs: DataFrame, tau: Double)(
-      inner: (DataFrame, Double) => DataFrame): DataFrame = {
+      inner: (DataFrame, Double) => DataFrame): DataFrame = RunScope.compose {
     // 128-bit order-independent set fingerprint. The NUL joiner keeps the
     // encoding unambiguous for space-bearing elements (shingle sets, where
     // {"a b","c"} and {"a","b c"} must not collide under a space joiner).
     // Collision odds at 1e12 docs ~ 1e-15 — the
     // same exactness budget the md5-based exact-dedup queries accept.
     val grpW = Window.partitionBy(col("block"), col("fp"))
-    val collapsed = docs
+    val collapsed = RunScope.own(docs
       .filter(col("w").isNotNull && size(col("w")) > 0)
       .withColumn("fp", md5(concat_ws("\u0000", array_sort(col("w")))))
       .withColumn("rep", min(col("id")).over(grpW))
       // token sets are kept for representatives only — members drop theirs
       // before the persist, so the cached footprint shrinks with the dup rate
       .select(col("id"), col("block"), col("fp"), col("rep"),
-        when(col("id") === col("rep"), col("w")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // a stale release listener from an equivalent DISCARDED construction
-    // (schema-only consumers compose but never run) must not fire on the
-    // adaptive inner's sizing job below and kill the fresh cache entry —
-    // supersede it before any action touches the cache (round 16)
-    RunScopedCache.supersede(s, collapsed)
-    // NOTE: the run-scoped release is registered AFTER the inner strategy
-    // is composed, at the end of this method — an ADAPTIVE inner runs its
-    // sizing job against the cache at compose time, and a listener
-    // registered before it would treat that sizing action as "the run"
-    // and drop the cache before the main query ever executes (cost the
-    // q37 InMemoryRelation plan pin in round 10; the sizing job also
-    // conveniently pre-warms the cache).
+        when(col("id") === col("rep"), col("w")).as("w")))
+    // an ADAPTIVE inner runs its sizing job against the cache here, at
+    // compose time, which also pre-warms it
     val repPairs = inner(
       collapsed.filter(col("id") === col("rep"))
         .select(col("id"), col("block"), col("w")), tau)
@@ -555,7 +543,6 @@ object SimilarityJoin {
         col("block") === col("b_block") && col("fp") === col("b_fp") &&
           col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"), lit(1.0).as("jaccard"))
-    RunScopedCache.releaseAfterRun(s, collapsed)
     cross.unionByName(clique)
   }
 

@@ -185,11 +185,9 @@ object TextQueries extends QueryGroup {
     // shared (doc_id, tok) projection persisted so pass 1 (df dictionary)
     // and pass 2 (probe join) tokenize the corpus ONCE — the
     // lshBandedJaccard pattern; released when the query's action completes
-    val exploded = Tables.documents(s, d)
+    val exploded = RunScope.own(Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(TextFunctions.tokenSet(col("text"))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, exploded)
+        explode(TextFunctions.tokenSet(col("text"))).as("tok")))
     val dfTable = exploded.groupBy("tok")
       .agg(count(lit(1)).as("df"))
     exploded.join(dfTable, "tok")
@@ -235,12 +233,10 @@ object TextQueries extends QueryGroup {
     * broadcastable by construction); scoring = one join of the exploded
     * corpus against the 1000-row vocab (broadcast) + one groupBy(doc). */
   private val q94: Q = (s, d) => {
-    val exploded = Tables.documents(s, d)
+    val exploded = RunScope.own(Tables.documents(s, d)
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
-        explode(TextFunctions.tokens(col("text"))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, exploded)
+        explode(TextFunctions.tokens(col("text"))).as("tok")))
     // top-k via orderBy+limit → TakeOrderedAndProject: a distributed
     // per-partition top-1000 merged on the driver, never the single-task
     // global window a row_number() rank would plan over a web-scale
@@ -270,12 +266,10 @@ object TextQueries extends QueryGroup {
     * counts, token-keyed probe join (1:1 on the count side, AQE
     * skew-split for Zipf-hot tokens), one groupBy(doc) to close. */
   private val q95: Q = (s, d) => {
-    val exploded = Tables.documents(s, d)
+    val exploded = RunScope.own(Tables.documents(s, d)
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
-        explode(TextFunctions.tokens(col("text"))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, exploded)
+        explode(TextFunctions.tokens(col("text"))).as("tok")))
     val counts = exploded.groupBy("tok").agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("total"))
     exploded.join(counts, "tok")
@@ -913,15 +907,13 @@ object TextQueries extends QueryGroup {
     val raw = concat(decor, lit(" "), substring(col("text"), 1, 40))
     // the kernel outputs persist before fan-out: CollapseProject would
     // otherwise inline nfc_normalize(raw) into nfc, n_nfc AND nfc_changed
-    // and run the kernel 3x per row (the q110 gotcha; q84's persist +
-    // release-after-run pattern)
-    val base = Tables.documents(s, d).filter(col("text").isNotNull)
+    // and run the kernel 3x per row (the q110 gotcha; q84's owned
+    // persist)
+    val base = RunScope.own(Tables.documents(s, d).filter(col("text").isNotNull)
       .select(col("doc_id"), raw.as("raw"))
       .select(col("doc_id"), col("raw"),
         call_function("nfc_normalize", col("raw")).as("nfc"),
-        call_function("strip_accents", col("raw")).as("folded"))
-      .persist()
-    RunScopedCache.releaseAfterRun(s, base)
+        call_function("strip_accents", col("raw")).as("folded")))
     base.select(col("doc_id"), col("raw"), col("nfc"), col("folded"),
         length(col("raw")).as("n_raw"),
         length(col("nfc")).as("n_nfc"),
@@ -1126,14 +1118,9 @@ object TextQueries extends QueryGroup {
     // final plan (sizes→ids and the labeled output) — each re-ran the
     // full documents scan + md5 + two-exchange distinct/spread pipeline
     // (guide §2.4: remove repeated shuffles outright; measured 7.4 →
-    // 2.9 s at sf0.1, see OPTIMIZATION_r20.md). supersede right after
-    // persisting because those compose-time actions run BEFORE the
-    // releaseAfterRun registration (the r16 stale-listener hazard);
-    // the release registers after them, below.
-    val kept = cappedSourceContents(Tables.documents(s, d), capSources = 16,
-      metricName = "q205_mirror_cap")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.supersede(s, kept)
+    // 2.9 s at sf0.1, see OPTIMIZATION_r20.md).
+    val kept = RunScope.own(cappedSourceContents(Tables.documents(s, d), capSources = 16,
+      metricName = "q205_mirror_cap"))
     val sizes = kept.groupBy("source").agg(count(lit(1)).as("n"))
     val shared = kept.as("a").join(kept.as("b"),
         col("a.fp") === col("b.fp") && col("a.source") < col("b.source"))
@@ -1152,9 +1139,6 @@ object TextQueries extends QueryGroup {
       .join(ids.select(col("source").as("src_b"), col("sid").as("b")), "src_b")
       .select("a", "b")
     val comp = ConnectedComponents.run(edges)
-    // register AFTER run's compose-time actions: the final
-    // consuming action reads kept's IMR through sizes→ids and releases it
-    RunScopedCache.releaseAfterRun(s, kept)
     val labeled = ids.join(comp, col("sid") === col("node"), "left")
       .select(col("source"), col("n"),
         coalesce(col("component"), col("sid")).as("cid"))

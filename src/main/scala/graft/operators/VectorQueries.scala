@@ -365,7 +365,7 @@ object VectorQueries extends QueryGroup {
     * embedding, so a non-representative member can never win either the
     * exact or the ANN argmax) — the replica-stress quadratic goes linear
     * (sf1: 52 → ~4 s) with the sf0.01 oracle unchanged;
-    * R16QuerySemanticsSpec pins collapsed ≡ direct on a replicated
+    * IvfStorageSpec pins collapsed ≡ direct on a replicated
     * fixture. */
   private val q236: Q = (s, d) =>
     ivfNprobeSweep(s, Tables.embeddings(s, d), collapseIdentical = true)
@@ -373,15 +373,13 @@ object VectorQueries extends QueryGroup {
   /** q236 core; `collapseIdentical` as in [[quantizationFidelity]]. */
   private[operators] def ivfNprobeSweep(
       s: org.apache.spark.sql.SparkSession, eAll: DataFrame,
-      collapseIdentical: Boolean): DataFrame = {
+      collapseIdentical: Boolean): DataFrame = RunScope.compose {
     val e = eAll
       .filter(size(col("embedding")) === 64 &&
         !exists(col("embedding"), x => x.isNull))
     val cents = IvfStorage.labelCentroids(e)
-    val asg = IvfStorage.assignCells(e, cents)
-      .select(col("vec_id"), col("embedding"), col("cent_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, asg)
+    val asg = RunScope.own(IvfStorage.assignCells(e, cents)
+      .select(col("vec_id"), col("embedding"), col("cent_id")))
     val probes = asg.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
     val W = org.apache.spark.sql.expressions.Window
@@ -390,13 +388,11 @@ object VectorQueries extends QueryGroup {
           W.partitionBy("embedding").orderBy("vec_id")))
         .filter(col("_crn") <= 2).drop("_crn")
     } else asg
-    val allp = cand
+    val allp = RunScope.own(cand
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("cent_id").as("c_cell"))
       .join(broadcast(probes), col("c_id") =!= col("p_id"))
-      .withColumn("cos", cosineNative(col("p_emb"), col("c_emb")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, allp)
+      .withColumn("cos", cosineNative(col("p_emb"), col("c_emb"))))
     val g1 = allp.withColumn("rn", row_number().over(W.partitionBy("p_id")
         .orderBy(col("cos").desc_nulls_last, col("c_id"))))
       .filter(col("rn") === 1).select(col("p_id"), col("c_id").as("g_id"))
@@ -455,20 +451,16 @@ object VectorQueries extends QueryGroup {
     * group member. Output-identical to the direct path by the argmax
     * tie-break argument: both rankings order (score DESC, c_id ASC), a
     * non-representative member has the same score as its rep but a
-    * larger id, so it can never win — R16QuerySemanticsSpec pins the two
+    * larger id, so it can never win — QuantizationSpec pins the two
     * paths on a replicated fixture; the sf0.01 oracle recomputes brute
     * force from raw vectors and still hash-matches. */
   private[operators] def quantizationFidelity(eAll: DataFrame,
-      collapseIdentical: Boolean): DataFrame = {
-    val s = eAll.sparkSession
+      collapseIdentical: Boolean): DataFrame = RunScope.compose {
     val valid = eAll.filter(size(col("embedding")) === 64 &&
       !exists(col("embedding"), x => x.isNull))
-    // NOT persisted: `coded` would only ever appear NESTED inside the
-    // `sims` cache below, so the run-scoped release listener could never
-    // see its InMemoryRelation in any final plan and it would pin for the
-    // rest of the session (the round-11 nested-cache rule). Recomputing
-    // the quantize projection twice inside the one `sims` materialization
-    // (broadcast probes side + candidate scan side) is strictly cheaper.
+    // NOT persisted: `coded` feeds only the one `sims` materialization
+    // below (broadcast probes side + candidate scan side), where
+    // recomputing the quantize projection twice is cheaper than a cache.
     val coded = IvfStorage.quantize(eAll, IvfStorage.quantizationParams(eAll))
       .select(col("vec_id"), col("codes"))
       .join(valid.select("vec_id", "embedding"), "vec_id")
@@ -481,22 +473,18 @@ object VectorQueries extends QueryGroup {
       coded.withColumn("_crn", row_number().over(candW))
         .filter(col("_crn") <= 2).drop("_crn")
     } else coded
-    // persisted: the pairwise similarity table feeds BOTH argmax branches,
-    // and both branches read it DIRECTLY, so its IMR is visible in the
-    // final join's executed plan and the release listener fires. The
-    // centered integer dot is the NATIVE kernel — the interpreted
+    // persisted: the pairwise similarity table feeds BOTH argmax branches.
+    // The centered integer dot is the NATIVE kernel — the interpreted
     // zip_with/aggregate twin of centered_int_dot was the dominant
     // per-pair cost of this audit (r16 sf1: 123 s, kernel+collapse: ~2 s).
-    val sims = candidates0
+    val sims = RunScope.own(candidates0
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("codes").as("c_codes"))
       .join(broadcast(probes), col("c_id") =!= col("p_id"))
       .select(col("p_id"), col("c_id"),
         cosineNative(col("p_emb"), col("c_emb")).as("cos"),
         call_function("centered_int_dot", col("p_codes"), col("c_codes"))
-          .as("idot"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, sims)
+          .as("idot")))
     val wF = org.apache.spark.sql.expressions.Window.partitionBy("p_id")
       .orderBy(col("cos").desc_nulls_last, col("c_id"))
     val wC = org.apache.spark.sql.expressions.Window.partitionBy("p_id")
@@ -672,15 +660,14 @@ object VectorQueries extends QueryGroup {
     * still hash-matches); a duplicate-heavy corpus pays dup× less in the
     * quadratic stage — the sf1 identical-replica stress most of all. */
   private[operators] def semanticDedup(e: DataFrame, tau: Double,
-      collapseIdentical: Boolean): DataFrame = {
-    val s = e.sparkSession
+      collapseIdentical: Boolean): DataFrame = RunScope.compose {
     val cents = IvfStorage.labelCentroids(e)
     val grpW = org.apache.spark.sql.expressions.Window
       .partitionBy("cent_id", "embedding")
     // persisted: the assignment subtree (centroid agg + broadcast argmax
     // scan) feeds BOTH pair-join sides and the final keeper join — without
-    // this it recomputes three times, once per consumer (q95 run-scoped
-    // cache discipline)
+    // this it recomputes three times, once per consumer (q95 owned-cache
+    // discipline)
     val assigned0 = IvfStorage.assignCells(e, cents)
       .select(col("vec_id"), col("embedding"), col("cent_id"))
     // Degenerate-embedding guard: the clique argument needs cos(x, x) ≥ τ
@@ -697,13 +684,11 @@ object VectorQueries extends QueryGroup {
     // strict widening of the degenerate set: such rows also stay
     // uncollapsed, which keeps collapsed ≡ direct trivially.
     val degenerate = isnan(cosineNative(col("embedding"), col("embedding")))
-    val assigned = (if (collapseIdentical)
+    val assigned = RunScope.own(if (collapseIdentical)
         assigned0.withColumn("rep",
           when(degenerate, col("vec_id"))
             .otherwise(min("vec_id").over(grpW)))
       else assigned0.withColumn("rep", col("vec_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, assigned)
     val repRows = assigned.filter(col("vec_id") === col("rep"))
     val a = repRows.select(col("vec_id").as("a_id"), col("cent_id"),
       col("embedding").as("a_emb"))
@@ -717,6 +702,9 @@ object VectorQueries extends QueryGroup {
     // a 100 TB corpus' edge set exceeds driverMaxEdges and takes the
     // distributed min-label path unchanged
     val comp = ConnectedComponents.run(pairs)
+    // the bounded collect above read the cache: released here, before the
+    // query's action, so the final plan recomputes the assignment
+    assigned.unpersist()
     assigned.select(col("vec_id"), col("cent_id"), col("rep"))
       .join(comp, col("rep") === col("node"), "left")
       .select(col("vec_id"), col("cent_id").cast("long").as("cell"),
@@ -833,15 +821,13 @@ object VectorQueries extends QueryGroup {
   /** q157 core; `collapseIdentical` as in [[quantizationFidelity]]. */
   private[operators] def knnGraph(
       s: org.apache.spark.sql.SparkSession, eAll: DataFrame,
-      collapseIdentical: Boolean): DataFrame = {
+      collapseIdentical: Boolean): DataFrame = RunScope.compose {
     val e = eAll
       .filter(size(col("embedding")) === 64 &&
         !exists(col("embedding"), x => x.isNull))
     val cents = IvfStorage.labelCentroids(e)
-    val assigned = IvfStorage.assignCells(e, cents)
-      .select(col("vec_id"), col("embedding"), col("cent_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, assigned)
+    val assigned = RunScope.own(IvfStorage.assignCells(e, cents)
+      .select(col("vec_id"), col("embedding"), col("cent_id")))
     val edges =
       if (collapseIdentical) knnEdges(assigned)
       else knnEdgesDirect(assigned)
@@ -852,7 +838,7 @@ object VectorQueries extends QueryGroup {
   /** The uncollapsed reference plan: full within-cell pair join, one
     * ranking window PER MEMBER — quadratic in the duplicate factor on
     * both sides. Kept as the spec baseline the grouped plan must equal
-    * (R16/R17QuerySemanticsSpec). */
+    * (AnnCosineDedupSpec, R17QuerySemanticsSpec). */
   private def knnEdgesDirect(assigned: DataFrame): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val a = assigned.select(col("vec_id").as("src_id"), col("cent_id"),
@@ -895,10 +881,8 @@ object VectorQueries extends QueryGroup {
         !exists(col("embedding"), x => x.isNull))
     val e0 = e.filter(col("vec_id") % 11 =!= 7) // pre-delta base
     val cents = IvfStorage.labelCentroids(e0)   // frozen quantizer
-    val assigned = IvfStorage.assignCells(e, cents)
-      .select(col("vec_id"), col("embedding"), col("cent_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, assigned)
+    val assigned = RunScope.own(IvfStorage.assignCells(e, cents)
+      .select(col("vec_id"), col("embedding"), col("cent_id")))
     val touched = assigned.filter(col("vec_id") % 11 === 7)
       .select(col("cent_id")).distinct()
     // untouched cells: the STORED base graph IS the fresh graph (no delta
@@ -953,7 +937,7 @@ object VectorQueries extends QueryGroup {
     * ∝ groups·candidates per cell, never members·candidates (the last
     * replica-quadratic holdout at sf1: 20.7 s → the q236 regime).
     * Grouped ≡ direct is spec-pinned on replicated fixtures
-    * (R16/R17QuerySemanticsSpec). */
+    * (AnnCosineDedupSpec, R17QuerySemanticsSpec). */
   private def knnEdges(assigned: DataFrame): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val gw = W.partitionBy("embedding")
@@ -1308,20 +1292,16 @@ object VectorQueries extends QueryGroup {
       .filter(size(col("embedding")) === 64 &&
         !exists(col("embedding"), x => x.isNull))
     val cents = IvfStorage.labelCentroids(e)
-    val asg = IvfStorage.assignCells(e, cents)
-      .select(col("vec_id"), col("embedding"), col("cent_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, asg)
+    val asg = RunScope.own(IvfStorage.assignCells(e, cents)
+      .select(col("vec_id"), col("embedding"), col("cent_id")))
     val probes = asg.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
     val W = org.apache.spark.sql.expressions.Window
-    val allp = asg
+    val allp = RunScope.own(asg
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("cent_id").as("c_cell"))
       .join(broadcast(probes), col("c_id") =!= col("p_id"))
-      .withColumn("cos", cosineNative(col("p_emb"), col("c_emb")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    RunScopedCache.releaseAfterRun(s, allp)
+      .withColumn("cos", cosineNative(col("p_emb"), col("c_emb"))))
     val g = allp.withColumn("rn", row_number().over(W.partitionBy("p_id")
         .orderBy(col("cos").desc_nulls_last, col("c_id"))))
       .filter(col("rn") <= K)

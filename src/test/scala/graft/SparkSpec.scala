@@ -18,4 +18,13 @@ abstract class SparkSpec extends AnyFunSuite {
   def sfDir: String = TestSession.sfDir
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Returns once every listener event posted before the call has been
+    * delivered on the shared bus queue — where query-execution listeners
+    * (RunScope's release among them) run — so what they do is visible
+    * without a sleep or a poll. */
+  def drainListenerBus(): Unit = {
+    val m = graft.metrics.JobMetrics.attach(spark.sparkContext)
+    try m.flush() finally m.detach()
+  }
 }

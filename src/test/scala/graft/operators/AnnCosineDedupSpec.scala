@@ -100,4 +100,25 @@ class AnnCosineDedupSpec extends SparkSpec {
         s"ANN cluster $annKeeper spans exact clusters $exactKeepers")
     }
   }
+
+  test("q157: candidate collapse ≡ direct kNN graph on a 6x-replicated corpus") {
+    // 6 replicas > keep-4: the collapse actually drops members, and every
+    // top-3 list is IN-GROUP (exact twins at cos ~1) — the risk case
+    val e0 = Tables.embeddings(spark, sfDir).limit(100)
+    val e = (0 until 6).map { r =>
+      e0.select((col("vec_id") + lit(r * 100000L)).as("vec_id"),
+        col("embedding"), col("label"))
+    }.reduce(_ unionByName _)
+    val direct = VectorQueries.knnGraph(spark, e,
+      collapseIdentical = false).collect().map(_.toSeq).toSeq
+    val collapsed = VectorQueries.knnGraph(spark, e,
+      collapseIdentical = true).collect().map(_.toSeq).toSeq
+    assert(direct.nonEmpty)
+    assert(direct == collapsed)
+    // a replica with id ABOVE its group's 4 smallest still gets a full
+    // list (it is a probe, not a candidate) of in-group smallest ids
+    val bySrc = collapsed.groupBy(_.head.asInstanceOf[Long])
+    val high = bySrc.keys.filter(_ >= 500000L)
+    assert(high.nonEmpty && high.forall(u => bySrc(u).size == 3))
+  }
 }

@@ -576,4 +576,31 @@ class CorpusQueriesSpec extends SparkSpec {
     val c1 = doc1(1)._3.split(" ")
     assert(c0.slice(20, 30).toSeq == c1.slice(0, 10).toSeq)
   }
+
+  test("q244: water level invariants — feasible, ratio-exact, limiting source binds") {
+    val rows = graft.SparkEntry.queries("q244_mix_water_fill")(spark, sfDir)
+      .collect()
+    assert(rows.nonEmpty)
+    val wTotal = rows.map(r => r.getAs[Long]("weight")).sum
+    val tMax = rows.head.getAs[Long]("t_max")
+    rows.foreach { r =>
+      val avail = r.getAs[Long]("avail_tokens")
+      val w = r.getAs[Long]("weight")
+      val cap = r.getAs[Long]("cap_total")
+      val alloc = r.getAs[Long]("alloc_tokens")
+      assert(alloc <= avail, s"infeasible allocation: $r")
+      assert(cap >= tMax, "level must be the min of the caps")
+      assert(r.getAs[Boolean]("limiting") == (cap == tMax))
+      // exact-ratio: alloc is the floor of T·w/W, so the cross-multiplied
+      // deviation from the target share is bounded by the floor slack
+      assert(tMax * w - alloc * wTotal >= 0L &&
+        tMax * w - alloc * wTotal < wTotal, s"ratio drift: $r")
+    }
+    val lim = rows.filter(_.getAs[Boolean]("limiting"))
+    assert(lim.nonEmpty, "some source must bind the level")
+    lim.foreach { r =>
+      // the binding source is (within floor slack) fully consumed
+      assert(r.getAs[Long]("alloc_tokens") >= r.getAs[Long]("avail_tokens") - 1L)
+    }
+  }
 }

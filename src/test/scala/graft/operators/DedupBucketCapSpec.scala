@@ -51,9 +51,8 @@ class DedupBucketCapSpec extends SparkSpec {
     spark.conf.set("spark.graft.dedup.maxBucket", cap.toString)
     try {
       val result = body
-      // listener bus is async; poll briefly for the metrics to land
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (metrics.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      // listener bus is async; drain it so the metrics have landed
+      drainListenerBus()
       (result, metrics.toMap)
     } finally {
       spark.conf.unset("spark.graft.dedup.maxBucket")
@@ -132,14 +131,12 @@ class DedupBucketCapSpec extends SparkSpec {
     try {
       val q = SparkEntry.queries("q41_dedup_minhash_lsh")(spark, sfDir)
       other.count() // action over a DIFFERENT InMemoryRelation
-      Thread.sleep(1000) // let the async listener bus drain
+      drainListenerBus()
       other.unpersist(blocking = true)
       assert(!spark.sharedState.cacheManager.isEmpty,
         "q41's docs projection was dropped by an unrelated cached action")
       q.count() // the owning action — now the release may fire
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!spark.sharedState.cacheManager.isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(50)
+      drainListenerBus()
       assert(spark.sharedState.cacheManager.isEmpty)
     } finally other.unpersist()
   }
@@ -147,10 +144,8 @@ class DedupBucketCapSpec extends SparkSpec {
   test("q41 releases its cached projection once the action completes") {
     val res = SparkEntry.queries("q41_dedup_minhash_lsh")(spark, sfDir).count()
     assert(res >= 0)
-    // unpersist happens on the async listener bus — poll for it
-    val deadline = System.nanoTime() + 30e9.toLong
-    while (!spark.sharedState.cacheManager.isEmpty && System.nanoTime() < deadline)
-      Thread.sleep(50)
+    // unpersist happens on the async listener bus — drain it
+    drainListenerBus()
     assert(spark.sharedState.cacheManager.isEmpty,
       "q41's persisted docs projection is still pinned after the action")
   }

@@ -108,11 +108,8 @@ class KCoreSpec extends SparkSpec {
       (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
     val df = KCore.run(edgesDf(pairs), 3, 10, driverMaxEdges = 0L)
     df.count() // the consuming action releases every run-scoped cache
-    // releases fire on the async listener bus — poll (the
-    // DedupBucketCapSpec discipline)
-    val deadline = System.nanoTime() + 30e9.toLong
-    while (!spark.sharedState.cacheManager.isEmpty &&
-      System.nanoTime() < deadline) Thread.sleep(50)
+    // releases fire on the async listener bus — drain it
+    drainListenerBus()
     // the check is GLOBAL (shared session): name the pinned RDDs so a
     // foreign suite's leak is attributable, not just detected
     val pinned = spark.sparkContext.getPersistentRDDs.values

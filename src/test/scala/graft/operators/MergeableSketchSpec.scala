@@ -198,4 +198,22 @@ class MergeableSketchSpec extends SparkSpec {
     val exactHits = keys.count(k => est(k) == exact(k))
     assert(exactHits >= 190, s"only $exactHits/200 keys exact at w=4096")
   }
+
+  test("q241: sketch join-size estimate collapses to EXACT when the union fits in k") {
+    val rows = graft.SparkEntry.queries("q241_join_size_estimate")(spark, sfDir)
+      .collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val k = r.getAs[Long]("k_used")
+      val est = r.getAs[Double]("est_join")
+      val exact = r.getAs[Long]("exact_join")
+      assert(exact > 0L, s"fixture pair ${r.getString(0)}/${r.getString(1)} joins empty")
+      if (k < 64)
+        // sample == key universe → the estimator IS the exact join size
+        assert(est == exact.toDouble, s"sub-k pair must be exact: $r")
+      else
+        assert(math.abs(est - exact) / exact < 0.5,
+          s"k=64 estimate off by ≥50%: $r")
+    }
+  }
 }

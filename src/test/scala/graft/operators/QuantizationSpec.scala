@@ -137,4 +137,32 @@ class QuantizationSpec extends SparkSpec {
       nProbe = nCells, k = 1, preK = 4).collect()
     assert(tight.head.getLong(0) == 0L)
   }
+
+  test("q234: content-group collapse ≡ direct brute force on a replicated corpus") {
+    val e0 = Tables.embeddings(spark, sfDir).limit(300)
+    // 3× replicas with distinct ids — every content group has >= 3 members,
+    // and some probes (ids ≡ 0 mod 50) sit INSIDE groups at various ranks
+    val e = (0 until 3).map { r =>
+      e0.select((col("vec_id") + lit(r * 100000L)).as("vec_id"),
+        col("embedding"), col("label"))
+    }.reduce(_ unionByName _)
+    val direct = VectorQueries
+      .quantizationFidelity(e, collapseIdentical = false)
+      .collect().map(_.toSeq).toSeq
+    val collapsed = VectorQueries
+      .quantizationFidelity(e, collapseIdentical = true)
+      .collect().map(_.toSeq).toSeq
+    assert(direct.nonEmpty)
+    assert(direct == collapsed,
+      s"collapse changed the audit:\n direct    ${direct.take(3)}\n collapsed ${collapsed.take(3)}")
+    // the fixture must actually exercise in-group probes: replicas give
+    // near-1 best cosines, and for a probe that is NOT its group's min id
+    // the winner is a SMALLER id (the rep-2 visibility case)
+    val rows = collapsed.map(r => (r(0).asInstanceOf[Long],
+      r(1).asInstanceOf[Long], r(4).asInstanceOf[Double]))
+    assert(rows.forall(_._3 > 0.999999),
+      "every probe has an exact replica, so best float cos must be ~1")
+    assert(rows.exists { case (p, win, _) => p > 100000L && win < p },
+      "fixture must include probes that are non-min members of their group")
+  }
 }
