@@ -14,6 +14,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * (`local[$SPARK_GRAFT_CPUS]`, shuffle partitions = cpus) so the captured
   * plans are the ones the bench executes, not the sf0.001 PLANS.md shapes.
   *
+  * Both modes write [[normalize]]d text, so two runs of one commit differ
+  * only where the plans do.
+  *
   * Usage: runMain graft.PlanDump [outFile]
   *        runMain graft.PlanDump <outDir> <tag> <sfDir> <query> [query…]
   */
@@ -32,7 +35,7 @@ object PlanDump {
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))
       val txt = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
-      Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), txt)
+      Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), normalize(txt))
       println(s"[explain] wrote $outDir/${name}_$tag.txt")
     }
     spark.stop()
@@ -140,17 +143,32 @@ object PlanDump {
         .split("== Initial Plan ==")(0).trim)
       sb.append("\n```\n")
     }
-    // The dump is documentation — fidelity to raw control bytes has no
-    // value, and one NUL (SimilarityJoin.staged's U+0000 set-fingerprint
-    // joiner surfacing in a plan literal) makes grep treat the whole file
-    // as binary. Escape every control char except \n to its \uNNNN text.
-    val clean = sb.toString.flatMap {
+    Files.writeString(Paths.get(out), normalize(sb.toString))
+    println(s"PLANS written to $out")
+    spark.stop()
+  }
+
+  private val tmpRoot = java.util.regex.Pattern.quote(
+    Paths.get(System.getProperty("java.io.tmpdir")).toString)
+
+  /** A plan dump with the tokens that change between two runs of one
+    * commit replaced by fixed text: exchange `plan_id`s, whole-stage
+    * codegen ids, the random suffix `Files.createTempDirectory` gives a
+    * directory name, and `Object.toString` identity hashes
+    * (`FreqSketch@1db47316`). The dump is documentation, so every control
+    * char except \n is escaped to its \uNNNN text as well: one NUL
+    * (SimilarityJoin.staged's U+0000 set-fingerprint joiner surfacing in
+    * a plan literal) makes grep treat the whole file as binary. */
+  private def normalize(plan: String): String = plan
+    .replaceAll("""\[plan_id=\d+\]""", "[plan_id=_]")
+    .replaceAll("""\*\(\d+\)""", "*(_)")
+    .replaceAll("""\[codegen id : \d+\]""", "[codegen id : _]")
+    .replaceAll("""WholeStageCodegen \(\d+\)""", "WholeStageCodegen (_)")
+    .replaceAll(tmpRoot + """/([A-Za-z][\w.-]*?)\d{6,}""", "<tmp>/$1_")
+    .replaceAll("""([A-Za-z_$][\w$.]*)@[0-9a-f]{1,8}\b""", "$1@_")
+    .flatMap {
       case '\n' => "\n"
       case c if c.isControl => f"\\u${c.toInt}%04x"
       case c => c.toString
     }
-    Files.writeString(Paths.get(out), clean)
-    println(s"PLANS written to $out")
-    spark.stop()
-  }
 }

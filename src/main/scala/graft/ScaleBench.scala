@@ -529,7 +529,7 @@ object ScaleBench {
               SparkEntry.queries("q79_dedup_cluster_sizes")(spark, d).count()
           }
           measured(spark, s"dedup_report_r$r", 1) {
-            val rep = operators.DedupReport.build(spark, Tables.documents(spark, d))
+            val rep = operators.DedupReport.build(Tables.documents(spark, d))
             try rep.assignments.count() + rep.histogram.count() +
               rep.summary.count()
             finally rep.release()
@@ -542,7 +542,7 @@ object ScaleBench {
         val isNew = pmod(xxhash64(col("doc_id"), lit(1)), lit(10)) === 0
         val oldDocs = docsAll.filter(!isNew)
         val newDocs = docsAll.filter(isNew)
-        val standing = operators.DedupReport.build(spark, oldDocs)
+        val standing = operators.DedupReport.build(oldDocs)
         // the deployment shape: the rep index is a stored artifact (built
         // once with the assignment), so an append probes parquet — never
         // re-scans the corpus
@@ -552,10 +552,10 @@ object ScaleBench {
         val storedIndex = spark.read.parquet(idxDir)
         try (1 to 3).foreach { r =>
           measured(spark, s"extend_10pct_r$r", 1)(
-            operators.DedupReport.extendWithIndex(spark, storedIndex,
+            operators.DedupReport.extendWithIndex(storedIndex,
               standing.assignments, newDocs).count())
           measured(spark, s"rebuild_full_r$r", 1)(
-            operators.DedupReport.assignComponents(spark, docsAll).count())
+            operators.DedupReport.assignComponents(docsAll).count())
         } finally standing.release()
       case "vecstream" =>
         // streaming vector-lake ingest throughput: file-arrival stream →

@@ -132,22 +132,6 @@ object Multimodal {
     media.select(col("media_id"),
       featuresUdf(col("bytes"), col("meta.format"), lit(dim)).as("features"))
 
-  /** Batched feature extraction via mapPartitions: a real codec pays
-    * per-batch initialization (model load, JNI context) once per partition
-    * instead of per row — this is the shape a heavyweight decoder plugs
-    * into. Results are identical to [[extractFeatures]] (tested). */
-  def extractFeaturesBatched(media: DataFrame, dim: Int = 64): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("bytes"), col("meta.format"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { rows =>
-        // per-partition init would happen HERE (codec/context setup, once)
-        rows.map { case (id, bytes, fmt) => (id, featuresFor(bytes, fmt, dim)) }
-      }
-      .toDF("media_id", "features")
-  }
-
   /** Resize images (other modalities pass through untouched). */
   def resizeImages(media: DataFrame, w: Int, h: Int): DataFrame =
     media.withColumn("bytes",

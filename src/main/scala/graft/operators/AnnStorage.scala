@@ -61,40 +61,4 @@ object AnnStorage {
       .orderBy(col("cos").desc_nulls_last, col("vec_id"))
       .limit(k)
   }
-
-  /** The int8-quantized twin of [[writeSigBucketed]] — the LSH-layout
-    * member of the compressed-lake family ([[IvfStorage]] hosts the IVF
-    * twin and the quantization machinery itself): codes packed to 1
-    * byte/dim, bucketed by signature. The signature is computed from the
-    * FLOAT vector (quantization must not move a vector across the bucket
-    * boundary its neighbors probe), so the layout is bucket-identical to
-    * the float lake. */
-  def writeQuantizedSigBucketed(embeddings: DataFrame, params: DataFrame,
-      dir: String): Unit =
-    embeddings
-      .withColumn("sig", lshSigNative(col("embedding")))
-      .crossJoin(broadcast(IvfStorage.paramArray(params)))
-      .select(col("vec_id"),
-        call_function("int8_pack",
-          call_function("int8_quantize", col("embedding"), col("qparams"))
-            .getField("codes")).as("codes"),
-        col("sig"))
-      .repartition(col("sig"))
-      .write.mode("overwrite").partitionBy("sig").parquet(dir)
-
-  /** [[probe]] over the quantized LSH lake: pruned codes scan →
-    * `quantized_cosine` pre-rank → exact re-rank of the `preK` shortlist
-    * against the float originals (joined by vec_id from `floatLake`) —
-    * the same preK recall knob as [[IvfStorage.probeQuantized]]. */
-  def probeQuantized(spark: SparkSession, dir: String, floatLake: DataFrame,
-      params: DataFrame, queryVec: Array[Float], radius: Int = 2,
-      k: Int = 10, preK: Int = 40): DataFrame = {
-    val qDf = spark.createDataFrame(Seq(Tuple1(queryVec))).toDF("q_emb")
-    val qSig = qDf.select(lshSigNative(col("q_emb")).as("sig"))
-      .head().getInt(0)
-    val ball = hammingBall(qSig, radius).map(lit)
-    IvfStorage.quantizedRerank(
-      spark.read.parquet(dir).filter(col("sig").isin(ball: _*)),
-      floatLake, params, qDf, preK, k)
-  }
 }

@@ -53,7 +53,7 @@ object DedupReport {
     * inherit their rep's label with one join at the end. NULL-text docs
     * stay singletons via a per-doc group key (the shared md5('')
     * fingerprint would glue them into one bogus clique). */
-  def assignComponents(s: SparkSession, documents: DataFrame,
+  def assignComponents(documents: DataFrame,
       tau: Double = 0.8): DataFrame = RunScope.compose {
     val docs = RunScope.own(groupCollapsed(documents))
     val repDocs = docs.filter(col("doc_id") === col("rep") && col("w").isNotNull)
@@ -91,7 +91,7 @@ object DedupReport {
   def assignComponentsMemo(s: SparkSession, d: String): DataFrame =
     s.read.parquet(componentsMemo(s, d) {
       val p = TempDirs.scoped("graft-dedup-components")
-      assignComponents(s, graft.Tables.documents(s, d), tau = 0.8)
+      assignComponents(graft.Tables.documents(s, d), tau = 0.8)
         .write.mode("overwrite").parquet(p)
       p
     })
@@ -126,10 +126,10 @@ object DedupReport {
     * eagerly (the one heavy job); keepers/histogram/summary are cheap
     * scans of the cached two-column frame. The resolution's own cache goes
     * when the materialization ends. */
-  def build(s: SparkSession, documents: DataFrame,
+  def build(documents: DataFrame,
       tau: Double = 0.8): Report = {
     val assignments = RunScope.within {
-      val a = assignComponents(s, documents, tau).persist(StorageLevel.MEMORY_AND_DISK)
+      val a = assignComponents(documents, tau).persist(StorageLevel.MEMORY_AND_DISK)
       // on a failed materialization no Report (hence no release handle) is
       // ever returned — drop the just-persisted frame too, or a session
       // retrying builds accumulates dead pinned caches
@@ -177,9 +177,9 @@ object DedupReport {
     *
     * Preconditions: `assignments` from [[build]]/[[assignComponents]]
     * over `oldDocs` at the SAME `tau`; new doc_ids disjoint from old. */
-  def extend(s: SparkSession, oldDocs: DataFrame, assignments: DataFrame,
+  def extend(oldDocs: DataFrame, assignments: DataFrame,
       newDocs: DataFrame, tau: Double = 0.8): DataFrame =
-    extendWithIndex(s, repIndex(oldDocs), assignments, newDocs, tau)
+    extendWithIndex(repIndex(oldDocs), assignments, newDocs, tau)
 
   /** The standing representative index (id, block, w) that [[extend]]
     * probes: one row per fingerprint group, token set attached. At 100 TB
@@ -195,7 +195,7 @@ object DedupReport {
 
   /** [[extend]] against a prebuilt [[repIndex]] — the incremental-ingest
     * fast path (no old-corpus scan at all). */
-  def extendWithIndex(s: SparkSession, oldReps: DataFrame,
+  def extendWithIndex(oldReps: DataFrame,
       assignments: DataFrame, newDocs: DataFrame,
       tau: Double = 0.8): DataFrame = RunScope.compose {
     val nd = RunScope.own(groupCollapsed(newDocs))

@@ -189,232 +189,6 @@ object IvfStorage {
       .repartition(col("cent_id"))
       .write.mode("append").partitionBy("cent_id").parquet(dir)
 
-  /** The outcome of [[recenter]]: the refreshed centroid table (store it
-    * beside the lake — codes/assignments are only comparable under the
-    * centroids that produced them), which cells were physically
-    * rewritten, and how many rows changed cell. */
-  final case class RecenterResult(centroids: DataFrame,
-      rewrittenCells: Seq[Int], movedRows: Long)
-
-  /** Incremental re-centroiding under drift — the maintenance move between
-    * "stale centroids" and "full rebuild": re-fit ONLY the cells the
-    * [[driftReport]] signal flags (each flagged centroid becomes the exact
-    * mean of its current members — one Lloyd's half-step, the
-    * [[labelCentroids]] decimal-sum shape), then restore the lake's
-    * layout invariant (every vector lives in its nearest-centroid
-    * partition) by rewriting ONLY the cells whose membership changed.
-    *
-    * Exactness: the result is row-identical to a full
-    * [[writeCellPartitioned]] rebuild of the same data under the SAME
-    * refreshed centroid table (IvfStorageSpec pins lake equality and probe
-    * equality) — membership change is detected by re-assigning every
-    * vector against the refreshed table, so a vector in an UNFLAGGED cell
-    * that now prefers a moved centroid is caught too, not just residents
-    * of flagged cells.
-    *
-    * Scale shape: two linear SCANS of the lake (detect, then stage) plus a
-    * REWRITE proportional to the affected cells only — at 100 TB reads are
-    * cheap and sequential; it is the shuffled, partitioned re-WRITE that a
-    * full rebuild pays on every byte, and here it touches only
-    * `rewrittenCells` (the ScaleBench `recenter` rows measure rewrite ∝
-    * drifted cells, constant across lake growth). The rewrite is
-    * staged-rename INSIDE the lake (`.recenter-staging/stage-*`, invisible
-    * to readers) with a manifest commit point: a crash before the manifest
-    * leaves live cells untouched (the orphaned stage ages out via
-    * [[vacuumRecenterStaging]]); a crash after it is completed
-    * idempotently by the next recenter's [[replayRecenterStaging]] — a
-    * reader never observes a half-rewritten cell and recovery data never
-    * lives outside the lake directory (RecenterStagingSpec pins all
-    * three directions). Requires the engine's int `cent_id` layout
-    * (the [[assignCells]] kernel path).
-    *
-    * Reader contract: the swap REPLACES the affected cell directories, so
-    * a DataFrame created over the lake BEFORE a recenter pins the
-    * pre-swap file listing and must be re-derived afterwards (re-running
-    * it raises FAILED_READ_FILE — the standard Spark contract for any
-    * path overwritten in place; StreamingVectorIngestSpec's maintenance
-    * loop demonstrates the re-derive discipline). */
-  def recenter(spark: SparkSession, dir: String, centroids: DataFrame,
-      driftedCells: Seq[Int]): RecenterResult = {
-    require(driftedCells.nonEmpty, "no drifted cells flagged")
-    // heal any committed-but-interrupted previous recenter BEFORE reading
-    // the lake (its staged cells are the lake's truth)
-    replayRecenterStaging(spark, dir)
-    import spark.implicits._
-    val lake = spark.read.parquet(dir)
-    // 1. re-fit flagged centroids to their current members (exact decimal
-    // means; an emptied flagged cell keeps its previous centroid)
-    val refit = lake.filter(col("cent_id").isin(driftedCells.map(Integer.valueOf): _*))
-      .select(col("cent_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy("cent_id", "pos")
-      .agg((sum(col("v").cast("decimal(18,9)")).cast("double") /
-        count(lit(1))).as("c"))
-      .groupBy("cent_id")
-      .agg(expr(
-        "transform(array_sort(collect_list(struct(pos, c))), s -> CAST(s.c AS FLOAT))")
-        .as("new_centroid"))
-    val newCents = centroids.join(refit, Seq("cent_id"), "left")
-      .select(col("cent_id"),
-        coalesce(col("new_centroid"), col("centroid")).as("centroid"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-      .toSeq.toDF("cent_id", "centroid")
-    // 2. detect membership change: one broadcast-assign scan; the affected
-    // cell set (sources and destinations of every mover) is driver-sized
-    // by the centroid-table contract
-    val current = lake.select(col("vec_id"), col("embedding"),
-      col("cent_id").cast("int").as("old_cent"))
-    val moved = assignCells(current, newCents)
-      .filter(col("cent_id") =!= col("old_cent"))
-    val movedStats = moved
-      .select(explode(array(col("old_cent"), col("cent_id"))).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .collect()
-    val affected = movedStats.map(_.getInt(0)).distinct.sorted.toSeq
-    val movedRows = movedStats.map(_.getLong(1)).sum / 2
-    if (affected.isEmpty)
-      return RecenterResult(newCents, Nil, 0L)
-    // 3. stage the affected cells' NEW contents (stayers + arrivals: every
-    // vector whose refreshed assignment lands in an affected cell) INSIDE
-    // the lake under .recenter-staging/ (dot-prefixed: invisible to every
-    // parquet reader), commit with a manifest, then swap. The manifest is
-    // the commit point: a crash before it leaves an uncommitted stage
-    // ([[vacuumRecenterStaging]] ages it out, live cells untouched); a
-    // crash after it is completed by the NEXT recenter's replay or an
-    // explicit [[replayRecenterStaging]] — recovery data never lives
-    // outside the lake directory.
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(recenterStagingRoot(dir),
-      s"stage-${java.util.UUID.randomUUID}")
-    assignCells(lake.select(col("vec_id"), col("embedding")), newCents)
-      .filter(col("cent_id").isin(affected.map(Integer.valueOf): _*))
-      .repartition(col("cent_id"))
-      .write.mode("overwrite").partitionBy("cent_id").parquet(stage.toString)
-    // a cell that lost every member has no staged dir — flagged `emptied`
-    // so replay knows to DELETE its live dir, never to skip it
-    val lines = affected.map { cell =>
-      val staged = fs.exists(new org.apache.hadoop.fs.Path(stage, s"cent_id=$cell"))
-      s"$cell,${if (staged) "staged" else "emptied"}"
-    }
-    writeManifest(fs, stage, lines)
-    completeSwap(fs, new org.apache.hadoop.fs.Path(dir), stage)
-    removeEmptyStagingRoot(fs, dir)
-    RecenterResult(newCents, affected, movedRows)
-  }
-
-  // --- recenter staging protocol: crash recovery + retention ------------
-
-  private def recenterStagingRoot(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, ".recenter-staging")
-
-  private def removeEmptyStagingRoot(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Unit = {
-    val root = recenterStagingRoot(dir)
-    if (fs.exists(root) && fs.listStatus(root).isEmpty)
-      fs.delete(root, true)
-  }
-
-  /** The commit manifest: written (atomically, tmp+rename) AFTER the
-    * staged parquet tree is complete and BEFORE any live cell is touched
-    * — its existence IS the commit point. One `<cell>,staged|emptied`
-    * line per affected cell: `staged` cells have new contents to rename
-    * in; `emptied` cells lost every member and their live dir is deleted. */
-  private val RecenterManifest = "_affected"
-
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      stage: org.apache.hadoop.fs.Path, lines: Seq[String]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(stage, s".$RecenterManifest.tmp")
-    val fin = new org.apache.hadoop.fs.Path(stage, RecenterManifest)
-    val out = fs.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    LakeCommit.rename(fs, tmp, fin)
-  }
-
-  /** Idempotent swap: per manifest line, `emptied` deletes the live cell
-    * dir (an emptied cell has no new data, so re-deleting never loses
-    * anything); `staged` renames the staged dir in if it still exists and
-    * skips if a previous attempt already moved it (the live dir then
-    * already holds the NEW data — deleting it would lose the cell). Ends
-    * by removing the stage dir. */
-  private def completeSwap(fs: org.apache.hadoop.fs.FileSystem,
-      lakeDir: org.apache.hadoop.fs.Path,
-      stage: org.apache.hadoop.fs.Path): Unit = {
-    val manifest = new org.apache.hadoop.fs.Path(stage, RecenterManifest)
-    val in = fs.open(manifest)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    text.linesIterator.filter(_.nonEmpty).foreach { line =>
-      val Array(cell, kind) = line.split(",", 2)
-      val live = new org.apache.hadoop.fs.Path(lakeDir, s"cent_id=$cell")
-      val staged = new org.apache.hadoop.fs.Path(stage, s"cent_id=$cell")
-      kind match {
-        case "emptied" => if (fs.exists(live)) fs.delete(live, true)
-        case "staged" =>
-          if (fs.exists(staged)) {
-            if (fs.exists(live)) fs.delete(live, true)
-            LakeCommit.rename(fs, staged, live)
-          } // else: already swapped by a previous attempt — live is NEW
-        case other => throw new IllegalStateException(
-          s"corrupt recenter manifest line '$line' in $manifest")
-      }
-    }
-    fs.delete(stage, true)
-  }
-
-  /** Finish every COMMITTED (manifest-bearing) recenter stage a crash
-    * interrupted — run automatically at the start of every [[recenter]],
-    * or explicitly after a crash. Uncommitted stages (no manifest: the
-    * staged write itself died) are left for [[vacuumRecenterStaging]].
-    * Single-writer discipline like every mutation here. Returns the
-    * number of stages completed. */
-  def replayRecenterStaging(spark: SparkSession, dir: String): Int = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = recenterStagingRoot(dir)
-    if (!fs.exists(root)) return 0
-    var n = 0
-    fs.listStatus(root).foreach { st =>
-      if (st.isDirectory &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, RecenterManifest))) {
-        completeSwap(fs, new org.apache.hadoop.fs.Path(dir), st.getPath)
-        n += 1
-      }
-    }
-    removeEmptyStagingRoot(fs, dir)
-    n
-  }
-
-  /** Retention sweep for crash-orphaned recenter stages (the
-    * [[LakeAudit.vacuumQuarantine]] posture): COMMITTED stages are
-    * completed regardless of age (they are the lake's truth — deleting
-    * one would lose rewritten cells); UNCOMMITTED stages older than
-    * `retentionMs` are deleted (their write died before the commit point,
-    * live cells were never touched). Owner-invoked, single-writer.
-    * Returns the stage names acted on. */
-  def vacuumRecenterStaging(spark: SparkSession, dir: String,
-      retentionMs: Long,
-      nowMs: Long = System.currentTimeMillis()): Seq[String] = {
-    require(retentionMs >= 0, s"retentionMs=$retentionMs")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = recenterStagingRoot(dir)
-    if (!fs.exists(root)) return Nil
-    val acted = fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
-      val committed =
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, RecenterManifest))
-      if (committed) {
-        completeSwap(fs, new org.apache.hadoop.fs.Path(dir), st.getPath)
-        Seq(st.getPath.getName)
-      } else if (nowMs - st.getModificationTime > retentionMs) {
-        fs.delete(st.getPath, true)
-        Seq(st.getPath.getName)
-      } else Nil
-    }
-    if (fs.listStatus(root).isEmpty) fs.delete(root, true)
-    acted.sorted
-  }
-
   /** Quantizer-health report over the CURRENT lake: per cell, occupancy
     * and the mean/min cosine between members and their centroid — the two
     * signals (skew, assignment quality) that decide when the incremental

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -492,9 +492,8 @@ object SimilarityJoin {
     *
     * [[stagedPostingsCount]] / [[stagedPrefixFilter]] are the two named
     * compositions; [[staged]] is the strategy-agnostic core. */
-  def stagedPostingsCount(s: SparkSession, docs: DataFrame,
-      tau: Double): DataFrame =
-    staged(s, docs, tau)(postingsCount(_, _, metricName = "sj_candidates_staged"))
+  def stagedPostingsCount(docs: DataFrame, tau: Double): DataFrame =
+    staged(docs, tau)(postingsCount(_, _, metricName = "sj_candidates_staged"))
 
   /** Dup-collapse staging composed with the PPJoin prefix filter — the shape
     * for a corpus that is BOTH Zipfian (hot tokens would flood a postings
@@ -502,12 +501,11 @@ object SimilarityJoin {
     * index). The collapse also sharpens the prefix filter itself: token
     * frequencies are computed over DISTINCT token sets, so mass-duplicated
     * boilerplate tokens stop masquerading as corpus-hot vocabulary. */
-  def stagedPrefixFilter(s: SparkSession, docs: DataFrame,
-      tau: Double): DataFrame =
-    staged(s, docs, tau)(
+  def stagedPrefixFilter(docs: DataFrame, tau: Double): DataFrame =
+    staged(docs, tau)(
       prefixFilter(_, _, metricName = "sj_candidates_staged_prefix"))
 
-  def staged(s: SparkSession, docs: DataFrame, tau: Double)(
+  def staged(docs: DataFrame, tau: Double)(
       inner: (DataFrame, Double) => DataFrame): DataFrame = RunScope.compose {
     // 128-bit order-independent set fingerprint. The NUL joiner keeps the
     // encoding unambiguous for space-bearing elements (shingle sets, where

@@ -61,7 +61,7 @@ object TextQueries extends QueryGroup {
     // (jaccardAdaptive's hashed merge kernel: 0.34 s vs postings' 5.3 s
     // plain on this corpus, BASELINE.md; postings/prefix remain the
     // sparse-corpus regime, ZipfJaccardSpec's stagedPrefixFilter)
-    SimilarityJoin.staged(s, docs, 0.8)(
+    SimilarityJoin.staged(docs, 0.8)(
       SimilarityJoin.jaccardAdaptive(_, _)).orderBy("a_id", "b_id")
   }
 

@@ -1,17 +1,17 @@
 package graft.streaming
 
-import graft.functions.VectorFunctions.{cosineNative, lshSigNative}
+import graft.functions.VectorFunctions.cosineNative
 import graft.operators.IvfStorage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Streaming ingest for the vector lakes — the `foreachBatch` stage that
-  * turns [[graft.operators.AnnStorage]]/[[graft.operators.IvfStorage]]'s
-  * batch `append*` calls into a continuously-fed pipeline (the CorpusStream
-  * pattern applied to embeddings): each micro-batch is assigned/signed and
-  * lands in the partitioned layout, so probes stay partition-pruned while
-  * data keeps arriving.
+/** Streaming ingest for the IVF vector lakes — the `foreachBatch` stage
+  * that turns [[graft.operators.IvfStorage]]'s batch `append*` calls into
+  * a continuously-fed pipeline (the CorpusStream pattern applied to
+  * embeddings): each micro-batch is assigned and lands in the
+  * cell-partitioned layout, so probes stay partition-pruned while data
+  * keeps arriving.
   *
   * '''Exactly-once:''' a blind `mode("append")` would duplicate rows when a
   * crashed batch replays from the checkpoint. Every batch therefore writes
@@ -20,11 +20,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * content is checkpoint-determined) and overwrites exactly its own
   * partitions, converging to the same lake (kill-restart spec-pinned,
   * VectorStreamSpec). Probes prune on the LEADING partition column
-  * (sig / cent_id), so the batch level underneath costs nothing at read
+  * (cent_id), so the batch level underneath costs nothing at read
   * time; periodic [[graft.etl.LakeCompaction]] over a bucket folds its
   * batch subdirs away like any small-file maintenance.
   *
-  * '''Drift observability:''' the IVF variant computes each row's
+  * '''Drift observability:''' [[startCellPartitioned]] computes each row's
   * assignment cosine ON THE STREAM and publishes per-batch
   * (rows, mean_assign_cos, min_assign_cos) through `observe` —
   * the streaming face of [[IvfStorage.driftReport]]'s quality signal.
@@ -124,30 +124,6 @@ object VectorStream {
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("cent_id", "ingest_batch")
-          .parquet(dir)
-      }
-      .start()
-  }
-
-  /** LSH-sig-bucketed streaming ingest (the [[graft.operators.AnnStorage]]
-    * layout). The signature is a pure function of the vector — no
-    * quantizer to drift — so only row throughput is observed. */
-  def startSigBucketed(embeddings: DataFrame, dir: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery = {
-    val signed = embeddings
-      .withColumn("sig", lshSigNative(col("embedding")))
-      .observe("vector_ingest", count(lit(1)).as("rows"))
-    signed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.withColumn("ingest_batch", lit(batchId))
-          .repartition(col("sig"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("sig", "ingest_batch")
           .parquet(dir)
       }
       .start()

@@ -3,10 +3,10 @@ package graft.multimodal
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The multimodal plumbing is real (schema, pruning, batch shape, UDF
-  * signatures); JDK-decodable image formats additionally take a REAL codec
-  * (ImageIoCodec — the last three tests decode actual PNG pixels), the rest
-  * a deterministic fake. */
+/** The multimodal plumbing is real (schema, pruning, UDF signatures);
+  * JDK-decodable image formats additionally take a REAL codec
+  * (ImageIoCodec — the "REAL codec" tests decode actual PNG pixels), the
+  * rest a deterministic fake. */
 class MultimodalSpec extends SparkSpec
     with org.scalatest.BeforeAndAfterAll {
 
@@ -60,13 +60,6 @@ class MultimodalSpec extends SparkSpec
     assert(f1.map(_.getSeq[Float](1).toList).distinct.length > 290)
   }
 
-  test("batched (mapPartitions) extraction equals the per-row UDF path") {
-    val a = Multimodal.extractFeatures(media, 16).orderBy("media_id").collect()
-    val b = Multimodal.extractFeaturesBatched(media, 16).orderBy("media_id").collect()
-    assert(a.map(r => (r.getLong(0), r.getSeq[Float](1).toList)).toList ==
-      b.map(r => (r.getLong(0), r.getSeq[Float](1).toList)).toList)
-  }
-
   test("features flow into the similarity operators (cosine over fake embeddings)") {
     val feats = Multimodal.extractFeatures(media, 32)
     val q = feats.filter(col("media_id") === 0).select(col("features").as("q"))
@@ -99,9 +92,9 @@ class MultimodalSpec extends SparkSpec
     assert(frames.agg(max("frame_idx")).head().getInt(0) == 3)
   }
 
-  test("REAL codec: a decoded PNG's histogram features through the batched path") {
+  test("REAL codec: a decoded PNG's histogram features") {
     val df = pngMedia(gradientPng(16, 16))
-    val feats = Multimodal.extractFeaturesBatched(df, 8).collect()
+    val feats = Multimodal.extractFeatures(df, 8).collect()
     assert(feats.length == 1)
     val hist = feats.head.getSeq[Float](1)
     assert(hist.length == 8)
@@ -110,13 +103,6 @@ class MultimodalSpec extends SparkSpec
     // PNG pixels were decoded
     hist.foreach(b => assert(math.abs(b - 0.125f) < 1e-6, hist.toString))
     assert(math.abs(hist.sum - 1.0f) < 1e-6)
-  }
-
-  test("REAL codec: batched and per-row UDF paths agree on real PNG bytes") {
-    val df = pngMedia(gradientPng(9, 7))
-    val a = Multimodal.extractFeatures(df, 16).collect().head.getSeq[Float](1)
-    val b = Multimodal.extractFeaturesBatched(df, 16).collect().head.getSeq[Float](1)
-    assert(a == b)
   }
 
   test("REAL codec: resize re-encodes actual pixels at the target geometry") {
@@ -141,7 +127,7 @@ class MultimodalSpec extends SparkSpec
         lit(null).cast("int").as("sample_rate"),
         lit(null).cast("int").as("n_frames"),
         lit(null).cast("long").as("duration_ms")))
-    val feats = Multimodal.extractFeaturesBatched(df, 8).orderBy("media_id").collect()
+    val feats = Multimodal.extractFeatures(df, 8).orderBy("media_id").collect()
     assert(feats(0).getSeq[Float](1) != null, "good row decodes")
     assert(feats(1).isNullAt(1), "corrupt row yields null features, job survives")
     val resized = Multimodal.resizeImages(df, 4, 4).orderBy("media_id")
@@ -165,7 +151,7 @@ class MultimodalSpec extends SparkSpec
     assert(byMod("image").getAs[org.apache.spark.sql.Row]("meta")
       .getAs[String]("format") == "png")
     // ingested PNG flows straight through the REAL codec path
-    val feats = Multimodal.extractFeaturesBatched(
+    val feats = Multimodal.extractFeatures(
       media.filter(col("modality") === "image"), 8).collect()
     assert(feats.length == 1 && math.abs(feats.head.getSeq[Float](1).sum - 1.0f) < 1e-6)
     // re-ingest = same ids (deterministic path hash)

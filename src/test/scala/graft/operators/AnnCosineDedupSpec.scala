@@ -12,6 +12,11 @@ import org.apache.spark.sql.functions._
   *  - at full radius (6 = every bucket probed) the variant degenerates to
   *    the exact result — the approximation is ONLY the probe radius;
   *  - candidate volume is observable and far below the per-label quadratic.
+  *
+  * It also pins the grouped-vs-direct collapse paths of the vector
+  * queries that share q69's exact-embedding grouping (q157 kNN graph,
+  * q186 triplet mining, q69 itself): on replicated fixtures the grouped
+  * path must equal the direct one row for row.
   */
 class AnnCosineDedupSpec extends SparkSpec {
 
@@ -120,5 +125,93 @@ class AnnCosineDedupSpec extends SparkSpec {
     val bySrc = collapsed.groupBy(_.head.asInstanceOf[Long])
     val high = bySrc.keys.filter(_ >= 500000L)
     assert(high.nonEmpty && high.forall(u => bySrc(u).size == 3))
+  }
+
+  /** The mixed-replication fixture of the grouped-vs-direct collapse pins
+    * (q157, q186, q69): the first 120 embeddings, plus 4 extra replicas
+    * (ids + r·100000) of every id ≡ 0 mod 3 — groups of 5, deeper than
+    * any keep-k, beside singleton groups in the same cells. */
+  private def mixedReplicas(): org.apache.spark.sql.DataFrame = {
+    val e0 = Tables.embeddings(spark, sfDir).limit(120)
+    val rep = (1 until 5).map { r =>
+      e0.filter(col("vec_id") % 3 === 0)
+        .select((col("vec_id") + lit(r * 100000L)).as("vec_id"),
+          col("embedding"), col("label"))
+    }.reduce(_ unionByName _)
+    e0.unionByName(rep)
+  }
+
+  test("q157: grouped probe+candidate collapse ≡ direct on a mixed-replication fixture") {
+    // replicate only ids ≡ 0 mod 3 (5 replicas), keep the rest unique:
+    // groups of size 5 (> keep-4) coexist with singleton groups in the
+    // same cells, so top-3 lists mix in-group and cross-group neighbors
+    val e = mixedReplicas()
+    val direct = VectorQueries.knnGraph(spark, e,
+      collapseIdentical = false).collect().map(_.toSeq).toSeq
+    val grouped = VectorQueries.knnGraph(spark, e,
+      collapseIdentical = true).collect().map(_.toSeq).toSeq
+    assert(direct.nonEmpty)
+    assert(direct == grouped,
+      s"grouped collapse changed the graph\n first diffs: ${
+        direct.zip(grouped).filter(p => p._1 != p._2).take(3)}")
+    // fixture sanity: replicated members beyond their group's 4 smallest
+    // still get full 3-entry lists (they are probes, never candidates)
+    val bySrc = grouped.groupBy(_.head.asInstanceOf[Long])
+    val high = bySrc.keys.filter(_ >= 400000L)
+    assert(high.nonEmpty && high.forall(u => bySrc(u).size == 3))
+    // and unique vectors (singleton groups) are present with lists too
+    val uniq = bySrc.keys.filter(k => k < 100000L && k % 3 != 0)
+    assert(uniq.nonEmpty)
+  }
+
+  test("q186: grouped anchor collapse ≡ direct triplet mining on a mixed-replication fixture") {
+    // same fixture discipline as the q157 pin: 5× replicas for ids ≡ 0
+    // mod 3 (anchor groups deeper than keep-2), singletons elsewhere —
+    // exercises the positive's self-exclusion substitution, the
+    // negative's inheritance, and anchors whose positive list empties
+    val e = mixedReplicas()
+      .filter(size(col("embedding")) === 64 &&
+        !exists(col("embedding"), x => x.isNull))
+    val asg = IvfStorage.assignCells(e, IvfStorage.labelCentroids(e))
+      .select("vec_id", "label", "embedding", "cent_id")
+    val direct = VectorQueries.tripletMine(asg, collapseCandidates = false)
+      .collect().map(_.toSeq).toSeq
+    val grouped = VectorQueries.tripletMine(asg, collapseCandidates = true)
+      .collect().map(_.toSeq).toSeq
+    assert(direct.nonEmpty && direct == grouped,
+      s"grouped anchors changed the triplets\n first diffs: ${
+        direct.zip(grouped).filter(p => p._1 != p._2).take(3)}")
+    // replicated anchors beyond their group's keep-2 must still mine
+    val ids = grouped.map(_.head.asInstanceOf[Long]).toSet
+    assert(ids.exists(_ >= 400000L))
+  }
+
+  test("q69: star+rep-pair collapse ≡ direct cosine dedup, incl. the degenerate zero-vector edge") {
+    val replicated = mixedReplicas()
+    // two IDENTICAL zero vectors in one label: their cosines are NaN,
+    // and Spark's NaN-is-greatest comparison makes NaN ≥ τ TRUE — the
+    // direct join therefore connects them (to each other AND to every
+    // label-mate), and the star filter uses the very same predicate on
+    // the self-cosine, so the grouped path must agree exactly
+    val zeros = spark.range(2).select(
+      (col("id") + 900000L).as("vec_id"),
+      expr("transform(sequence(1, 64), i -> CAST(0.0 AS FLOAT))")
+        .as("embedding"),
+      lit(1).cast(replicated.schema("label").dataType).as("label"))
+    val e = replicated.unionByName(zeros)
+    val direct = VectorQueries.cosineDedup(e, collapseIdentical = false)
+      .collect().map(_.toSeq).toSeq
+    val grouped = VectorQueries.cosineDedup(e, collapseIdentical = true)
+      .collect().map(_.toSeq).toSeq
+    assert(direct.nonEmpty && direct == grouped,
+      s"collapse changed components\n first diffs: ${
+        direct.zip(grouped).filter(p => p._1 != p._2).take(3)}")
+    val byId = grouped.map(r =>
+      r.head.asInstanceOf[Long] -> r(1).asInstanceOf[Long]).toMap
+    // NaN-as-greatest: the zero vectors join their label's component
+    // (identically in both paths — the equality above is the real pin)
+    assert(byId(900000L) == byId(900001L))
+    // replicas collapse into their group's component
+    assert(byId(400003L) == byId(3L))
   }
 }

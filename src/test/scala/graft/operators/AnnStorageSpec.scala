@@ -74,28 +74,4 @@ class AnnStorageSpec extends SparkSpec {
     assert(files(inc) < before, s"$before -> ${files(inc)}")
     assert(probeIds(inc) == want, "compaction must not change probe results")
   }
-
-  test("quantized sig lake: probeQuantized ≡ float probe when preK covers the ball") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val params = IvfStorage.quantizationParams(emb)
-    val qdir = tmpDir("ann-quant"); val fdir = tmpDir("ann-float")
-    AnnStorage.writeQuantizedSigBucketed(emb, params, qdir)
-    AnnStorage.writeSigBucketed(emb, fdir)
-    // bucket layout identical to the float lake: sig comes from the float
-    // vector on both paths
-    def sigDirs(d: String) = new java.io.File(d).listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(sigDirs(qdir) == sigDirs(fdir))
-    val qVec = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Array[Float]].head()
-    val want = AnnStorage.probe(spark, fdir, qVec, radius = 2, k = 10)
-      .collect().toSeq
-    val got = AnnStorage.probeQuantized(spark, qdir, emb, params, qVec,
-      radius = 2, k = 10, preK = emb.count().toInt).collect().toSeq
-    assert(got == want)
-    // realistic preK still puts the query vector itself first
-    val tight = AnnStorage.probeQuantized(spark, qdir, emb, params, qVec,
-      radius = 2, k = 1, preK = 4).collect()
-    assert(tight.head.getLong(0) == 0L)
-  }
 }

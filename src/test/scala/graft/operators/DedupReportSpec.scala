@@ -18,7 +18,7 @@ class DedupReportSpec extends SparkSpec {
     // one session and run in parallel, and DedupBucketCapSpec polls the
     // GLOBAL cache manager for emptiness — a long-pinned assignment cache
     // here starves that poll (cost a full-suite failure in round 10)
-    val report = DedupReport.build(spark, Tables.documents(spark, sfDir))
+    val report = DedupReport.build(Tables.documents(spark, sfDir))
     val (a, h, s, keepers, minPerCluster) =
       try (
         report.assignments.collect()
@@ -62,7 +62,7 @@ class DedupReportSpec extends SparkSpec {
   }
 
   test("release() drops the cached assignment") {
-    val report = DedupReport.build(spark, Tables.documents(spark, sfDir))
+    val report = DedupReport.build(Tables.documents(spark, sfDir))
     assert(report.assignments.storageLevel.useMemory ||
       report.assignments.storageLevel.useDisk)
     report.release()
@@ -72,7 +72,7 @@ class DedupReportSpec extends SparkSpec {
 
   test("extend() ≡ full re-resolution on randomized arrival splits") {
     val docs = Tables.documents(spark, sfDir)
-    val full = DedupReport.assignComponents(spark, docs).collect()
+    val full = DedupReport.assignComponents(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // two salts: different ~10% batches, including splits that tear
     // fingerprint groups and clusters across the old/new boundary
@@ -81,9 +81,9 @@ class DedupReportSpec extends SparkSpec {
       val oldDocs = docs.filter(!isNew)
       val newDocs = docs.filter(isNew)
       assert(newDocs.count() > 0 && oldDocs.count() > 0)
-      val report = DedupReport.build(spark, oldDocs)
+      val report = DedupReport.build(oldDocs)
       val got = try
-        DedupReport.extend(spark, oldDocs, report.assignments, newDocs)
+        DedupReport.extend(oldDocs, report.assignments, newDocs)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       finally report.release()
       assert(got == full,
@@ -106,14 +106,14 @@ class DedupReportSpec extends SparkSpec {
       (4L, "s", "nothing alike whatsoever"),
       (5L, "s", null.asInstanceOf[String]))
       .toDF("doc_id", "source", "text")
-    val report = DedupReport.build(spark, oldDocs)
+    val report = DedupReport.build(oldDocs)
     val got = try
-      DedupReport.extend(spark, oldDocs, report.assignments, newDocs)
+      DedupReport.extend(oldDocs, report.assignments, newDocs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     finally report.release()
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L), got)
     // and the incremental answer matches the from-scratch one
-    val full = DedupReport.assignComponents(spark, oldDocs.unionByName(newDocs))
+    val full = DedupReport.assignComponents(oldDocs.unionByName(newDocs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == full)
   }
@@ -123,16 +123,16 @@ class DedupReportSpec extends SparkSpec {
       (2L, "s", "alpha beta gamma delta")).toDF("doc_id", "source", "text")
     val newDocs = Seq((9L, "s", "completely different content here"))
       .toDF("doc_id", "source", "text")
-    val report = DedupReport.build(spark, oldDocs)
+    val report = DedupReport.build(oldDocs)
     val got = try
-      DedupReport.extend(spark, oldDocs, report.assignments, newDocs)
+      DedupReport.extend(oldDocs, report.assignments, newDocs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     finally report.release()
     assert(got == Map(1L -> 1L, 2L -> 1L, 9L -> 9L), got)
   }
   test("assignComponentsMemo ≡ fresh assignComponents (and is stable across calls)") {
     val fresh = DedupReport
-      .assignComponents(spark, Tables.documents(spark, sfDir))
+      .assignComponents(Tables.documents(spark, sfDir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val memo1 = DedupReport.assignComponentsMemo(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

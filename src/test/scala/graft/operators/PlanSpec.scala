@@ -190,7 +190,7 @@ class PlanSpec extends SparkSpec {
     // the declared q66 now scans the shared memo parquet (its plan is a
     // file scan by design) — the rep-keyed-join claim is pinned on the
     // RESOLUTION pipeline itself, which the memo materializes from
-    val df = DedupReport.assignComponents(spark,
+    val df = DedupReport.assignComponents(
       graft.Tables.documents(spark, sfDir))
     df.collect() // force AQE to finalize
     val p = df.queryExecution.executedPlan.toString

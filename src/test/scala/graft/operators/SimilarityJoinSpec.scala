@@ -168,7 +168,7 @@ class SimilarityJoinSpec extends SparkSpec {
       .select(col("doc_id").as("id"), col("source").as("block"),
         TextFunctions.tokenSet(col("text")).as("w"))
     assertSamePairs(SimilarityJoin.postingsCount(docs, 0.8),
-      SimilarityJoin.stagedPostingsCount(spark, docs, 0.8))
+      SimilarityJoin.stagedPostingsCount(docs, 0.8))
   }
 
   test("staged × prefix-filter composition is row-identical to naive (τ=0.8)") {
@@ -176,7 +176,7 @@ class SimilarityJoinSpec extends SparkSpec {
       .select(col("doc_id").as("id"), col("source").as("block"),
         TextFunctions.tokenSet(col("text")).as("w"))
     assertSamePairs(SimilarityJoin.postingsCount(docs, 0.8),
-      SimilarityJoin.stagedPrefixFilter(spark, docs, 0.8))
+      SimilarityJoin.stagedPrefixFilter(docs, 0.8))
   }
 
   test("staged join handles null/empty sets and space-bearing elements exactly") {
@@ -195,12 +195,12 @@ class SimilarityJoinSpec extends SparkSpec {
       .union(Seq((6L, "s")).toDF("id", "block")
         .withColumn("w", lit(null).cast("array<string>")))
     val naive = SimilarityJoin.postingsCount(docs, 0.5).collect().toSet
-    val staged = SimilarityJoin.stagedPostingsCount(spark, docs, 0.5)
+    val staged = SimilarityJoin.stagedPostingsCount(docs, 0.5)
       .collect().toSet
     assert(staged == naive)
     // the edge handling lives in the staging, not the inner strategy — the
     // prefix-filter composition must pass the same corpus
-    assert(SimilarityJoin.stagedPrefixFilter(spark, docs, 0.5)
+    assert(SimilarityJoin.stagedPrefixFilter(docs, 0.5)
       .collect().toSet == naive)
     // the clique pair surfaces with jaccard exactly 1.0
     assert(staged.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L &&

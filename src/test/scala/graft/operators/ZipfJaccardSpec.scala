@@ -92,9 +92,9 @@ class ZipfJaccardSpec extends SparkSpec {
       val (prefPairs, prefCands) = candidates("sj_candidates_prefix")(
         SimilarityJoin.prefixFilter(docs, 0.8).count())
       val (stPostPairs, stPostCands) = candidates("sj_candidates_staged")(
-        SimilarityJoin.stagedPostingsCount(spark, docs, 0.8).count())
+        SimilarityJoin.stagedPostingsCount(docs, 0.8).count())
       val (stPrefPairs, stPrefCands) = candidates("sj_candidates_staged_prefix")(
-        SimilarityJoin.stagedPrefixFilter(spark, docs, 0.8).count())
+        SimilarityJoin.stagedPrefixFilter(docs, 0.8).count())
       info(s"postings:        $postCands candidates ($postPairs pairs)")
       info(s"prefix:          $prefCands candidates ($prefPairs pairs)")
       info(s"staged postings: $stPostCands candidates ($stPostPairs pairs)")
@@ -102,7 +102,7 @@ class ZipfJaccardSpec extends SparkSpec {
       assert(Set(postPairs, prefPairs, stPostPairs, stPrefPairs).size == 1,
         "all four strategies must agree on results")
       // full row-identity for the composition, not just the count
-      assert(SimilarityJoin.stagedPrefixFilter(spark, docs, 0.8)
+      assert(SimilarityJoin.stagedPrefixFilter(docs, 0.8)
         .except(SimilarityJoin.postingsCount(docs, 0.8)).isEmpty)
       // composition strictly beats each technique alone
       assert(stPrefCands < prefCands,

@@ -141,36 +141,4 @@ class VectorStreamSpec extends SparkSpec {
       cents, cbs, qv, m = 8, dim = 64).collect().toSeq
     assert(got == want)
   }
-
-  test("sig ingest: bucketed layout converges across restart, probe matches batch") {
-    val src = tmpDir("vss-src"); val lake = tmpDir("vss-lake")
-    val ckpt = tmpDir("vss-ckpt")
-    val n = emb.count()
-    emb.limit((n / 3).toInt).write.mode("append").parquet(src)
-    val schema = emb.schema
-    def run() = {
-      val q = VectorStream.startSigBucketed(
-        spark.readStream.schema(schema).parquet(src), lake, ckpt,
-        Trigger.AvailableNow())
-      q.awaitTermination(120000)
-    }
-    run()
-    emb.write.mode("append").parquet(src) // includes re-delivered rows
-    run()
-    val lakeDf = spark.read.parquet(lake)
-    // the second wave re-delivers the first third as NEW input files (new
-    // rows to the source), so those vectors legitimately appear twice —
-    // but every (file-wave, vec_id) lands exactly once: no replay dups
-    assert(lakeDf.count() == (n / 3) + n)
-    val qv = emb.filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray
-    val got = graft.operators.AnnStorage.probe(spark, lake, qv, radius = 2, k = 5)
-      .collect().map(_.getLong(0)).toSeq
-    val batchLake = tmpDir("vss-batch-lake")
-    graft.operators.AnnStorage.writeSigBucketed(
-      emb.limit((n / 3).toInt).unionByName(emb), batchLake)
-    val want = graft.operators.AnnStorage.probe(spark, batchLake, qv,
-      radius = 2, k = 5).collect().map(_.getLong(0)).toSeq
-    assert(got == want)
-  }
 }
