@@ -972,7 +972,7 @@ object GraphQueries extends QueryGroup {
     * every neighbor w). Registers use q248's scaled-integer encoding at
     * m = 64 (26-bit rank window, term = roundUpPow2 ≡ 2^(27−ρ), empty =
     * 2²⁷), and are PACKED: one 64-int array per node, merged elementwise
-    * by [[graft.functions.ArrayMinAgg]] — min is commutative/idempotent,
+    * by [[graft.plans.RegMinAgg]] — min is commutative/idempotent,
     * so the iteration is deterministic at any parallelism, and a round
     * shuffles |E| array rows, never |E|·m register rows (the exploded
     * form measured 51 s at sf0.1; packed: ~2 s). Per-node harmonic sums
@@ -1047,14 +1047,15 @@ object GraphQueries extends QueryGroup {
     // (absent = the 2^27 empty-register sentinel), merged elementwise —
     // an iteration shuffles |E| array rows, never |E|·m register rows.
     // The merge is the NATIVE [[graft.plans.RegMinAgg]] (r20 optimization
-    // round, guide §4): the ArrayMinAgg UDAF's encoder boundary boxed
+    // round, guide §4): the ArrayMinAgg UDAF (now RegMinAggSpec's
+    // reference, under src/test) had an encoder boundary that boxed
     // every input row to Array[Int] (measured at sf0.1: 126 s task CPU +
     // 70 s GC in the two merge jobs), and an interim 64-slot
     // min(element_at) declarative form traded the GC away for ~28 µs/row
     // of per-expression update overhead (341 s task CPU at sf1). The
     // imperative int[]-buffer aggregate does neither: zero per-row
     // allocation, one 64-int min loop per row. Same elementwise-min
-    // algebra, loud on malformed input (RegMinAggSpec / ArrayMinAggSpec).
+    // algebra, loud on malformed input (RegMinAggSpec).
     // (A 64-slot declarative min(element_at) form was also measured:
     // no boxing, but 64 per-row expression updates cost 291 s CPU + 42 s
     // GC vs reg_min's 190 s CPU + 7 s GC on the same sf1 run pair —

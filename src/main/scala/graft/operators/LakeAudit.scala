@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * already-published id is a NO-OP (the rename target exists), and a
   * replayed attempt of a quarantined id re-stages over its own directory —
   * the whole-directory overwrite is the idempotence unit, exactly the
-  * CdcStream/VectorStream convention.
+  * [[CdcMerge.appendDelta]]/VectorStream convention.
   *
   * Scale shape: the audit is ONE conditional-count pass over the staged
   * files (all row-level rules fold into a single aggregation — no per-rule
@@ -721,7 +721,7 @@ object LakeAudit {
     * micro-batch quarantines (readers never see it, the stream keeps
     * running) and a kill-restart replay of a published batch is the
     * no-op the id contract guarantees — exactly-once publication on top
-    * of at-least-once micro-batch delivery, the CdcStream/VectorStream
+    * of at-least-once micro-batch delivery, the CdcMerge/VectorStream
     * idempotence story with the audit gate in the middle. Failed batch
     * ids are reported through `onResult` (the operational hook a real
     * pipeline alerts on). */

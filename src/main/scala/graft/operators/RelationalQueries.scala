@@ -870,11 +870,7 @@ object RelationalQueries extends QueryGroup {
     *
     * Scale shape: work ∝ |change batch| + |stored rollup| (segment-
     * domain-sized); the exact DECIMAL sums make the ± algebra lossless —
-    * double sums would not survive a retraction. The same algebra runs
-    * LIVE as a streaming aggregation over pre/post-image change events
-    * ([[graft.streaming.RollupStream]], StreamingIvmSpec pins stream ≡
-    * this query including a fully-retracted group reading back as an
-    * exact zero). */
+    * double sums would not survive a retraction. */
   private val q258: Q = (s, d) => {
     val W = org.apache.spark.sql.expressions.Window
     // one change BATCH (every third order), not the whole feed — so the
@@ -960,10 +956,7 @@ object RelationalQueries extends QueryGroup {
     * the scan to the intersecting row groups (`ScaleBench ivm` measures
     * 1-of-160 files at 10×; hash-spread cohorts take the q270 bloom
     * complement) — the layout lever that makes the refresh genuinely
-    * delta-sized end to end. The same changelog algebra runs LIVE as a
-    * stream-static join in [[graft.streaming.JoinViewStream]], and with
-    * BOTH sides as changelogs in its `biChangelog` (key-bounded state;
-    * StreamingIvmSpec pins both ≡ this query). */
+    * delta-sized end to end. */
   private val q264: Q = (s, d) => {
     val W = org.apache.spark.sql.expressions.Window
     val feed = Tables.orders(s, d)
@@ -1035,9 +1028,7 @@ object RelationalQueries extends QueryGroup {
     * Scale shape: work ∝ |batch| + |histogram| (value-domain-sized per
     * group; at 100 TB domains the histogram buckets hierarchically —
     * maintain counts per 2ᵏ-wide bucket and drill down on readout, the
-    * same algebra one level deeper). The same ± histogram runs LIVE in
-    * [[graft.streaming.RollupStream.maintainValueCounts]] (StreamingIvmSpec
-    * pins stream ≡ batch incl. the retracted-max handoff). */
+    * same algebra one level deeper). */
   private val q268: Q = (s, d) => {
     val W = org.apache.spark.sql.expressions.Window
     def cents(c: org.apache.spark.sql.Column) =
@@ -1165,15 +1156,9 @@ object RelationalQueries extends QueryGroup {
     *
     * The ORACLE is the q273 recompute (identical output contract) — the
     * hash match proves bucketed-state + drill-down ≡ exact percentiles;
-    * R19QuerySemanticsSpec additionally pins bucketed ≡ flat on a
+    * PercentileIvmSpec additionally pins bucketed ≡ flat on a
     * synthetic ~100k-distinct-value domain where the bucketed state is
-    * measured at a small fraction of the flat histogram's rows. The
-    * BUCKET counts stream live through
-    * [[graft.streaming.RollupStream.maintainBucketCounts]] (same ±
-    * algebra, bucket granularity — StreamingIvmSpec pins the streamed
-    * locate+drill readout ≡ this query); the drill-down is a batch read
-    * against the lake by design — it touches base data a stream never
-    * holds.
+    * measured at a small fraction of the flat histogram's rows.
     *
     * COMPOSE-TIME ACTIONS (the ADVICE r19 note): the locate collect and
     * the bucket-view materialization run Spark jobs when the query is
@@ -1194,7 +1179,7 @@ object RelationalQueries extends QueryGroup {
     * and a ≤ 2¹³-value drill). Past ~2²⁰-wide domains the flat bucket
     * histogram itself grows past maintainable state — the completing
     * rung is [[q281]]: coarse 2⁴⁰ buckets + the 256-ary in-bucket
-    * refinement, bounded at ANY width (R20QuerySemanticsSpec pins both
+    * refinement, bounded at ANY width (PercentileIvmSpec pins both
     * paths agree on a 62-bit domain). */
   private val q276: Q = (s, d) => {
     val W = org.apache.spark.sql.expressions.Window
@@ -1250,7 +1235,7 @@ object RelationalQueries extends QueryGroup {
     // never reaches the parquet reader and a filter on the DERIVED
     // bucket column doesn't push either — on a value-clustered lake
     // the range disjunction is what turns the drill-down into a
-    // row-group-pruned scan (R19QuerySemanticsSpec pins the metric);
+    // row-group-pruned scan (PartitionPruningSpec pins the metric);
     // (b) the broadcast refinement frame for the exact (seg, bucket)
     // residual-rank join, rebuilt from the SAME collected rows so the
     // locate pipeline runs exactly once.
@@ -1318,7 +1303,7 @@ object RelationalQueries extends QueryGroup {
     * .valuesAtRanks]]'s 256-ary refinement (⌈log₂₅₆ 2⁴⁰⌉ = 5 grouped
     * counting scans over literal-range-pruned rows) — never a row_number
     * sort of the bucket's rows, which is what made a wide bucket
-    * unaffordable. R20QuerySemanticsSpec pins refine-drill ≡ row_number
+    * unaffordable. PercentileIvmSpec pins refine-drill ≡ row_number
     * drill on this domain and the maintained state ≪ per-value state.
     *
     * COMPOSE-TIME ACTIONS (the q276 hazard, same justification): the

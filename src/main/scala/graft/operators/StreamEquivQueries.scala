@@ -552,9 +552,7 @@ object StreamEquivQueries extends QueryGroup {
     * Scale shape: one shuffle on user_id for the position/ordinal
     * windows, then island aggregation and two (user, pos)-equi-joins for
     * the boundary probes — everything linear in events, never a
-    * variable-length self-join. The streaming twin keeps the same
-    * machine as constant per-key state ([[graft.streaming.SequenceMatch
-    * .quantified]], StreamingMatchSpec pins stream ≡ batch). */
+    * variable-length self-join. */
   private val q260: Q = (s, d) => {
     val ord = Window.partitionBy("user_id").orderBy("us", "event_id")
     val e = Tables.events(s, d)

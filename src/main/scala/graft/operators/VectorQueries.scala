@@ -60,13 +60,13 @@ object VectorQueries extends QueryGroup {
     * SAME `cos ≥ τ` predicate the direct join applies — for a zero/NaN
     * embedding the self-cosine is NaN and Spark's NaN-is-greatest
     * ordering makes `NaN >= τ` TRUE, so BOTH paths connect zero-vector
-    * groups identically (R17QuerySemanticsSpec pins it; do not "optimize"
+    * groups identically (AnnCosineDedupSpec pins it; do not "optimize"
     * the star filter away for NaN groups — it is what keeps grouped ≡
     * direct) — and cross-group reachability is decided entirely by REP
     * pairs, because cosine is a function of the embeddings alone. Pair
     * volume drops members² → groups² per label (the q157/q186 move on a
     * components consumer); grouped ≡ direct spec-pinned
-    * (R17QuerySemanticsSpec, incl. the degenerate zero-vector edge). */
+    * (AnnCosineDedupSpec, incl. the degenerate zero-vector edge). */
   private[graft] def cosineDedup(e: DataFrame,
       collapseIdentical: Boolean): DataFrame = {
     val pairs = if (!collapseIdentical) {
@@ -838,7 +838,7 @@ object VectorQueries extends QueryGroup {
   /** The uncollapsed reference plan: full within-cell pair join, one
     * ranking window PER MEMBER — quadratic in the duplicate factor on
     * both sides. Kept as the spec baseline the grouped plan must equal
-    * (AnnCosineDedupSpec, R17QuerySemanticsSpec). */
+    * (AnnCosineDedupSpec). */
   private def knnEdgesDirect(assigned: DataFrame): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val a = assigned.select(col("vec_id").as("src_id"), col("cent_id"),
@@ -937,7 +937,7 @@ object VectorQueries extends QueryGroup {
     * ∝ groups·candidates per cell, never members·candidates (the last
     * replica-quadratic holdout at sf1: 20.7 s → the q236 regime).
     * Grouped ≡ direct is spec-pinned on replicated fixtures
-    * (AnnCosineDedupSpec, R17QuerySemanticsSpec). */
+    * (AnnCosineDedupSpec). */
   private def knnEdges(assigned: DataFrame): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val gw = W.partitionBy("embedding")
@@ -1123,7 +1123,7 @@ object VectorQueries extends QueryGroup {
     if (!collapseCandidates) {
       // the uncollapsed reference plan: per-ANCHOR argmax windows over
       // the full blocked pair joins — quadratic in the duplicate factor
-      // on both sides; kept as the spec baseline (R17QuerySemanticsSpec)
+      // on both sides; kept as the spec baseline (AnnCosineDedupSpec)
       val x = asg.select(col("vec_id").as("a_id"), col("label").as("a_label"),
         col("embedding").as("a_emb"), col("cent_id").as("a_cell"))
       def top1(cand: DataFrame, idCol: String, cosCol: String): DataFrame =

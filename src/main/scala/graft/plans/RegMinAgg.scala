@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   * Identity: a MaxValue-filled buffer (min's unit) — groups always see
   * ≥ 1 input row under groupBy, so the identity never surfaces. Inputs
   * must be non-null with exactly `m` elements (loud failure otherwise —
-  * the ArrayMinAgg contract).
+  * the contract of RegMinAggSpec's reference UDAF, ArrayMinAgg).
   */
 case class RegMinAgg(child: Expression, m: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)

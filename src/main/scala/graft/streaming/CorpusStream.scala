@@ -23,8 +23,6 @@ import org.apache.spark.sql.functions._
   *    every production dedup-at-ingest: a duplicate arriving farther apart
   *    than the watermark delay is NOT caught (the batch q35/q73 pass
   *    remains the periodic full-history sweep).
-  *  - near-dup flagging at ingest is [[DedupStream.nearDupCandidates]] —
-  *    composes after the gate on the same stream.
   */
 object CorpusStream {
 

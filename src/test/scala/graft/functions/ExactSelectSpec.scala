@@ -5,7 +5,8 @@ import graft.SparkSpec
 /** Pins [[ExactSelect.medianByGroup]] — value-domain refinement — against a
   * driver sorted-reference k-th order statistic on adversarial fixtures:
   * odd/even group sizes, duplicates, negative values, single-row groups,
-  * and a seeded randomized sweep. */
+  * and a seeded randomized sweep; and the edges of
+  * [[ExactSelect.valuesAtRanks]], the caller-seeded refinement walk. */
 class ExactSelectSpec extends SparkSpec {
   import spark.implicits._
 
@@ -169,5 +170,26 @@ class ExactSelectSpec extends SparkSpec {
     assert(p.contains("HashAggregate"), p)
     assert("partial_count".r.findAllIn(p).nonEmpty,
       s"map-side combine must be present:\n$p")
+  }
+
+  test("valuesAtRanks edges: duplicates, boundary ranks, interval-restricted probes, multi-group one walk") {
+    // duplicates straddling bucket boundaries; explicit intervals that
+    // EXCLUDE part of the group's values (the drill's normal case)
+    val df = Seq(
+      ("a", 5L), ("a", 5L), ("a", 5L), ("a", 7L), ("a", 1000000L),
+      ("a", 1000000L), ("b", -20L), ("b", -20L), ("b", 0L), ("b", 3L)
+    ).toDF("g", "v")
+    val got = ExactSelect.valuesAtRanks(df, "g", "v", Seq(
+      ("a", 0, 0L, 100L, 1L),          // k=1 in [0,100] -> 5
+      ("a", 1, 0L, 100L, 4L),          // k=4 in [0,100] -> 7 (dups before)
+      ("a", 2, 101L, 2000000L, 2L),    // k=2 in upper interval -> 1000000
+      ("b", 0, -100L, 100L, 2L),       // negative lo: k=2 -> -20 (dup)
+      ("b", 1, -100L, 100L, 4L)))      // k=n -> 3
+    assert(got == Map(("a", 0) -> 5L, ("a", 1) -> 7L,
+      ("a", 2) -> 1000000L, ("b", 0) -> -20L, ("b", 1) -> 3L), s"$got")
+    // a rank past the interval's population fails loudly, not silently
+    intercept[IllegalArgumentException] {
+      ExactSelect.valuesAtRanks(df, "g", "v", Seq(("a", 0, 0L, 10L, 5L)))
+    }
   }
 }

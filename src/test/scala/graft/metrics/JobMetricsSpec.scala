@@ -1,7 +1,5 @@
 package graft.metrics
 
-import scala.jdk.CollectionConverters._
-
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
@@ -56,19 +54,12 @@ class JobMetricsSpec extends SparkSpec {
   test("main code reads Spark's job events only through graft.metrics") {
     // a hand-rolled listener re-states the bus-draining rule JobMetrics.flush
     // holds once (three earlier copies waited on the bus with a sleep)
-    val root = java.nio.file.Paths.get("src/main")
-    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${root.toAbsolutePath}")
     val listener =
       """(extends|with|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener(Interface)?\b""".r
-    val stream = java.nio.file.Files.walk(root)
-    val offenders =
-      try stream.iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p))
-        .filterNot(_.toString.contains("graft/metrics/"))
-        .filter(p => listener.findFirstIn(new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)).nonEmpty)
-        .map(_.toString).toList
-      finally stream.close()
+    val offenders = graft.MainSources.files
+      .filterNot(_._1.toString.contains("graft/metrics/"))
+      .filter { case (_, text) => listener.findFirstIn(text).nonEmpty }
+      .map(_._1.toString)
     assert(offenders.isEmpty, s"SparkListener outside graft/metrics: $offenders")
   }
 }

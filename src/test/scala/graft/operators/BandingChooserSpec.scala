@@ -2,10 +2,10 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** Round-15 semantics pins: the q238 LSH banding chooser against an exact
-  * BigInt reference of the S-curve algebra, on constructed histograms that
-  * force different winners. */
-class R15QuerySemanticsSpec extends SparkSpec {
+/** [[DedupQueries.bandingChooser]], the q238 LSH banding chooser, against
+  * an exact BigInt reference of the S-curve algebra, on constructed
+  * histograms that force different winners. */
+class BandingChooserSpec extends SparkSpec {
   import spark.implicits._
 
   /** (1000 · (10³² − (100^r − m^r)^b)) div 10³² — the sCurvePmFragment

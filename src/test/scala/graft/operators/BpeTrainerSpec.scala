@@ -1,13 +1,14 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Pins [[BpeTrainer]] against an independent in-memory reference BPE
   * implementation (the textbook algorithm: count adjacent pairs over the
   * word-frequency table, merge the most frequent left-to-right
   * non-overlapping, repeat), on the classic low/lower/newest/widest
-  * corpus. Ties break (count DESC, left ASC, right ASC) in both. */
+  * corpus. Ties break (count DESC, left ASC, right ASC) in both. q198's
+  * pooled fertility agrees with q100's per-doc encode. */
 class BpeTrainerSpec extends SparkSpec {
   import spark.implicits._
 
@@ -197,5 +198,27 @@ class BpeTrainerSpec extends SparkSpec {
     val a = BpeTrainer.train(docs, 8).merges
     val b = BpeTrainer.train(docs, 8).merges
     assert(a == b)
+  }
+
+  test("q198: pooled fertility is consistent with q100's per-doc encode") {
+    val rep = SparkEntry.queries("q198_tokenizer_fertility")(spark, sfDir).collect()
+    assert(rep.nonEmpty)
+    rep.foreach { r =>
+      val words = r.getAs[Long]("sum_words")
+      val pieces = r.getAs[Long]("sum_pieces")
+      val chars = r.getAs[Long]("sum_chars")
+      // merges only ever SHRINK the char-split, never below 1 piece/word
+      assert(pieces >= words, s"${r.getAs[String]("lang")}: fertility >= 1")
+      assert(chars >= pieces)
+      assert(r.getAs[Double]("fertility") ==
+        pieces.toDouble / words)
+      assert(r.getAs[Double]("chars_per_piece") ==
+        chars.toDouble / pieces)
+    }
+    // total pieces agree with the q100 per-doc encode
+    val totalPieces = rep.map(_.getAs[Long]("sum_pieces")).sum
+    val q100Total = SparkEntry.queries("q100_bpe_encode")(spark, sfDir)
+      .agg(sum(col("n_bpe"))).collect().head.getLong(0)
+    assert(totalPieces == q100Total)
   }
 }

@@ -1,11 +1,12 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.sql.functions.{col, md5, sum}
+import org.apache.spark.sql.functions.{array_distinct, col, lower, md5, size, split, sum}
 
 /** Pins the semantics of the corpus-hygiene queries (q71–q73) on
   * constructed fixtures: exact repetition fractions, span island merging
-  * vs splitting, and each pipeline stage's drop reason.
+  * vs splitting, and each pipeline stage's drop reason. The corpus audits
+  * q195–q197 and q201 are recounted on the driver over the test tables.
   */
 class CorpusQueriesSpec extends SparkSpec {
   import spark.implicits._
@@ -601,6 +602,106 @@ class CorpusQueriesSpec extends SparkSpec {
     lim.foreach { r =>
       // the binding source is (within floor slack) fully consumed
       assert(r.getAs[Long]("alloc_tokens") >= r.getAs[Long]("avail_tokens") - 1L)
+    }
+  }
+
+  test("q195: defect branches fire exactly on their residues") {
+    val rows = SparkEntry.queries("q195_preference_pair_audit")(spark, sfDir).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val id = r.getAs[Long]("doc_id")
+      val nc = r.getAs[Long]("n_chosen")
+      val nr = r.getAs[Long]("n_rejected")
+      val tie = r.getAs[Boolean]("is_tie")
+      val stutter = r.getAs[Boolean]("has_stutter")
+      if (id % 9 == 0) {
+        assert(tie, s"doc $id: the mod-9 branch is a tie")
+        assert(nr == nc && r.getAs[Long]("len_gap") == 0)
+      } else if (id % 5 == 0) {
+        // truncated-to-third rejected: strictly shorter than chosen
+        assert(nr == math.max(nc / 3, 1L), s"doc $id truncation length")
+        assert(!tie)
+      } else {
+        assert(stutter, s"doc $id: the stutter branch duplicates token 1")
+        assert(nr == nc + 2, s"doc $id: stutter adds exactly 2 tokens")
+        assert(!tie)
+      }
+      assert(r.getAs[Boolean]("keep") == (!tie && !stutter))
+    }
+    // chosen always has >= 6 tokens under the n >= 8 gate
+    assert(rows.forall(_.getAs[Long]("n_chosen") >= 6))
+  }
+
+  test("q196: kappa matches a driver-side brute-force recount") {
+    val row = SparkEntry.queries("q196_annotator_agreement")(spark, sfDir).collect().head
+    val docs = graft.Tables.documents(spark, sfDir)
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        (size(array_distinct(split(lower(col("text")), " "))) * 2 >=
+          size(split(lower(col("text")), " "))).as("a"))
+      .collect()
+      .map(r => (r.getLong(0), r.getBoolean(1)))
+    val labeled = docs.map { case (id, a) => (a, a != (id % 7 == 0)) }
+    val n = labeled.length.toLong
+    val agree = labeled.count { case (a, b) => a == b }.toLong
+    val aPos = labeled.count(_._1).toLong
+    val bPos = labeled.count(_._2).toLong
+    assert(row.getAs[Long]("n") == n)
+    assert(row.getAs[Long]("n_agree") == agree)
+    assert(row.getAs[Long]("a_pos") == aPos)
+    assert(row.getAs[Long]("b_pos") == bPos)
+    // disagreements are exactly the flipped residue rows
+    assert(n - agree == docs.count { case (id, _) => id % 7 == 0 })
+    val peN2 = aPos * bPos + (n - aPos) * (n - bPos)
+    val kappa = (n * agree - peN2).toDouble / (n * n - peN2)
+    assert(row.getAs[Double]("kappa") == kappa)
+    assert(kappa > -1.0 - 1e-12 && kappa < 1.0 + 1e-12)
+  }
+
+  test("q197: TVD accounting — terms sum, totals match the snapshots") {
+    val rows = SparkEntry.queries("q197_corpus_drift_tvd")(spark, sfDir).collect()
+    assert(rows.nonEmpty)
+    val crossSum = rows.map(_.getAs[Long]("cross_abs")).sum
+    rows.foreach { r =>
+      assert(r.getAs[Long]("tvd_num") == crossSum)
+      assert(r.getAs[Long]("tvd_den") > 0)
+      assert(r.getAs[Boolean]("drifted") ==
+        (r.getAs[Long]("tvd_num") * 10 >= r.getAs[Long]("tvd_den")))
+    }
+    val totOld = rows.map(_.getAs[Long]("n_old")).sum
+    val totNew = rows.map(_.getAs[Long]("n_new")).sum
+    val docs = graft.Tables.documents(spark, sfDir)
+      .filter(col("text").isNotNull)
+    assert(totOld == docs.filter(col("doc_id") % 7 =!= 1).count())
+    assert(totNew == docs.filter(col("doc_id") % 11 =!= 3).count())
+    // TVD = tvd_num / tvd_den lands in [0, 1]
+    assert(crossSum <= rows.head.getAs[Long]("tvd_den"))
+  }
+
+  test("q201: every cumulative row equals a from-scratch recompute at that wave") {
+    val rows = SparkEntry.queries("q201_card_incremental")(spark, sfDir).collect()
+    assert(rows.nonEmpty)
+    // the incremental claim IS this equality: running sums of per-wave
+    // partials (unique counted by min-wave ownership) ≡ recomputing the
+    // whole card over waves ≤ N
+    val base = graft.Tables.documents(spark, sfDir)
+      .filter(col("text").isNotNull)
+      .select((col("doc_id") / 100).cast("long").as("wave"),
+        md5(col("text").cast("binary")).as("fp"),
+        size(split(lower(col("text")), " ")).cast("long").as("n_tok"))
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    rows.foreach { r =>
+      val w = r.getAs[Long]("wave")
+      val upTo = base.filter(_._1 <= w)
+      assert(r.getAs[Long]("cum_docs") == upTo.length.toLong)
+      assert(r.getAs[Long]("cum_tokens") == upTo.map(_._3).sum)
+      assert(r.getAs[Long]("cum_unique") ==
+        upTo.map(_._2).distinct.length.toLong)
+      assert(r.getAs[Long]("cum_dup_docs") ==
+        r.getAs[Long]("cum_docs") - r.getAs[Long]("cum_unique"))
+      assert(r.getAs[Long]("dup_permille") ==
+        r.getAs[Long]("cum_dup_docs") * 1000 / r.getAs[Long]("cum_docs"))
     }
   }
 }

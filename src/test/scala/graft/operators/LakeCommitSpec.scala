@@ -97,18 +97,11 @@ class LakeCommitSpec extends SparkSpec {
   test("main code runs driver thread pools only through LakeCommit") {
     // a hand-rolled pool re-states the wait-before-rethrow policy runAll
     // holds once
-    val root = java.nio.file.Paths.get("src/main")
-    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${root.toAbsolutePath}")
     val pool = """\bExecutors\b""".r
-    val stream = java.nio.file.Files.walk(root)
-    val offenders =
-      try stream.iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p))
-        .filterNot(_.getFileName.toString == "LakeCommit.scala")
-        .filter(p => pool.findFirstIn(new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)).nonEmpty)
-        .map(_.toString).toList
-      finally stream.close()
+    val offenders = graft.MainSources.files
+      .filterNot(_._1.getFileName.toString == "LakeCommit.scala")
+      .filter { case (_, text) => pool.findFirstIn(text).nonEmpty }
+      .map(_._1.toString)
     assert(offenders.isEmpty, s"Executors outside LakeCommit: $offenders")
   }
 }

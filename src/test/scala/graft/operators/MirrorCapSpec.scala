@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.{col, md5}
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.concurrent.TrieMap
 
@@ -10,7 +11,8 @@ import scala.collection.concurrent.TrieMap
   * `capSources` sources is boilerplate, not mirror evidence — it is dropped
   * from the pairing universe BEFORE the pair join (at a 10k-source crawl
   * one universal hash would otherwise be a ~50M-pair hot key), and the drop
-  * is surfaced through the `observe` counter, never silent.
+  * is surfaced through the `observe` counter, never silent. On the test
+  * tables q202's pair grid recounts from the raw source sets.
   */
 class MirrorCapSpec extends SparkSpec {
   import spark.implicits._
@@ -103,5 +105,30 @@ class MirrorCapSpec extends SparkSpec {
     assert(got("s2") == (("s0", "s0", 3L, 4L, false)), got("s2"))
     // the singleton keeps itself
     assert(got("s3") == (("s3", "s3", 1L, 1L, true)), got("s3"))
+  }
+
+  test("q202: a complete pair grid whose counts recount from the raw sets") {
+    val rows = SparkEntry.queries("q202_source_mirror")(spark, sfDir).collect()
+    val sets = graft.Tables.documents(spark, sfDir)
+      .filter(col("text").isNotNull)
+      .select(col("source"), md5(col("text").cast("binary")).as("fp"))
+      .distinct().collect()
+      .map(r => (r.getString(0), r.getString(1)))
+      .groupBy(_._1).map { case (s, g) => s -> g.map(_._2).toSet }
+    val sources = sets.keys.toSeq.sorted
+    // the grid is exactly C(|sources|, 2), each unordered pair once
+    assert(rows.length == sources.length * (sources.length - 1) / 2)
+    rows.foreach { r =>
+      val (a, b) = (r.getAs[String]("src_a"), r.getAs[String]("src_b"))
+      assert(a < b)
+      val inter = (sets(a) & sets(b)).size.toLong
+      assert(r.getAs[Long]("n_shared") == inter, s"($a,$b) intersection")
+      assert(r.getAs[Long]("n_a") == sets(a).size.toLong)
+      assert(r.getAs[Long]("n_b") == sets(b).size.toLong)
+      val union = sets(a).size + sets(b).size - inter
+      assert(r.getAs[Long]("jac_permille") == inter * 1000 / union)
+      assert(r.getAs[Boolean]("is_mirror") ==
+        (inter * 2 >= math.min(sets(a).size, sets(b).size)))
+    }
   }
 }

@@ -1,18 +1,20 @@
 package graft.operators
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import graft.functions.ExactSelect
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Round-19 semantic pins: q276 (bucketed wide-domain percentile IVM)
-  * against the flat-histogram q273 — both on the declared fixture and on
-  * a synthetic ~100k-distinct-value domain where the bucketed state is
-  * MEASURED at a small fraction of the flat histogram's rows — and the
-  * q264 probe-pruning claim turned into a metric pin on a custkey-sorted
-  * lake (VERDICT r18 item 7). */
-class R19QuerySemanticsSpec extends SparkSpec {
+/** The bucketed percentile-IVM rungs checked on both paths. q276
+  * (2¹³-wide maintained buckets + drill-down) equals the flat-histogram
+  * q273 on the declared fixture, and on a synthetic ~100k-distinct-value
+  * domain its bucket state is measured at a small fraction of the flat
+  * histogram's rows. q281 (coarse 2⁴⁰ buckets + the 256-ary in-bucket
+  * refinement of [[graft.functions.ExactSelect.valuesAtRanks]]) equals a
+  * row_number drill over the same surviving set, and on a clustered
+  * 2⁵⁰-wide domain its bucket state is a small fraction of per-value
+  * state while the refinement stays exact. */
+class PercentileIvmSpec extends SparkSpec {
   import spark.implicits._
 
   test("q276 bucketed drill-down ≡ q273 flat histogram on the declared fixture") {
@@ -124,81 +126,95 @@ class R19QuerySemanticsSpec extends SparkSpec {
       s"bucketed state $bRows not ≪ flat $flatRows — the wide-domain claim fails")
   }
 
-  test("q276 drill-down on a value-clustered lake: the literal bucket-range disjunction prunes row groups (metric pin)") {
-    val dir = tmpDir("drillprune")
-    val n = 200000L
-    // a value-range-sorted lake storing the cents column (the maintained
-    // corpus the drill-down reads at scale), 16 files
-    spark.range(n).select(
-        concat(lit("S"), (col("id") % 4).cast("string")).as("seg"),
-        (col("id") * 53L % 10000000L).as("bal_cents"))
-      .repartitionByRange(16, col("bal_cents"))
-      .sortWithinPartitions("bal_cents")
-      .write.mode("overwrite").parquet(dir)
-    val lake = spark.read.parquet(dir)
-    // two target buckets (the p50/p90 shape): literal value ranges,
-    // exactly the q276 drill predicate form
-    val buckets = Seq(5000000L >> 13, 9000000L >> 13)
-    val pred = buckets
-      .map(b => col("bal_cents").between(b * 8192L, b * 8192L + 8191L))
-      .reduce(_ || _)
-    val drill = lake.filter(pred)
-    drill.collect()
-    val scanned = drill.queryExecution.executedPlan.collectLeaves()
-      .collectFirst { case f: FileSourceScanExec =>
-        f.metrics("numOutputRows").value }.get
-    // the two buckets live in 2 of the 16 range-sorted files (~12.5k
-    // rows each, file sizes vary with range partitioning) — assert a
-    // 4-file bound so the pin is about PRUNING, not file-boundary luck
-    info(s"drill scan read $scanned of $n lake rows for ${buckets.size} target buckets")
-    assert(scanned < n / 4,
-      s"drill scanned $scanned of $n — the range disjunction is not pruning the value-sorted lake")
-    // and the pruned read is exactly the bucket membership
-    val expect = (0L until n).map(i => i * 53L % 10000000L)
-      .count(c => buckets.contains(c >> 13)).toLong
-    assert(drill.count() == expect)
+  test("q281 declared result ≡ direct row_number drill over the surviving set (both paths, declared fixture)") {
+    // path A: the declared maintained-bucket + refinement query
+    val declared = SparkEntry.queries("q281_ivm_wide_percentile")(
+        spark, sfDir)
+      .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    // path B: the one-level q276-shape drill — exact order statistics
+    // via a full rank pass over the SAME surviving set (affordable here,
+    // unaffordable at a 2⁴⁰-wide bucket's population — which is the
+    // point of path A)
+    val vExpr = (col("l_orderkey") % 4194304L) * 1099511627776L +
+      (col("l_partkey") % 1048576L) * 1048576L +
+      (col("l_suppkey") % 1048576L)
+    val surviving = graft.Tables.lineitem(spark, sfDir)
+      .filter(col("l_orderkey") % 4 === 0 || col("l_suppkey") % 10 =!= 3)
+      .select(col("l_returnflag").as("flag"), vExpr.as("v"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("flag").orderBy("v")
+    val direct = surviving
+      .withColumn("rn", row_number().over(w))
+      .withColumn("n", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("flag")))
+      .groupBy("flag")
+      .agg(max(col("n")).as("n_rows"),
+        max(when(col("rn") === expr("(n + 1) div 2"), col("v")))
+          .as("p50_v"),
+        max(when(col("rn") === expr("(9 * n + 9) div 10"), col("v")))
+          .as("p90_v"))
+      .as[(String, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(declared == direct,
+      s"refine-drill ≠ row_number drill:\n refine $declared\n direct $direct")
   }
 
-  test("q264 probe on a custkey-sorted lake: pushed cohort bounds prune the fact scan (metric pin)") {
-    val dir = tmpDir("ivmprobe")
-    val nC = 20000L
-    val nO = 200000L
-    // a custkey-range-sorted orders lake, 16 files (the ScaleBench ivm
-    // layout); random cents so dictionary/RLE can't hide scan volume
-    spark.range(nO).select(
-        pmod(xxhash64(col("id")), lit(nC)).as("c_custkey"),
-        (pmod(xxhash64(col("id"), lit(7L)), lit(90000L)) + 100L)
-          .as("cents"))
-      .repartitionByRange(16, col("c_custkey"))
-      .sortWithinPartitions("c_custkey")
-      .write.mode("overwrite").parquet(dir)
-    val lake = spark.read.parquet(dir)
-    // the touched cohort: top 1% of the keyspace, bounds PUSHED into the
-    // scan (the q264 scaladoc's layout lever)
-    val lo = nC - nC / 100
-    val dC = spark.range(nC).filter(col("id") >= lo)
-      .select(col("id").as("c_custkey"), lit("SEGX").as("seg"),
-        lit(1L).as("sgn"))
-    // the scan-side measurement (the BloomLakeSpec method — a bare
-    // filtered scan so the metric leaf is reachable; the probe's join
-    // adds AQE stages around the SAME scan + predicate)
-    val scanDf = lake.filter(col("c_custkey") >= lo)
-    scanDf.collect()
-    val scanned = scanDf.queryExecution.executedPlan.collectLeaves()
-      .collectFirst { case f: FileSourceScanExec =>
-        f.metrics("numOutputRows").value }.get
-    info(s"probe scan read $scanned of $nO lake rows")
-    assert(scanned < nO / 8,
-      s"probe scanned $scanned of $nO — cohort bounds are not pruning the sorted lake")
-    // correctness of the pruned probe: equals the unpruned join
-    val probe = lake.filter(col("c_custkey") >= lo)
-      .join(dC, Seq("c_custkey"))
-      .groupBy("seg")
-      .agg(sum(col("sgn") * col("cents")).as("ds"))
-    val full = lake.join(dC, Seq("c_custkey"))
-      .groupBy("seg").agg(sum(col("sgn") * col("cents")).as("ds"))
-      .as[(String, Long)].collect().toMap
-    val pruned = probe.as[(String, Long)].collect().toMap
-    assert(pruned == full, "pruned probe ≠ full join")
+  test("synthetic clustered 2^50-wide domain: coarse-bucket state ≪ per-value state, locate + refinement stays exact") {
+    // 24k rows in 3 groups, values CLUSTERED around 50 wide-apart
+    // centers (the realistic wide-domain shape: ids/timestamps cluster;
+    // a uniform-sparse domain has bucket count ≈ row count and nothing
+    // helps) — per-value state is ~rows-sized, coarse 2^40 buckets are
+    // ~centers-sized
+    val n = 24000L
+    val rows = spark.range(n).select(
+      (col("id") % 3).cast("string").as("g"),
+      ((col("id") % 50L) * 35184372088832L +
+        (col("id") * 997L) % 10000000L).as("v"))
+      .persist()
+    try {
+      val distinctValues = rows.select("g", "v").distinct.count()
+      val bucketState = rows
+        .groupBy(col("g"), shiftright(col("v"), 40).as("b"))
+        .agg(count(lit(1)).as("cnt"))
+        .persist()
+      try {
+      val bucketRows = bucketState.count()
+      info(s"[wide-ivm] per-value state $distinctValues rows, " +
+        s"coarse-bucket state $bucketRows rows")
+      assert(bucketRows * 20 < distinctValues,
+        s"bucket state $bucketRows not ≪ per-value $distinctValues")
+      // locate each group's p50/p90 bucket + residual rank from the
+      // MAINTAINED counts (driver-sized: groups × buckets ≤ 150 rows)
+      val hist = bucketState.collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        .groupBy(_._1)
+      val bw = 1099511627776L
+      val probes = hist.toSeq.flatMap { case (g, bs) =>
+        val sorted = bs.sortBy(_._2)
+        val total = sorted.map(_._3).sum
+        Seq(0 -> ((total + 1) / 2), 1 -> ((9 * total + 9) / 10)).map {
+          case (pid, rank) =>
+            var rem = rank
+            val it = sorted.iterator
+            var chosen: (String, Long, Long) = null
+            while (chosen == null && it.hasNext) {
+              val e = it.next()
+              if (e._3 >= rem) chosen = e else rem -= e._3
+            }
+            (g: Any, pid, chosen._2 * bw, chosen._2 * bw + (bw - 1L), rem)
+        }
+      }
+      val resolved = ExactSelect.valuesAtRanks(rows, "g", "v", probes)
+      // truth: driver-side sorted order statistics (n is small HERE)
+      val byG = rows.as[(String, Long)].collect().groupBy(_._1)
+        .map { case (g, vs) => g -> vs.map(_._2).sorted }
+      byG.foreach { case (g, vs) =>
+        val nn = vs.length.toLong
+        assert(resolved((g, 0)) == vs(((nn + 1) / 2 - 1).toInt),
+          s"group $g p50")
+        assert(resolved((g, 1)) == vs(((9 * nn + 9) / 10 - 1).toInt),
+          s"group $g p90")
+      }
+      } finally bucketState.unpersist()
+    } finally rows.unpersist()
   }
 }

@@ -5,8 +5,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import scala.jdk.CollectionConverters._
-
 /** The lifetime rule of [[RunScope]]: a cache belongs to the composition
   * that persisted it, the first action over that composition's result (or
   * over a frame derived from it) releases it, and compose-time actions
@@ -159,19 +157,11 @@ class RunScopeSpec extends SparkSpec {
   test("main code registers query-execution listeners only in RunScope") {
     // one listener decides every cache's lifetime; a second one re-states
     // (and can contradict) that rule
-    val root = java.nio.file.Paths.get("src/main")
-    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${root.toAbsolutePath}")
-    val stream = java.nio.file.Files.walk(root)
-    val hits =
-      try stream.iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p))
-        .filter { p =>
-          val text = new String(java.nio.file.Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8)
-          text.contains("QueryExecutionListener") || text.contains("listenerManager.register")
-        }
-        .map(_.getFileName.toString).toList
-      finally stream.close()
+    val hits = graft.MainSources.files
+      .filter { case (_, text) =>
+        text.contains("QueryExecutionListener") || text.contains("listenerManager.register")
+      }
+      .map(_._1.getFileName.toString).toList
     assert(hits == List("RunScope.scala"), s"query-execution listeners outside RunScope: $hits")
   }
 }

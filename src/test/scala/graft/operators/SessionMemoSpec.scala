@@ -6,7 +6,6 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import scala.jdk.CollectionConverters._
 
 /** The lifetime contract of [[SessionMemo]]: one build per
   * (handle, session, dir), nothing stored by a failed build, and locks no
@@ -77,17 +76,10 @@ class SessionMemoSpec extends SparkSpec {
   test("main code memoizes per session only through SessionMemo") {
     // a hand-rolled WeakHashMap memo re-states the lifetime rule SessionMemo
     // holds once (and a value that reaches its key silently makes it strong)
-    val root = java.nio.file.Paths.get("src/main")
-    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${root.toAbsolutePath}")
-    val stream = java.nio.file.Files.walk(root)
-    val offenders =
-      try stream.iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p))
-        .filterNot(_.getFileName.toString == "SessionMemo.scala")
-        .filter(p => new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8).contains("WeakHashMap"))
-        .map(_.toString).toList
-      finally stream.close()
+    val offenders = graft.MainSources.files
+      .filterNot(_._1.getFileName.toString == "SessionMemo.scala")
+      .filter { case (_, text) => text.contains("WeakHashMap") }
+      .map(_._1.toString)
     assert(offenders.isEmpty, s"WeakHashMap outside SessionMemo: $offenders")
   }
 }
